@@ -3,6 +3,7 @@ invariant, docID determinism, tokenizer-twin identity."""
 
 import hashlib
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -163,7 +164,9 @@ def test_blocks_shard_aligned_and_search_consistent(spark, tmp_path):
 
 def test_pfor_codec_end_to_end(spark, tmp_path):
     """BuildConfig(codec=PFOR) round-trips through build + search with
-    results identical to a varint-coded index; index_stats records codec=3."""
+    results identical to a varint-coded index; index_stats records codec=3.
+    Every codec's postings table is byte-identical to the per-group
+    reference encoding of its tfs table."""
     import numpy as np
 
     from zsolr import codec as zcodec
@@ -181,18 +184,158 @@ def test_pfor_codec_end_to_end(spark, tmp_path):
               " content string")
     results = {}
     for name, cdc in (("varint", zcodec.CODEC_VARINT),
+                      ("bitpack", zcodec.CODEC_BITPACK),
                       ("pfor", zcodec.CODEC_PFOR)):
         cat = ManifestParquetCatalog(str(tmp_path / f"idx-{name}"))
         IndexBuilder(cat, BuildConfig(n_buckets=4, codec=cdc)).build(
             spark, f"c-{name}", corpus_df=corpus)
-        if name == "pfor":
-            st = cat.read(spark, "index_stats").collect()[0]
-            assert int(st["codec"]) == zcodec.CODEC_PFOR
+        st = cat.read(spark, "index_stats").collect()[0]
+        assert int(st["codec"]) == cdc
+        groups = {}
+        for r in cat.read(spark, "tfs").collect():
+            groups.setdefault((r["term"], r["bucket"]), []).append(
+                (r["doc_id"], r["tf"], r["positions"]))
+        exp = sorted(
+            tuple(b.values()) for (term, bucket), plist in groups.items()
+            for b in _reference_blocks(term, bucket, plist, 128, cdc,
+                                       int(st["shard_width"])))
+        got = sorted(tuple(r) for r in cat.read(spark, "postings")
+                     .select(*_POSTINGS_COLS).collect())
+        assert got == exp, name
         s = Searcher(spark, cat)
         results[name] = {
             q: [(r["doc_id"], r["score"]) for r in s.search(q, k=10).collect()]
             for q in ("spark", "query AND join", '"alpha beta"')}
-    assert results["varint"] == results["pfor"]
+    assert results["varint"] == results["pfor"] == results["bitpack"]
+
+
+_POSTINGS_COLS = ("term", "bucket", "first_doc", "last_doc", "n_docs",
+                  "doc_gaps", "tfs", "positions", "block_max_tf")
+
+
+def _reference_blocks(term, bucket, postings, block_size, cdc,
+                      align_width=None):
+    """Per-group reference for the encode kernel: sort one (term, salt)
+    sub-list by docID, split it posting by posting (a new block at
+    ``block_size`` postings or a docID-shard change), and encode each
+    block on its own with ``codec.encode_u64``."""
+    from zsolr import codec
+
+    def enc(vals):
+        return codec.encode_u64(np.array(vals, dtype=np.uint64), cdc)
+
+    blocks, cur = [], []
+    for p in sorted(postings, key=lambda p: p[0]):
+        if cur and (len(cur) == block_size or (
+                align_width and p[0] // align_width
+                != cur[-1][0] // align_width)):
+            blocks.append(cur)
+            cur = []
+        cur.append(p)
+    if cur:
+        blocks.append(cur)
+    out = []
+    for blk in blocks:
+        ids = [p[0] for p in blk]
+        deltas = []
+        for _d, _tf, pos in blk:
+            deltas += [b - a for a, b in zip([0] + pos, pos)]
+        out.append(dict(zip(_POSTINGS_COLS, (
+            term, bucket, ids[0], ids[-1], len(blk),
+            enc([0] + [b - a for a, b in zip(ids, ids[1:])]),
+            enc([p[1] for p in blk]), enc(deltas),
+            max(p[1] for p in blk)))))
+    return out
+
+
+def _kernel_batches():
+    """Hand-built ``grouped_postings`` batches: single-posting groups,
+    groups longer than a block, groups crossing docID shards of width 10,
+    an empty-positions field term, and shuffled ``collect_list`` order."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(17)
+    struct = pa.struct([("doc_id", pa.int64()), ("tf", pa.int64()),
+                        ("positions", pa.list_(pa.int32()))])
+
+    def group(ids, empty_pos=False, shuffle=False):
+        ids = list(ids)
+        if shuffle:
+            rng.shuffle(ids)
+        out = []
+        for d in ids:
+            tf = int(rng.integers(1, 5))
+            pos = [] if empty_pos else sorted(
+                rng.choice(400, tf, replace=False).tolist())
+            out.append({"doc_id": int(d), "tf": tf, "positions": pos})
+        return out
+
+    batches = []
+    specs = [
+        [("solo", [7]), ("pair", [3, 4]), ("solo2", [55])],
+        [("long", range(0, 45, 2)), ("lang=en", range(5, 30),
+                                     "empty"), ("solo3", [12])],
+        [("shuf", range(1, 60, 3), "shuffle"), ("cross", [8, 9, 10, 11]),
+         ("shuf2", [40, 2, 19, 3], "shuffle")],
+    ]
+    for spec in specs:
+        terms, plists = [], []
+        for term, ids, *flag in spec:
+            terms.append(term)
+            plists.append(group(ids, empty_pos=flag == ["empty"],
+                                shuffle=flag == ["shuffle"]))
+        batches.append(pa.record_batch({
+            "term": pa.array(terms, pa.string()),
+            "postings": pa.array(plists, pa.list_(struct)),
+            "bucket": pa.array([len(t) % 4 for t in terms], pa.int32())}))
+    return batches
+
+
+def _run_kernel(batches, cdc, align_width, **kw):
+    import pyarrow as pa
+
+    from zsolr.build import BuildConfig, IndexBuilder
+
+    builder = IndexBuilder(None, BuildConfig(block_size=4, codec=cdc))
+    out = list(builder._encode_mapper(align_width, **kw)(iter(batches)))
+    return pa.Table.from_batches(out), len(out)
+
+
+@pytest.mark.parametrize("cdc", [1, 2, 3])
+@pytest.mark.parametrize("align_width", [None, 10])
+def test_encode_kernel_matches_per_group_reference(cdc, align_width):
+    """The batch encode kernel is byte-identical to encoding each
+    (term, salt) group, and each of its blocks, on its own."""
+    batches = _kernel_batches()
+    got, _ = _run_kernel(batches, cdc, align_width)
+    exp = [blk for b in batches
+           for term, bucket, plist in zip(
+               b.column("term").to_pylist(), b.column("bucket").to_pylist(),
+               b.column("postings").to_pylist())
+           for blk in _reference_blocks(
+               term, bucket,
+               [(p["doc_id"], p["tf"], p["positions"]) for p in plist],
+               4, cdc, align_width)]
+    assert got.to_pylist() == exp
+
+
+@pytest.mark.parametrize("cdc", [1, 3])
+def test_encode_kernel_pass_cap_keeps_output(cdc):
+    """Slicing batches into capped passes (per-task memory bound) changes
+    nothing but the number of output batches."""
+    from zsolr.build import _pass_bounds
+
+    batches = _kernel_batches()
+    full, n_full = _run_kernel(batches, cdc, 10)
+    tiny, n_tiny = _run_kernel(batches, cdc, 10, max_pass_postings=3)
+    assert tiny.equals(full)
+    assert n_full == len(batches) and n_tiny > n_full
+    # runs hold ≤ cap postings and ≤ cap positions unless one group alone
+    # exceeds it (group 1: 4 positions, group 3: 5 postings)
+    offs = np.array([0, 1, 2, 3, 8, 10, 11])
+    pos = np.array([0, 1, 5, 6, 7, 8, 9])
+    assert _pass_bounds(offs, pos, 3) == [
+        (0, 1), (1, 2), (2, 3), (3, 4), (4, 6)]
 
 
 def test_fingerprint_keys_resume_groups():

@@ -125,10 +125,10 @@ def test_codec_hypothesis_roundtrip():
 
 
 def test_pfor_blocked_encode_byte_identical():
-    """encode_u64_blocked(CODEC_PFOR) — the vectorized multi-block
-    encoder — must be byte-identical to per-block _pfor_encode across
+    """encode_u64_blocked — the vectorized multi-block encoder — must be
+    byte-identical to per-block encode_u64 (for PFOR: _pfor_encode) across
     distributions (uniform-wide, outlier-patched, all-zero, tiny) and
-    roundtrip exactly."""
+    roundtrip exactly; bitpack and varint take the same cases."""
     import numpy as np
 
     from zsolr import codec
@@ -143,13 +143,18 @@ def test_pfor_blocked_encode_byte_identical():
     cases.append(rng.integers(0, 3, size=5, dtype=np.uint64))
     for vals in cases:
         n = len(vals)
-        for bs in (1, 7, 128, 1000):
-            starts = np.arange(0, n, bs, dtype=np.int64)
-            blocked = codec.encode_u64_blocked(vals, starts,
-                                               codec.CODEC_PFOR)
-            bounds = list(starts) + [n]
-            for i in range(len(starts)):
-                seg = vals[bounds[i]:bounds[i + 1]]
-                assert blocked[i] == codec.encode_u64(seg,
-                                                      codec.CODEC_PFOR)
-                assert (codec.decode_u64(blocked[i]) == seg).all()
+        # fixed strides, plus empty blocks (leading, inner, trailing)
+        # inside a non-empty array — the empty-positions blocks of field
+        # terms and norms when many groups encode in one pass
+        for starts in [np.arange(0, n, bs, dtype=np.int64)
+                       for bs in (1, 7, 128, 1000)] + [
+                np.array(s, dtype=np.int64)
+                for s in ([0, 1, 1], [0, 0, 2], [0, 1, 1, n], [0, n])]:
+            for c in (codec.CODEC_PFOR, codec.CODEC_BITPACK,
+                      codec.CODEC_VARINT):
+                blocked = codec.encode_u64_blocked(vals, starts, c)
+                bounds = list(starts) + [n]
+                for i in range(len(starts)):
+                    seg = vals[bounds[i]:bounds[i + 1]]
+                    assert blocked[i] == codec.encode_u64(seg, c)
+                    assert (codec.decode_u64(blocked[i]) == seg).all()

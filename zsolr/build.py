@@ -418,16 +418,17 @@ class IndexBuilder:
         # the parallelism term keeps every (term, salt) group small enough
         # that no single encode task serializes a wave; the absolute
         # threshold caps per-task posting state at any scale.  Divisor
-        # par*2 (was par*8): the encode kernel's cost is per-GROUP
-        # overhead-bound (many small numpy calls), so 4× larger salt
-        # classes amortize it while per-task state stays ≤ n_docs/(2·par)
-        # postings — still a wave-balanced bound (measured: 61k → 15k
-        # groups, encode phase −40% at the bench scale).  The 64k
-        # absolute ceiling bounds the collect_list buffer per group
-        # (~a few MB of structs) independently of core count: at low
-        # parallelism n_docs/(2·par) otherwise grows into 10^5-posting
-        # groups whose aggregation buffers thrash the GC (measured at
-        # local[4]/2M files).
+        # par*2: larger salt classes mean fewer (term, salt) rows through
+        # the JVM pre-group and the Arrow boundary, while per-task state
+        # stays ≤ n_docs/(2·par) postings — still a wave-balanced bound.
+        # (The encode kernel itself runs whole-batch passes, so its cost
+        # no longer depends on the group count.)  Salt classes are
+        # block boundaries, so these parameters fix the postings bytes.
+        # The 64k absolute ceiling bounds the collect_list buffer per
+        # group (~a few MB of structs) independently of core count: at
+        # low parallelism n_docs/(2·par) otherwise grows into
+        # 10^5-posting groups whose aggregation buffers thrash the GC
+        # (measured at local[4]/2M files).
         par = spark.sparkContext.defaultParallelism
         adaptive = min(max(4 * cfg.block_size, n_docs // max(1, par * 2)),
                        65_536)
@@ -442,13 +443,20 @@ class IndexBuilder:
         plan = {t: -(-n_docs // salt_width) for t in hot}
         return plan, salt_width
 
-    def _encode_mapper(self, align_width: int | None = None):
+    def _encode_mapper(self, align_width: int | None = None,
+                       max_pass_postings: int = 1 << 20):
         """mapInArrow kernel over JVM-pre-grouped rows: one row per
         (term, salt) sub-list with a partition-sort-ordered
-        ``collect_list(struct)`` payload (ascending docIDs verified,
-        stable-argsort fallback).  Only ~|groups| rows cross the Arrow boundary (the per-row
-        ``ArrowWriter.sizeInBytes`` walk made per-posting rows cost ~13 µs
-        each — measured; grouping JVM-side removes it entirely).
+        ``collect_list(struct)`` payload.  Only ~|groups| rows cross the
+        Arrow boundary (the per-row ``ArrowWriter.sizeInBytes`` walk made
+        per-posting rows cost ~13 µs each — measured; grouping JVM-side
+        removes it entirely).
+
+        Each batch is encoded by :func:`codec.encode_segments` — a fixed
+        number of whole-array passes, no per-group numpy calls — sliced at
+        group boundaries so one pass sees at most ``max_pass_postings``
+        postings and as many positions (a larger single group gets a pass
+        of its own), which bounds per-task memory on any vocabulary.
 
         ``align_width``: docID shard width — block splits land on shard
         boundaries so no block ever spans one (1:1 query routing)."""
@@ -458,86 +466,43 @@ class IndexBuilder:
             import pyarrow as pa
 
             for batch in batches:
-                terms = batch.column("term").to_pylist()
-                if not terms:
+                if batch.num_rows == 0:
                     continue
-                buckets = batch.column("bucket").to_numpy(zero_copy_only=False)
                 la = batch.column("postings")
                 if isinstance(la, pa.ChunkedArray):
                     la = la.combine_chunks()
                 flat = la.flatten()
-                offs = np.asarray(la.offsets) - la.offsets[0].as_py()
+                offs = np.asarray(la.offsets, dtype=np.int64)
+                offs -= offs[0]
                 d_all = flat.field("doc_id").to_numpy(zero_copy_only=False)
                 t_all = flat.field("tf").to_numpy(zero_copy_only=False)
                 pos_la = flat.field("positions")
-                pos_flat_all = pos_la.flatten().to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                pos_offs_all = np.asarray(pos_la.offsets) \
-                    - pos_la.offsets[0].as_py()
-                o_term, o_bucket, o_first, o_last = [], [], [], []
-                o_n, o_gaps, o_tfs, o_pos, o_max = [], [], [], [], []
-                for i, term in enumerate(terms):
-                    s, e = int(offs[i]), int(offs[i + 1])
-                    d, t = d_all[s:e], t_all[s:e]
-                    p_off = pos_offs_all[s:e + 1] - pos_offs_all[s]
-                    p = pos_flat_all[pos_offs_all[s]:pos_offs_all[e]]
-                    if len(d) > 1 and not np.all(d[1:] > d[:-1]):
-                        # collect_list arrived unordered (an engine did
-                        # not preserve the partition sort) — restore the
-                        # docID order with a stable argsort, gathering
-                        # the variable-length position segments
-                        order = np.argsort(d, kind="stable")
-                        d, t = d[order], t[order]
-                        lens = np.diff(p_off)
-                        nl = lens[order]
-                        seg = np.repeat(p_off[:-1][order], nl)
-                        csum = np.concatenate(
-                            ([0], np.cumsum(nl)))[:-1]
-                        within = np.arange(nl.sum(), dtype=np.int64) \
-                            - np.repeat(csum, nl)
-                        p = p[seg + within]
-                        p_off = np.concatenate(([0], np.cumsum(nl)))
-                    bstarts = codec.block_starts(d, cfg_block, align_width) \
-                        if e > s else np.empty(0, dtype=np.int64)
-                    firsts, lasts, lens, gb, tb, mx = codec.encode_blocks(
-                        d, t, block_size=cfg_block, codec=cfg_codec,
-                        starts=bstarts if e > s else None)
-                    # positions: delta-encode within each doc, one varint
-                    # pass per group, split at block boundaries
-                    if len(p):
-                        deltas = np.empty(len(p), dtype=np.uint64)
-                        deltas[0] = p[0]
-                        np.subtract(p[1:], p[:-1], out=deltas[1:],
-                                    casting="unsafe")
-                        rs = p_off[:-1]
-                        rs = rs[rs < len(p)]
-                        deltas[rs] = p[rs]
-                    else:
-                        deltas = np.empty(0, dtype=np.uint64)
-                    blk_pos_starts = p_off[bstarts]
-                    pb = codec.encode_u64_blocked(deltas, blk_pos_starts,
-                                                  cfg_codec)
-                    nb = len(firsts)
-                    o_term.extend([term] * nb)
-                    o_bucket.extend([int(buckets[i])] * nb)
-                    o_first.extend(firsts)
-                    o_last.extend(lasts)
-                    o_n.extend(lens)
-                    o_gaps.extend(gb)
-                    o_tfs.extend(tb)
-                    o_pos.extend(pb)
-                    o_max.extend(mx)
-                yield pa.record_batch({
-                    "term": pa.array(o_term, pa.string()),
-                    "bucket": pa.array(o_bucket, pa.int32()),
-                    "first_doc": pa.array(o_first, pa.int64()),
-                    "last_doc": pa.array(o_last, pa.int64()),
-                    "n_docs": pa.array(o_n, pa.int32()),
-                    "doc_gaps": pa.array(o_gaps, pa.binary()),
-                    "tfs": pa.array(o_tfs, pa.binary()),
-                    "positions": pa.array(o_pos, pa.binary()),
-                    "block_max_tf": pa.array(o_max, pa.int32()),
-                })
+                p_all = pos_la.flatten().to_numpy(zero_copy_only=False)
+                p_offs = np.asarray(pos_la.offsets, dtype=np.int64)
+                p_offs -= p_offs[0]
+                for g0, g1 in _pass_bounds(offs, p_offs[offs],
+                                           max_pass_postings):
+                    s, e = offs[g0], offs[g1]
+                    b = codec.encode_segments(
+                        d_all[s:e], t_all[s:e], offs[g0:g1 + 1] - s,
+                        p_all[p_offs[s]:p_offs[e]],
+                        p_offs[s:e + 1] - p_offs[s],
+                        block_size=cfg_block, codec=cfg_codec,
+                        align_width=align_width)
+                    rows = pa.array(b.group + g0)
+                    yield pa.record_batch({
+                        "term": batch.column("term").take(rows)
+                        .cast(pa.string()),
+                        "bucket": batch.column("bucket").take(rows)
+                        .cast(pa.int32()),
+                        "first_doc": pa.array(b.first_doc, pa.int64()),
+                        "last_doc": pa.array(b.last_doc, pa.int64()),
+                        "n_docs": pa.array(b.n_docs, pa.int32()),
+                        "doc_gaps": pa.array(b.doc_gaps, pa.binary()),
+                        "tfs": pa.array(b.tfs, pa.binary()),
+                        "positions": pa.array(b.positions, pa.binary()),
+                        "block_max_tf": pa.array(b.block_max_tf, pa.int32()),
+                    })
 
         return encode_batches
 
@@ -685,6 +650,23 @@ class IndexBuilder:
         return result
 
 
+def _pass_bounds(offs: np.ndarray, pos_at: np.ndarray,
+                 cap: int) -> list[tuple[int, int]]:
+    """Greedy split of groups ``0..len(offs)-2`` into ``[g0, g1)`` runs
+    holding ≤ ``cap`` postings and ≤ ``cap`` positions each (a single
+    larger group forms its own run).  ``offs``/``pos_at``: posting and
+    position offsets at each group boundary.  Loops per run, not per
+    group."""
+    bounds, g0, n_groups = [], 0, len(offs) - 1
+    while g0 < n_groups:
+        g1 = min(np.searchsorted(offs, offs[g0] + cap, "right"),
+                 np.searchsorted(pos_at, pos_at[g0] + cap, "right")) - 1
+        g1 = max(int(g1), g0 + 1)
+        bounds.append((g0, g1))
+        g0 = g1
+    return bounds
+
+
 def grouped_postings(tf: DataFrame,
                      num_partitions: int | None = None) -> DataFrame:
     """JVM-side pre-grouping for the encode kernel: one row per
@@ -694,7 +676,7 @@ def grouped_postings(tf: DataFrame,
     comparator measured ~1.5× the codegen sort at bench scale);
     ``collect_list`` preserves the encounter order in practice, and the
     encode kernel VERIFIES per-group ascending docIDs and falls back to
-    a stable argsort if an engine ever reorders them — correctness never
+    one stable lexsort if an engine ever reorders them — correctness never
     rests on the preservation detail.  Keeps per-posting rows out of the
     Arrow boundary — see _encode_mapper."""
     spark = tf.sparkSession

@@ -5,14 +5,20 @@ posting lists (term -> delta-encoded docID gaps + term frequencies,
 varint/PForDelta-compressed)").
 
 Everything here is vectorized numpy — these functions run inside Arrow
-kernels (``applyInPandas``) on executors, so per-element Python loops are
-forbidden (BASELINE.json input_hint: "no per-row Python").
+kernels (the build's ``mapInArrow`` encode and the query kernels) on
+executors, so per-element Python loops are forbidden (BASELINE.json
+input_hint: "no per-row Python"), and so are per-group numpy calls: the
+build encodes a whole Arrow batch of posting lists in one
+:func:`encode_segments` call, and small lists make per-call overhead
+dominate.  Per-block Python work is limited to slicing output blobs.
 
 Blob wire format: 1 codec-id byte (0x01 varint / 0x02 bitpack) + payload.
 Bitpack payload: u8 width, u32le count, little-endian bit-packed values.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -217,141 +223,266 @@ def decode_u64(buf: bytes) -> np.ndarray:
     raise ValueError(f"unknown codec byte {codec}")
 
 
-def _pfor_encode_blocked(vals: np.ndarray, starts: np.ndarray) -> list[bytes]:
-    """Vectorized multi-block patched-PFor encode (round-2 verdict #9):
-    byte-identical to per-block :func:`_pfor_encode`, but every numpy pass
-    runs over the WHOLE array — per-block work is only slicing/joining.
+def _block_layout(n: int, starts: np.ndarray):
+    """Per-block lengths, per-value block id and per-value offset inside
+    its block, for ``n`` values split at ``starts`` (empty blocks allowed)."""
+    lens = np.diff(starts, append=np.int64(n))
+    block_id = np.repeat(np.arange(len(starts), dtype=np.int64), lens)
+    local_idx = np.arange(n, dtype=np.int64) - starts[block_id]
+    return lens, block_id, local_idx
 
-    Per-block widths replicate ``int(np.percentile(bl, 90))`` (linear
-    interpolation between the floor/ceil order statistics) from a
-    (blocks × 64) bitlen histogram; low bits scatter into one bit array
-    (block regions byte-aligned, so one global little-endian packbits
-    yields every block's packed stream); exception positions/highs ride
-    two whole-array varint passes split at block boundaries."""
-    vals = np.ascontiguousarray(vals, dtype=np.uint64)
-    starts = np.ascontiguousarray(starts, dtype=np.int64)
-    nb = len(starts)
+
+def _pack_blocks(vals: np.ndarray, block_id: np.ndarray,
+                 local_idx: np.ndarray, lens: np.ndarray, width: np.ndarray):
+    """Pack each block's values at its own bit width into one byte-aligned
+    little-endian bit arena, so one ``packbits`` yields every block's
+    packed stream.  One whole-array pass per bit plane (≤ 64).  Returns
+    (packed bytes, per-block byte offset, per-block byte count)."""
+    block_bytes = (lens * width + 7) // 8
+    byte_base = np.zeros(len(lens), dtype=np.int64)
+    byte_base[1:] = np.cumsum(block_bytes)[:-1]
+    w_per_val = width[block_id]
+    bit_base = byte_base[block_id] * 8 + local_idx * w_per_val
+    arena = np.zeros(int(block_bytes.sum()) * 8, dtype=np.uint8)
+    for k in range(int(width.max()) if len(width) else 0):
+        m = w_per_val > k
+        arena[bit_base[m] + k] = (vals[m] >> np.uint64(k)) & np.uint64(1)
+    return (np.packbits(arena, bitorder="little").tobytes(),
+            byte_base, block_bytes)
+
+
+def _byte_bounds(sizes: np.ndarray, counts: np.ndarray):
+    """[start, end) byte offsets of consecutive runs of ``counts`` values
+    in a stream whose values take ``sizes`` bytes each — as Python int
+    lists, ready for slicing."""
+    csum = np.zeros(len(sizes) + 1, dtype=np.int64)
+    np.cumsum(sizes, out=csum[1:])
+    vb = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=vb[1:])
+    b = csum[vb]
+    return b[:-1].tolist(), b[1:].tolist()
+
+
+def _block_headers(codec_id: int, width: np.ndarray, *u32_cols) -> list[bytes]:
+    """Per-block ``codec byte | u8 width | u32le …`` headers, built as one
+    array and sliced."""
+    nb = len(width)
+    hdr = np.empty((nb, 2 + 4 * len(u32_cols)), dtype=np.uint8)
+    hdr[:, 0] = codec_id
+    hdr[:, 1] = width
+    for j, col in enumerate(u32_cols):
+        hdr[:, 2 + 4 * j:6 + 4 * j] = np.ascontiguousarray(
+            col, dtype="<u4").view(np.uint8).reshape(nb, 4)
+    flat, w = hdr.tobytes(), hdr.shape[1]
+    return [flat[i:i + w] for i in range(0, nb * w, w)]
+
+
+def _bitpack_encode_blocked(vals: np.ndarray,
+                            starts: np.ndarray) -> list[bytes]:
+    """Multi-block bitpack encode, byte-identical to per-block
+    :func:`encode_u64` (width = max bit length, 0 for an empty block)."""
     n = len(vals)
+    lens, block_id, local_idx = _block_layout(n, starts)
+    width = np.zeros(len(starts), dtype=np.int64)
+    live = lens > 0
+    if n:
+        width[live] = np.maximum.reduceat(_bitlens(vals), starts[live])
+    packed, base, nbytes = _pack_blocks(vals, block_id, local_idx, lens,
+                                        width)
+    hdrs = _block_headers(CODEC_BITPACK, width, lens)
+    return [h + packed[b:b + k]
+            for h, b, k in zip(hdrs, base.tolist(), nbytes.tolist())]
+
+
+def _pfor_encode_blocked(vals: np.ndarray, starts: np.ndarray) -> list[bytes]:
+    """Vectorized multi-block patched-PFor encode: byte-identical to
+    per-block :func:`_pfor_encode` (an empty block gets the canonical
+    width-0 blob), but every numpy pass runs over the WHOLE array —
+    per-block work is only slicing/joining.
+
+    Per-block widths replicate the percentile interpolation between the
+    floor/ceil order statistics, read from one segmented sort of the
+    bit lengths (memory O(n), not O(blocks × 64)); low bits go through
+    :func:`_pack_blocks`; exception positions/highs ride two whole-array
+    varint passes split at block boundaries."""
+    n = len(vals)
+    nb = len(starts)
     if n == 0:
         return [bytes([CODEC_PFOR, 0]) + np.uint32(0).tobytes() * 3] * nb
-    ends = np.concatenate([starts[1:], np.int64([n])])
-    lens = ends - starts
+    lens, block_id, local_idx = _block_layout(n, starts)
+    live = lens > 0
     bl = _bitlens(vals)                     # 1..64 per value
-    block_id = np.repeat(np.arange(nb, dtype=np.int64), lens)
+    # bit lengths sorted within each block (block_id is the major key, so
+    # blocks keep their places) → order statistics by direct indexing
+    sbl = np.sort(block_id * 128 + bl, kind="stable") & 127
 
-    # per-block bitlen histogram → the two order statistics percentile
-    # interpolates between (rank p = 0.9·(n_b−1))
-    hist = np.zeros((nb, 65), dtype=np.int64)
-    np.add.at(hist, (block_id, bl), 1)
-    cum = np.cumsum(hist, axis=1)
+    def stat(rank):
+        return sbl[np.where(live, starts + rank, 0)]
+
     p = 0.9 * (lens - 1)
     lo_rank = np.floor(p).astype(np.int64)
     hi_rank = np.ceil(p).astype(np.int64)
-    lo_stat = np.argmax(cum > lo_rank[:, None], axis=1)
-    hi_stat = np.argmax(cum > hi_rank[:, None], axis=1)
+    lo_stat, hi_stat = stat(lo_rank), stat(hi_rank)
     frac = p - lo_rank
-    width = np.maximum(
-        1, (lo_stat + frac * (hi_stat - lo_stat)).astype(np.int64))
+    width = np.where(live, np.maximum(
+        1, (lo_stat + frac * (hi_stat - lo_stat)).astype(np.int64)), 0)
 
     # degenerate blocks (> n/2 exceptions): full width, no patching
     exc_mask = bl > width[block_id]
-    n_exc = np.zeros(nb, dtype=np.int64)
-    np.add.at(n_exc, block_id[exc_mask], 1)
+    n_exc = np.bincount(block_id[exc_mask], minlength=nb)
     degen = n_exc > lens // 2
     if degen.any():
-        maxbl = np.maximum.reduceat(bl, starts)
-        width = np.where(degen, maxbl, width)
+        width = np.where(degen, stat(lens - 1), width)
         exc_mask = bl > width[block_id]
-        n_exc = np.zeros(nb, dtype=np.int64)
-        np.add.at(n_exc, block_id[exc_mask], 1)
+        n_exc = np.bincount(block_id[exc_mask], minlength=nb)
 
-    # pack every block's low bits into one byte-aligned bit arena
-    w_per_val = width[block_id]
-    block_bits = lens * width
-    block_bytes = (block_bits + 7) // 8
-    byte_base = np.zeros(nb, dtype=np.int64)
-    byte_base[1:] = np.cumsum(block_bytes)[:-1]
-    local_idx = np.arange(n, dtype=np.int64) - starts[block_id]
-    val_bit_base = byte_base[block_id] * 8 + local_idx * w_per_val
-    wmax = int(width.max())
-    shifts = np.arange(wmax, dtype=np.uint64)
-    bitvals = ((vals[:, None] >> shifts[None, :]) & np.uint64(1)) \
-        .astype(np.uint8)
-    bitpos = val_bit_base[:, None] + np.arange(wmax, dtype=np.int64)[None, :]
-    in_width = np.arange(wmax, dtype=np.int64)[None, :] < w_per_val[:, None]
-    arena = np.zeros(int(np.sum(block_bytes)) * 8, dtype=np.uint8)
-    arena[bitpos[in_width]] = bitvals[in_width]
-    packed_all = np.packbits(arena, bitorder="little").tobytes()
+    packed, base, nbytes = _pack_blocks(vals, block_id, local_idx, lens,
+                                        width)
 
     # exception streams: whole-array varint passes, split per block
     exc_idx = np.nonzero(exc_mask)[0]
-    exc_block = block_id[exc_idx]
     exc_local = local_idx[exc_idx]
     first_of_block = np.ones(len(exc_idx), dtype=bool)
-    first_of_block[1:] = exc_block[1:] != exc_block[:-1]
+    first_of_block[1:] = block_id[exc_idx][1:] != block_id[exc_idx][:-1]
     prev_local = np.zeros(len(exc_idx), dtype=np.int64)
     prev_local[1:] = exc_local[:-1]
     pos_deltas = np.where(first_of_block, exc_local,
                           exc_local - prev_local).astype(np.uint64)
     pos_stream, pos_sizes = _varint_encode_sized(pos_deltas)
-    highs = vals[exc_idx] >> w_per_val[exc_idx].astype(np.uint64)
+    highs = vals[exc_idx] >> width[block_id[exc_idx]].astype(np.uint64)
     high_stream, high_sizes = _varint_encode_sized(highs)
-    exc_base = np.zeros(nb, dtype=np.int64)
-    exc_base[1:] = np.cumsum(n_exc)[:-1]
-
-    def _split(stream: bytes, sizes: np.ndarray):
-        if len(sizes) == 0:
-            return [b""] * nb
-        csum = np.cumsum(sizes)
-        s0 = np.zeros(nb, dtype=np.int64)
-        nz = exc_base > 0
-        s0[nz] = csum[exc_base[nz] - 1]
-        e0 = np.empty(nb, dtype=np.int64)
-        e0[:-1] = s0[1:]
-        e0[-1] = len(stream)
-        return [stream[s0[i]:e0[i]] for i in range(nb)]
-
-    pos_blobs = _split(pos_stream, pos_sizes)
-    high_blobs = _split(high_stream, high_sizes)
-    out = []
-    for i in range(nb):
-        out.append(bytes([CODEC_PFOR, int(width[i])])
-                   + np.uint32(lens[i]).tobytes()
-                   + np.uint32(n_exc[i]).tobytes()
-                   + np.uint32(len(pos_blobs[i])).tobytes()
-                   + packed_all[byte_base[i]:byte_base[i] + block_bytes[i]]
-                   + pos_blobs[i] + high_blobs[i])
-    return out
+    ps, pe = _byte_bounds(pos_sizes, n_exc)
+    hs, he = _byte_bounds(high_sizes, n_exc)
+    pos_nbytes = np.subtract(pe, ps, dtype=np.int64)
+    hdrs = _block_headers(CODEC_PFOR, width, lens, n_exc, pos_nbytes)
+    return [h + packed[b:b + k] + pos_stream[p0:p1] + high_stream[h0:h1]
+            for h, b, k, p0, p1, h0, h1 in zip(
+                hdrs, base.tolist(), nbytes.tolist(), ps, pe, hs, he)]
 
 
 def encode_u64_blocked(vals: np.ndarray, starts: np.ndarray,
                        codec: int = CODEC_VARINT) -> list[bytes]:
-    """Encode ``vals`` split at ``starts`` (block start offsets) → one blob
-    per block.  Varint path is a SINGLE vectorized pass over the whole
-    array, then a byte-offset split — per-block numpy-call overhead (which
-    dominates at 128-value blocks) is gone."""
+    """Encode ``vals`` split at ``starts`` (ascending block start offsets;
+    empty blocks allowed) → one blob per block, each byte-identical to
+    :func:`encode_u64` of that block.  Every codec runs whole-array passes
+    then a byte-offset split — per-block numpy-call overhead (which
+    dominates at small blocks) is gone."""
     vals = np.ascontiguousarray(vals, dtype=np.uint64)
     starts = np.ascontiguousarray(starts, dtype=np.int64)
     if codec == CODEC_VARINT:
         prefix = bytes([CODEC_VARINT])
-        if len(vals) == 0:
-            return [prefix] * len(starts)
         stream, sizes = _varint_encode_sized(vals)
-        csum = np.cumsum(sizes)
-        byte_starts = np.zeros(len(starts), dtype=np.int64)
-        nz = starts > 0
-        byte_starts[nz] = csum[starts[nz] - 1]
-        ends = np.empty(len(starts), dtype=np.int64)
-        ends[:-1] = byte_starts[1:]
-        ends[-1] = len(stream)
-        return [prefix + stream[byte_starts[i]:ends[i]]
-                for i in range(len(starts))]
+        bs, be = _byte_bounds(sizes, np.diff(starts, append=len(vals)))
+        return [prefix + stream[s:e] for s, e in zip(bs, be)]
     if codec == CODEC_PFOR:
         return _pfor_encode_blocked(vals, starts)
-    # bitpack width is per-block → per-block encode (non-default path)
-    bounds = list(starts) + [len(vals)]
-    return [encode_u64(vals[bounds[i]:bounds[i + 1]], codec)
-            for i in range(len(starts))]
+    if codec == CODEC_BITPACK:
+        return _bitpack_encode_blocked(vals, starts)
+    raise ValueError(f"unknown codec {codec}")
+
+
+class EncodedBlocks(NamedTuple):
+    """Parallel per-block columns from :func:`encode_segments`."""
+    group: np.ndarray          # index of the segment each block belongs to
+    first_doc: np.ndarray
+    last_doc: np.ndarray
+    n_docs: np.ndarray
+    doc_gaps: list[bytes]
+    tfs: list[bytes]
+    positions: list[bytes] | None
+    block_max_tf: np.ndarray
+
+
+def _segment_block_starts(doc_ids: np.ndarray, seg_id: np.ndarray,
+                          block_size: int,
+                          align_width: int | None) -> np.ndarray:
+    """Block start offsets over concatenated sorted posting lists: a run
+    starts at every segment start and (with ``align_width``) at every
+    ``doc_id DIV align_width`` change; a block starts every
+    ``block_size`` postings inside a run."""
+    n = len(doc_ids)
+    brk = np.ones(n, dtype=bool)
+    brk[1:] = seg_id[1:] != seg_id[:-1]
+    if align_width and n:
+        shard = doc_ids // align_width
+        brk[1:] |= shard[1:] != shard[:-1]
+    idx = np.arange(n, dtype=np.int64)
+    run_start = np.maximum.accumulate(np.where(brk, idx, 0)) if n else idx
+    return np.nonzero((idx - run_start) % block_size == 0)[0]
+
+
+def _gather_runs(vals: np.ndarray, offs: np.ndarray, order: np.ndarray):
+    """Reorder the variable-length runs ``vals[offs[i]:offs[i+1]]`` by
+    ``order`` → (values, offsets)."""
+    lens = np.diff(offs)[order]
+    new_offs = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=new_offs[1:])
+    within = np.arange(new_offs[-1], dtype=np.int64) \
+        - np.repeat(new_offs[:-1], lens)
+    return vals[np.repeat(offs[:-1][order], lens) + within], new_offs
+
+
+def encode_segments(doc_ids: np.ndarray, tfs: np.ndarray,
+                    seg_offsets: np.ndarray,
+                    positions: np.ndarray | None = None,
+                    pos_offsets: np.ndarray | None = None,
+                    block_size: int = BLOCK_SIZE,
+                    codec: int = CODEC_VARINT,
+                    align_width: int | None = None) -> EncodedBlocks:
+    """Encode many posting lists at once — the build's encode kernel.
+
+    ``doc_ids``/``tfs`` hold the postings of every segment (a (term, salt)
+    sub-list) back to back, segment ``i`` at
+    ``seg_offsets[i]:seg_offsets[i+1]``; ``positions`` holds every
+    posting's token positions back to back, posting ``j``'s at
+    ``pos_offsets[j]:pos_offsets[j+1]``.  Postings should arrive with
+    ascending docIDs inside each segment; if any do not, one stable
+    lexsort by (segment, doc_id) restores it.
+
+    Blocks never span a segment (nor, with ``align_width``, a docID
+    shard) and hold ≤ ``block_size`` postings.  Gaps restart at 0 in each
+    block, so blocks are self-contained (absolute ``first_doc``; decode is
+    ``first_doc + cumsum(gaps)``) and salted sub-lists with disjoint docID
+    ranges concatenate without re-encoding (SURVEY.md I11/R6).  Positions
+    are delta-encoded within each doc.  A fixed number of whole-array
+    passes regardless of the segment count."""
+    d = np.ascontiguousarray(doc_ids, dtype=np.int64)
+    t = np.ascontiguousarray(tfs, dtype=np.int64)
+    seg_offsets = np.asarray(seg_offsets, dtype=np.int64)
+    seg_id = np.repeat(np.arange(len(seg_offsets) - 1, dtype=np.int64),
+                       np.diff(seg_offsets))
+    if positions is not None:
+        positions = np.asarray(positions, dtype=np.int64)
+        pos_offsets = np.asarray(pos_offsets, dtype=np.int64)
+    if len(d) > 1 and ((d[1:] <= d[:-1]) & (seg_id[1:] == seg_id[:-1])).any():
+        order = np.lexsort((d, seg_id))
+        d, t = d[order], t[order]
+        if positions is not None:
+            positions, pos_offsets = _gather_runs(positions, pos_offsets,
+                                                  order)
+    starts = _segment_block_starts(d, seg_id, block_size, align_width)
+    ends = np.append(starts[1:], np.int64(len(d)))
+    gaps = np.zeros(len(d), dtype=np.uint64)
+    np.subtract(d[1:], d[:-1], out=gaps[1:], casting="unsafe")
+    gaps[starts] = 0
+    pos_blobs = None
+    if positions is not None:
+        deltas = np.empty(len(positions), dtype=np.uint64)
+        if len(positions):
+            deltas[0] = positions[0]
+            np.subtract(positions[1:], positions[:-1], out=deltas[1:],
+                        casting="unsafe")
+            doc_starts = pos_offsets[:-1][pos_offsets[:-1] < len(positions)]
+            deltas[doc_starts] = positions[doc_starts]
+        pos_blobs = encode_u64_blocked(deltas, pos_offsets[starts], codec)
+    return EncodedBlocks(
+        group=seg_id[starts], first_doc=d[starts], last_doc=d[ends - 1],
+        n_docs=ends - starts,
+        doc_gaps=encode_u64_blocked(gaps, starts, codec),
+        tfs=encode_u64_blocked(t, starts, codec),
+        positions=pos_blobs,
+        block_max_tf=(np.maximum.reduceat(t, starts) if len(starts)
+                      else np.empty(0, dtype=np.int64)))
 
 
 def block_starts(doc_ids: np.ndarray, block_size: int = BLOCK_SIZE,
@@ -362,20 +493,10 @@ def block_starts(doc_ids: np.ndarray, block_size: int = BLOCK_SIZE,
     query-time block→shard routing is 1:1 instead of replicating sparse
     terms' blocks across every shard their range overlaps (the round-1
     scale-killer: one rare-term block fanning out to ~10^5 shard copies at
-    10^12 docs).  Fully vectorized (no per-posting or per-segment loop)."""
-    n = len(doc_ids)
-    if not align_width:
-        return np.arange(0, n, block_size, dtype=np.int64)
-    shard = np.asarray(doc_ids, dtype=np.int64) // align_width
-    seg_first = np.nonzero(shard[1:] != shard[:-1])[0] + 1
-    seg_starts = np.concatenate([np.zeros(1, dtype=np.int64), seg_first])
-    seg_ends = np.concatenate([seg_first, np.int64([n])])
-    counts = -((seg_starts - seg_ends) // block_size)  # ceil(len / bs)
-    total = int(counts.sum())
-    cum = np.zeros(len(counts), dtype=np.int64)
-    cum[1:] = np.cumsum(counts)[:-1]
-    within = np.arange(total, dtype=np.int64) - np.repeat(cum, counts)
-    return np.repeat(seg_starts, counts) + within * block_size
+    10^12 docs).  The one-segment case of :func:`encode_segments`' split."""
+    d = np.asarray(doc_ids, dtype=np.int64)
+    return _segment_block_starts(d, np.zeros(len(d), dtype=np.int64),
+                                 block_size, align_width)
 
 
 def encode_blocks(
@@ -385,40 +506,24 @@ def encode_blocks(
     codec: int = CODEC_VARINT,
     starts: np.ndarray | None = None,
 ):
-    """Split one term's sorted posting list into fixed-size blocks.
+    """Split one term's sorted posting list into blocks — a one-list
+    :func:`encode_segments` call.
 
     Returns parallel lists: (first_doc, last_doc, n, gaps_blob, tfs_blob,
-    block_max_tf).  gaps[0] == 0 by construction; decode is
-    ``first_doc + cumsum(gaps)``.  Blocks are self-contained (absolute
-    first_doc per block) so salted sub-lists with disjoint docID ranges
-    concatenate without re-encoding (SURVEY.md I11/R6).
-
-    ``starts`` (from :func:`block_starts`) overrides the fixed-stride
-    split — used for shard-aligned blocks.
-
-    Fully vectorized across blocks: one gap pass, one varint pass, one
-    reduceat for block-max — no per-block loops in the hot path.
+    block_max_tf).  ``starts`` (from :func:`block_starts`) overrides the
+    fixed-stride split — used for shard-aligned blocks; each given block
+    is then passed as its own segment.
     """
-    doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
-    tfs = np.ascontiguousarray(tfs, dtype=np.int64)
     n = len(doc_ids)
-    if n == 0:
-        return [], [], [], [], [], []
     if starts is None:
-        starts = np.arange(0, n, block_size, dtype=np.int64)
-    ends = np.concatenate([starts[1:], np.int64([n])])
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = 0
-    np.subtract(doc_ids[1:], doc_ids[:-1], out=gaps[1:], casting="unsafe")
-    gaps[starts] = 0  # each block is self-based at its first_doc
-    gaps_blobs = encode_u64_blocked(gaps, starts, codec)
-    tf_blobs = encode_u64_blocked(tfs.astype(np.uint64), starts, codec)
-    maxtfs = np.maximum.reduceat(tfs, starts)
-    firsts = doc_ids[starts]
-    lasts = doc_ids[ends - 1]
-    lens = (ends - starts).astype(np.int64)
-    return (firsts.tolist(), lasts.tolist(), lens.tolist(),
-            gaps_blobs, tf_blobs, maxtfs.tolist())
+        seg_offsets = np.array([0, n], dtype=np.int64)
+    else:
+        seg_offsets = np.append(np.asarray(starts, dtype=np.int64), n)
+        block_size = max(n, 1)
+    b = encode_segments(doc_ids, tfs, seg_offsets, block_size=block_size,
+                        codec=codec)
+    return (b.first_doc.tolist(), b.last_doc.tolist(), b.n_docs.tolist(),
+            b.doc_gaps, b.tfs, b.block_max_tf.tolist())
 
 
 def decode_block(first_doc: int, gaps_blob: bytes, tfs_blob: bytes):
