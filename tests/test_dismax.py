@@ -18,6 +18,7 @@ from zsolr.analyze import tokenize_py
 from zsolr.build import (BuildConfig, IndexBuilder, field_norms_term,
                          scored_term, term_scored_field)
 from zsolr.catalog import ManifestParquetCatalog
+from zsolr.parse import And, parse
 from zsolr.search import Searcher, UnsupportedQuery
 
 K1, B = 1.2, 0.75
@@ -142,6 +143,35 @@ def test_wand_equals_exhaustive(searcher, q):
          searcher.search_dismax(q, qf=qf, tie=0.2, k=10,
                                 wand=False).collect()]
     assert a == b
+
+
+@pytest.mark.parametrize("tie", [0.0, 0.1])
+def test_batch_equals_serial_two_fields(searcher, tie):
+    """search_batch scores every field with that field's norms and avgdl,
+    exactly as search() does: rows and counts are equal on a
+    two-scored-field index for dismax queries over path-hitting terms
+    (batch once scored path terms with the content norms and avgdl), and
+    facet.query counts — which ride the batch path — equal serial
+    counts."""
+    qf = {"path": 2.0, "content": 1.0}
+    asts = [searcher.dismax_ast(q, qf, tie) for q in ("py", "go", "file")]
+    if tie:
+        asts.append(searcher.dismax_ast("file py", qf, tie,
+                                        pf={"path": 1.5}))
+    batch = searcher.search_batch(asts, k=10, with_count=True)
+    assert len(batch) == len(asts)
+    for ast, (bdf, bn) in zip(asts, batch):
+        sdf, sn = searcher.search(ast, k=10, with_count=True)
+        srows = [tuple(r) for r in sdf.collect()]
+        assert srows, ast
+        assert [tuple(r) for r in bdf.collect()] == srows, ast
+        assert bn == sn, ast
+    fqs = ["lang:en", "NOT lang:en", "file"]
+    counts = searcher.facet_query(asts[0], fqs)
+    for fq in fqs:
+        _df, n = searcher.search(And((asts[0], parse(fq))), k=1,
+                                 with_count=True)
+        assert counts[fq] == n, fq
 
 
 def test_classic_parity_on_dismax_index(searcher):

@@ -652,6 +652,21 @@ def test_search_batch_bit_identical(searcher):
         assert bn == sn, q
 
 
+def test_kernels_raise_no_eval_type_warning(searcher):
+    """The kernels handed to applyInPandas carry no partial type hints:
+    Spark infers a pandas eval type from hints and warns ("Cannot infer
+    the eval type from type hints") on every call when they are partial.
+    Checked on the batch kernel and on a cogroup (field-sort) query."""
+    import warnings
+
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        searcher.search_batch(["spark", "hash AND join"], k=5)
+        searcher.search("spark", k=5, sort="path").collect()
+    assert not [str(w.message) for w in rec
+                if "eval type" in str(w.message)]
+
+
 def test_search_batch_pagination(searcher):
     for q in ("spark", "hash AND join"):
         b = searcher.search_batch([q], k=5, start=3)[0]

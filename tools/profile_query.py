@@ -18,12 +18,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
 
 from zsolr.build import BuildConfig, IndexBuilder  # noqa: E402
 from zsolr.catalog import ManifestParquetCatalog  # noqa: E402
 from zsolr.corpus import synth_corpus  # noqa: E402
-from zsolr.search import Searcher, make_search_kernel, plan_query  # noqa: E402
+from zsolr.search import Searcher, plan_query  # noqa: E402
 from zsolr.session import get_spark  # noqa: E402
 
 
@@ -69,26 +68,11 @@ def main():
             s.search(q, k=10).collect()
 
             sc.setJobDescription(f"profile kernel: {q}")
-            plan = plan_query(q)
-            kast = s._expand_ast(plan.scored_ast)
-            neg, pos = set(), set()
-            s._neg_terms(kast, neg)
-            s._pos_terms(kast, pos)
-            all_terms = sorted(pos | neg)
-            idf_map = s._idf_map(all_terms)
-            norm_terms = sorted(pos - neg)
+            spec = s._plan_spec(plan_query(q))
 
             def kernel_only():
-                postings = s._postings_scan(all_terms, norm_terms, False)
-                kernel = make_search_kernel(
-                    kast, idf_map, pos, neg, set(), 10, s.shard_width,
-                    s.avgdl, True, None, deleted=s._deleted_np,
-                    cogroup=False, phrase_terms=set(),
-                    needs_universe=False, boost_mult={},
-                    avgdl_by_field=s.field_avgdl)
-                return (postings.groupBy("shard")
-                        .applyInPandas(kernel, "doc_id long, score double")
-                        .collect())
+                with s._no_aqe():
+                    return s._candidates([spec], 10, wand=True).collect()
 
             rows = kernel_only()
             ids = sorted(r["doc_id"] for r in rows if r["doc_id"] >= 0)[:10]

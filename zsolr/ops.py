@@ -72,12 +72,6 @@ def dedup_exact(docs: DataFrame, text_col: str = "text",
                  F.count(F.lit(1)).cast("long").alias("n_copies")))
 
 
-def _token_set(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    toks = tokenize_codegen(F.col(text_col))
-    return (docs.select(F.col(id_col).alias("doc_id"),
-                        F.explode(F.array_distinct(toks)).alias("term")))
-
-
 # Universal-hash MinHash family (round-4): ONE md5 per token, then
 # h_k(x) = (a_k·x_lo + b_k·x_hi + c_k) mod (2^61−1) — exact in int64
 # (multipliers < 2^28, x_lo < 2^28, x_hi < 2^32 ⇒ terms < 2^60) and
@@ -97,24 +91,6 @@ def _mh_const(tag: str, k: int) -> int:
 _MH_A = [_mh_const("a", k) for k in range(64)]
 _MH_B = [_mh_const("b", k) for k in range(64)]
 _MH_C = [_mh_const("c", k) for k in range(64)]
-
-
-def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", n_hashes: int = 8) -> DataFrame:
-    """MinHash over the token set: one md5 base hash + k universal-hash
-    family members, ``min`` per (doc, k).  → (doc_id, k, minhash)."""
-    ts = _token_set(docs, text_col, id_col).withColumn(
-        "base", _hash60(F.col("term")))
-    seeds = F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("k")
-    a = F.array(*[F.lit(x) for x in _MH_A[:n_hashes]])
-    b = F.array(*[F.lit(x) for x in _MH_B[:n_hashes]])
-    c = F.array(*[F.lit(x) for x in _MH_C[:n_hashes]])
-    hashed = ts.select("doc_id", "base", seeds).withColumn(
-        "h", (F.element_at(a, F.col("k") + 1)
-              * F.col("base").bitwiseAND(F.lit(_MH_MASK))
-              + F.element_at(b, F.col("k") + 1) * F.shiftright("base", 28)
-              + F.element_at(c, F.col("k") + 1)) % F.lit(_MH_P))
-    return hashed.groupBy("doc_id", "k").agg(F.min("h").alias("minhash"))
 
 
 _TOKEN_PAT = None  # lazily compiled in the worker

@@ -165,6 +165,23 @@ class Plan:
     exclude_ast: object | None = None  # `*:* AND NOT x` exclusions
 
 
+@dataclass
+class QuerySpec:
+    """One query planned for the per-shard core (``Searcher._plan_spec``)."""
+    ast: object              # kernel AST: filters lowered, multi-terms expanded
+    fast: bool               # postings-only kernel (else cogroup with docs)
+    pos: set                 # terms in positive position
+    neg: set                 # terms under NOT
+    zero: set                # terms that filter but score 0
+    phrase: set              # phrase member terms (decoded with positions)
+    eval_terms: list         # terms the AST reads as (ids, scores)
+    all_terms: list          # every term whose postings the kernel needs
+    norm_terms: list         # terms scored with norms (BM25 or phrase)
+    idf_map: dict
+    needs_universe: bool
+    boost_mult: dict         # per-term WAND upper-bound multipliers ≠ 1
+
+
 def _is_meta(node) -> bool:
     return (
         (isinstance(node, Term) and node.field in DOC_META_FIELDS)
@@ -189,14 +206,24 @@ def _collect_terms(node, out: list[str]):
     # Prefix: terms unknown until plan-time expansion (Searcher._expand_ast)
 
 
-def _collect_phrase_terms(node, out: set):
-    if isinstance(node, Phrase):
-        out.update(node.terms)
+def _term_sets(node, sets: dict | None = None, under_not: bool = False):
+    """Kernel AST → its term sets: ``pos`` (scored terms outside any NOT),
+    ``neg`` (terms under NOT), ``phrase`` (phrase members) and ``const``
+    (expanded multi-term ConstSet members)."""
+    if sets is None:
+        sets = {"pos": set(), "neg": set(), "phrase": set(), "const": set()}
+    if isinstance(node, Term):
+        sets["neg" if under_not else "pos"].add(node.term)
+    elif isinstance(node, Phrase):
+        sets["phrase"].update(node.terms)
+    elif isinstance(node, ConstSet):
+        sets["const"].update(node.terms)
     elif isinstance(node, (And, Or, DisMax, MinMatch)):
         for c in node.children:
-            _collect_phrase_terms(c, out)
+            _term_sets(c, sets, under_not)
     elif isinstance(node, (Not, Boost)):
-        _collect_phrase_terms(node.child, out)
+        _term_sets(node.child, sets, under_not or isinstance(node, Not))
+    return sets
 
 
 def _rewrite_nested(node):
@@ -601,8 +628,7 @@ def _decode_blocks_raw(rows: pd.DataFrame, keep: np.ndarray, mask: bool,
                        allowed: np.ndarray | None,
                        deleted_sorted: np.ndarray | None):
     """Decode kept posting blocks → (sorted ids, tf values) within
-    ``[base, base+width)``; ``mask`` applies the allowed/tombstone filters.
-    Shared by the single-query and batch kernels."""
+    ``[base, base+width)``; ``mask`` applies the allowed/tombstone filters."""
     ids_l, tfs_l = [], []
     gb = rows["doc_gaps"].to_numpy()
     tb = rows["tfs"].to_numpy()
@@ -641,7 +667,7 @@ def _decode_blocks_positions(rows: pd.DataFrame, base: int, width: int,
                              deleted_sorted: np.ndarray | None):
     """Full decode incl. token positions → (ids, tfs, pflat, poffs);
     shard-range and deletion masks applied consistently to the per-doc
-    position slices.  Shared by the single-query and batch kernels."""
+    position slices."""
     ids_l, tfs_l, pos_l = [], [], []
     gb = rows["doc_gaps"].to_numpy()
     tb = rows["tfs"].to_numpy()
@@ -750,472 +776,433 @@ def _window_max(tabs: list, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
     return out
 
 
-def make_search_kernel(scored_ast, idf_map: dict, pos_terms: set,
-                       neg_terms: set, zero_terms: set, k: int | None,
-                       shard_width: int, avgdl: float, wand: bool,
-                       sort_spec: list | None,
+def _empty():
+    return np.empty(0, dtype=np.int64), np.empty(0)
+
+
+class _ShardContext:
+    """One shard's decode state, built once per kernel call and shared by
+    every query scored on the shard: posting blocks by term, per-field
+    norms for every scored field in play, phrase-term positions, the
+    live-doc universe and a per-term cache of full decodes — so a term
+    decodes fully at most once per shard however many queries read it.
+
+    ``docs`` is the cogroup path's filtered doc-store side (``None`` on
+    the fast path, where the broadcast tombstone set masks instead)."""
+
+    def __init__(self, key, blocks: pd.DataFrame, docs, specs: list,
+                 shard_width: int, deleted_sorted, avgdl_of: dict):
+        self.base = int(key[0]) * shard_width
+        self.width = shard_width
+        self.deleted_sorted = deleted_sorted
+        self.docs = docs
+        self.k1, self.b = BM25_K1, BM25_B
+        self.avgdl_of = avgdl_of
+        if docs is not None:
+            self.allowed = np.zeros(shard_width, dtype=bool)
+            d_ids = docs["doc_id"].to_numpy()
+            self.allowed[d_ids - self.base] = True
+            self.allowed_ids = np.sort(d_ids)
+        else:
+            self.allowed = None
+            self.allowed_ids = np.empty(0, dtype=np.int64)  # no Range here
+        by_term_all = {t: g.sort_values("first_doc")
+                       for t, g in blocks.groupby("term")} if len(blocks) \
+            else {}
+        # per-field norms sidecars (Lucene per-field similarity): content
+        # uses the classic NORMS_TERM; each extra scored field in play adds
+        # its own sidecar term
+        fields = {"content"} | {term_scored_field(t) for s in specs
+                                for t in s.all_terms}
+        sidecar = {f: field_norms_term(f) for f in fields}
+        sidecar_terms = set(sidecar.values())
+        self.by_term = {t: g for t, g in by_term_all.items()
+                        if t not in sidecar_terms}
+        self.norms: dict[str, tuple] = {}
+        for fld, nterm in sidecar.items():
+            nrows = by_term_all.get(nterm)
+            self.norms[fld] = _empty() if nrows is None else \
+                _decode_blocks_raw(nrows, np.ones(len(nrows), bool), False,
+                                   self.base, shard_width, None, None)
+        # positional data for phrase member terms (full decode; phrase
+        # queries are never WAND-pruned)
+        self.positions: dict[str, tuple] = {}
+        for t in set().union(*(s.phrase for s in specs)):
+            rows = self.by_term.get(t)
+            if rows is not None:
+                self.positions[t] = _decode_blocks_positions(
+                    rows, self.base, shard_width, self.allowed,
+                    deleted_sorted)
+        # shard universe (live docs) for complement legs: the filtered docs
+        # side in cogroup mode, else the content norms (which cover every
+        # doc) minus broadcast tombstones.  Complement-then-filter ==
+        # filter-then-complement for the AND-of-filters shape, so both
+        # paths agree.
+        norm_ids = self.norms["content"][0].astype(np.int64)
+        if not any(s.needs_universe for s in specs):
+            self.universe = np.empty(0, dtype=np.int64)
+        elif docs is not None:
+            self.universe = self.allowed_ids
+        elif deleted_sorted is not None:
+            self.universe = norm_ids[~np.isin(norm_ids, deleted_sorted)]
+        else:
+            self.universe = norm_ids
+        self._full: dict[str, tuple] = {}
+
+    def decode(self, t: str, keep: np.ndarray | None = None):
+        """Term ``t``'s live postings in this shard → (sorted ids, tfs):
+        the ``keep`` blocks, or all of them (cached)."""
+        rows = self.by_term.get(t)
+        if rows is None:
+            return _empty()
+        if keep is not None:
+            return _decode_blocks_raw(rows, keep, True, self.base,
+                                      self.width, self.allowed,
+                                      self.deleted_sorted)
+        if t not in self._full:
+            self._full[t] = self.decode(t, np.ones(len(rows), bool))
+        return self._full[t]
+
+    def score(self, spec, t: str, ids: np.ndarray, tfs: np.ndarray):
+        """BM25 of decoded postings of ``t`` with its field's norms and
+        avgdl → (ids, scores); zero-scored terms score 0."""
+        if t in spec.zero or not len(ids):
+            return ids, np.zeros(len(ids))
+        fld = term_scored_field(t)
+        n_ids, n_vals = self.norms[fld]
+        if not len(n_ids):
+            raise RuntimeError(
+                f"norms sidecar for field {fld!r} missing in shard"
+                f" {self.base // self.width} while scoring term {t!r}"
+                f" (norms present:"
+                f" { {f: len(v[0]) for f, v in self.norms.items()} })")
+        dls = n_vals[np.searchsorted(n_ids, ids)]
+        a = self.avgdl_of.get(fld, self.avgdl_of["content"])
+        k1, b = self.k1, self.b
+        idf_t = spec.idf_map[t]
+        return ids, idf_t * tfs * (k1 + 1.0) / (tfs + k1 * (1 - b + b * dls / a))
+
+    def env(self, spec) -> dict:
+        """AST evaluation environment of one query on this shard."""
+        norm_ids, norm_vals = self.norms["content"]
+        return {"per_term_pos": self.positions, "idf_map": spec.idf_map,
+                "norm_ids": norm_ids, "norm_vals": norm_vals,
+                "norms_by_field": self.norms, "avgdl_by_field": self.avgdl_of,
+                "universe": self.universe, "k1": self.k1, "b": self.b,
+                "avgdl": self.avgdl_of["content"]}
+
+
+def _wand_per_term(ctx: _ShardContext, spec, prunable: set, k: int,
+                   env: dict, after: tuple | None, block_acc) -> dict:
+    """Block-max WAND (Q8): per-term (ids, scores) of one query holding
+    every posting that can reach the shard's top k — the AST over them
+    equals the exhaustive evaluation's top k."""
+    # phase 1: evaluate the AST over each prunable term's top-UB
+    # blocks only (non-prunable terms decode fully); the kth partial
+    # score is a LOWER bound on the true kth score: partial posting
+    # lists ⇒ computed ≤ true, and AND over partial lists only
+    # yields genuine matches.
+    ubs: dict[str, np.ndarray] = {}
+    spans: dict[str, tuple] = {}
+    for t in spec.pos - spec.zero:
+        rows = ctx.by_term.get(t)
+        if rows is None:
+            continue
+        t_fld = term_scored_field(t)
+        t_nids, t_nvals = ctx.norms[t_fld]
+        t_avgdl = ctx.avgdl_of.get(t_fld, ctx.avgdl_of["content"])
+        if len(t_nids):
+            # per-block dl_min over the block's docID RANGE
+            # (round-5): the norms sidecar is already decoded
+            # per shard, so each block's minimum doc length over
+            # [first_doc, last_doc] comes from two searchsorteds
+            # — a superset of the block's postings, hence still
+            # a safe bound, and never looser than the old
+            # shard-global min (real corpora cluster doc length:
+            # vendored/minified/generated files).
+            fd = rows["first_doc"].to_numpy(np.int64)
+            ld = rows["last_doc"].to_numpy(np.int64)
+            lo = np.searchsorted(t_nids, fd)
+            hi = np.searchsorted(t_nids, ld, side="right")
+            dl_min = np.maximum(np.array(
+                [t_nvals[a:z].min() if z > a else 1.0
+                 for a, z in zip(lo, hi)]), 1.0)
+        else:
+            dl_min = 1.0
+        ub = _term_ub(spec.idf_map[t],
+                      rows["block_max_tf"].to_numpy(np.float64),
+                      ctx.k1, ctx.b, t_avgdl, dl_min)
+        ub = ub * spec.boost_mult.get(t, 1.0)
+        if t in prunable:
+            ubs[t] = ub
+        spans[t] = (rows["first_doc"].to_numpy(np.int64),
+                    rows["last_doc"].to_numpy(np.int64), ub)
+    m = max(1, -(-2 * k // 128))
+    sel: dict[str, np.ndarray] = {}
+    for t in sorted(prunable):
+        if t in ubs:
+            keep = np.zeros(len(ubs[t]), dtype=bool)
+            keep[np.argsort(-ubs[t], kind="stable")[:m]] = True
+            sel[t] = keep
+    # seed ALIGNMENT (round-5): additionally decode each term's
+    # blocks overlapping the OTHER prunable terms' seed spans —
+    # for AND shapes, disjoint top-UB seeds intersect to nothing,
+    # θ stays -inf, and phase 2 can never prune; aligned seeds
+    # make the phase-1 intersection real.  Extra decode is ≤ a
+    # few blocks per (term, other-seed); θ remains a valid lower
+    # bound (more partial postings only raise computed scores
+    # toward, never past, the truth).
+    extra = {t: np.zeros_like(mask) for t, mask in sel.items()}
+    for t, mask in sel.items():
+        fd_t, ld_t, _ub = spans[t]
+        for u, umask in sel.items():
+            if u == t:
+                continue
+            fd_u, ld_u, _ = spans[u]
+            for j in np.nonzero(umask)[0]:
+                lo = np.searchsorted(ld_t, fd_u[j], side="left")
+                hi = np.searchsorted(fd_t, ld_u[j], side="right")
+                extra[t][lo:hi] = True
+    phase1: dict[str, tuple] = {}
+    p1mask: dict[str, np.ndarray] = {}
+    full: dict[str, tuple] = {}
+    for t in spec.eval_terms:
+        if t not in sel:
+            phase1[t] = full[t] = ctx.score(spec, t, *ctx.decode(t))
+        else:
+            p1mask[t] = sel[t] | extra[t]
+            phase1[t] = ctx.score(spec, t, *ctx.decode(t, p1mask[t]))
+    p_ids, p_sc = _eval_ast(spec.ast, phase1, ctx.allowed_ids, env)
+    if after is not None:
+        # Sound θ-pool cursor filter (round-6 ADVICE high):
+        # phase-1 scores are PARTIAL, so filtering on them lets
+        # a previous-page doc whose mass sits in an undecoded
+        # block slip under the cursor with an understated score
+        # and inflate θ past the true kth after-cursor score —
+        # the block-aligned phase-2 bound then prunes blocks
+        # holding genuine page docs.  Admit a doc only when its
+        # per-doc UPPER bound (partial score + the UB of its
+        # containing UNDECODED block, per partially-decoded
+        # term) is certainly past the cursor; conservatively
+        # excluded genuine docs only lower θ — less pruning,
+        # never a wrong page.  Each doc's posting for a term
+        # lies in exactly one block (disjoint, docID-sorted), so
+        # the containing block is one searchsorted per term.
+        p_ub = p_sc.copy()
+        for t, mask in p1mask.items():
+            fd_t, ld_t, ub_t = spans[t]
+            idx = np.searchsorted(fd_t, p_ids, side="right") - 1
+            safe = np.clip(idx, 0, None)
+            inb = (idx >= 0) & (p_ids <= ld_t[safe]) & ~mask[safe]
+            p_ub[inb] += ub_t[safe[inb]]
+        pm = (p_ub < after[0]) | ((p_ub == after[0]) & (p_ids > after[1]))
+        p_ids, p_sc = p_ids[pm], p_sc[pm]
+    theta = float(np.partition(p_sc, -k)[-k]) if len(p_ids) >= k \
+        else -np.inf
+    # phase 2: a block of term t survives unless even its best
+    # doc plus every OTHER scored term's best CO-LOCATED
+    # contribution stays < θ.  Block-ALIGNED cross-term bound
+    # (round-5, true block-max WAND): other terms contribute the
+    # max UB of their blocks OVERLAPPING this block's docID
+    # range, not their corpus-wide max — any doc in the block
+    # takes term u's score from exactly one overlapping u-block,
+    # so the sum bounds every doc's total and pruning stays
+    # safe.  The old global bound (ub + Σ other max UBs) could
+    # never prune multi-term queries: any block plus a hot
+    # term's corpus-wide max always cleared θ.  Blocks are
+    # sorted by first_doc and disjoint per term, so overlap is
+    # two searchsorteds; the window maxima come from per-term
+    # sparse tables (round-6), so the whole bound is
+    # O(terms² · blocks · log blocks) vectorized numpy — no
+    # per-block Python loop in the hot kernel.
+    ub_tabs = {u: _sparse_max(s[2]) for u, s in spans.items()}
+    per_term: dict[str, tuple] = {}
+    for t in spec.eval_terms:
+        if t in full:
+            per_term[t] = full[t]
+            continue
+        fd_t, ld_t, ub_t = spans[t]
+        other = np.zeros(len(ub_t))
+        for u, (fd_u, ld_u, ub_u) in spans.items():
+            if u == t:
+                continue
+            lo = np.searchsorted(ld_u, fd_t, side="left")
+            hi = np.searchsorted(fd_u, ld_t, side="right")
+            # sparse-table window maxima (round-6): vectorized
+            # O(blocks_t) per term pair instead of the old
+            # per-block Python loop's O(blocks_t · blocks_u)
+            other += _window_max(ub_tabs[u], lo, hi)
+        keep = (ub_t + other) >= theta
+        # phase-1 decodes are REUSED, not re-decoded (round-5):
+        # phase 2 decodes only surviving blocks phase 1 hasn't
+        # seen and merges the two sorted runs — before this,
+        # every seed block decoded twice per query.  Including a
+        # decoded-but-prunable block is safe (supersets of the
+        # kept postings only move the evaluation toward
+        # exhaustive, which WAND must equal anyway).
+        fresh = keep & ~p1mask[t]
+        if block_acc is not None:
+            # WAND effectiveness telemetry (round-4 verdict #4):
+            # candidate blocks vs blocks decoded in total
+            # (phase-1 seeds + phase-2 survivors)
+            block_acc[0].add(int(len(keep)))
+            block_acc[1].add(int((keep | p1mask[t]).sum()))
+        ids2, sc2 = ctx.score(spec, t, *ctx.decode(t, fresh))
+        ids1, sc1 = phase1[t]
+        if not len(ids2):
+            per_term[t] = (ids1, sc1)
+        elif not len(ids1):
+            per_term[t] = (ids2, sc2)
+        else:
+            ids_c = np.concatenate([ids1, ids2])
+            sc_c = np.concatenate([sc1, sc2])
+            order = np.argsort(ids_c, kind="stable")
+            per_term[t] = (ids_c[order], sc_c[order])
+    return per_term
+
+
+def _score_spec(ctx: _ShardContext, spec, k: int | None, wand: bool = False,
+                sort_spec: list | None = None, after: tuple | None = None,
+                block_acc=None):
+    """Score one planned query on one shard → (ids, scores, n_matches):
+    the shard's top ``k`` candidates (all matches when k is None) in
+    score order, or in ``sort_spec`` order (cogroup path only).  WAND runs
+    when asked and sound: a bounded score-ordered top k whose AST has
+    prunable terms and no phrase or complement leg."""
+    env = ctx.env(spec)
+    # only pos-only scored terms are WAND-prunable (a term used under NOT
+    # must decode fully or exclusion would under-remove); UB totals
+    # include every scored positive term so pruning stays safe
+    prunable = spec.pos - spec.neg - spec.zero - spec.phrase
+    if (wand and k is not None and not sort_spec and prunable
+            and not spec.phrase and not spec.needs_universe):
+        per_term = _wand_per_term(ctx, spec, prunable, k, env, after,
+                                  block_acc)
+    else:
+        per_term = {t: ctx.score(spec, t, *ctx.decode(t))
+                    for t in spec.eval_terms}
+    ids, sc = _eval_ast(spec.ast, per_term, ctx.allowed_ids, env)
+    n_matches = len(ids)
+    if after is not None:
+        if sort_spec:
+            # field-sort cursor (round-4 verdict #5): after =
+            # (sort values…, doc_id); keep docs strictly LATER in
+            # the (sort keys…, doc_id asc) lexicographic order —
+            # same ≤k-rows-per-shard property as the score cursor
+            dind = ctx.docs.set_index("doc_id")
+            tie = np.ones(len(ids), dtype=bool)
+            aft = np.zeros(len(ids), dtype=bool)
+            for i, (f, dsc) in enumerate(sort_spec):
+                v = ids if f == "doc_id" else dind[f].loc[ids].to_numpy()
+                later = (v < after[i]) if dsc else (v > after[i])
+                aft |= tie & later
+                tie &= v == after[i]
+            aft |= tie & (ids > after[-1])
+            ids, sc = ids[aft], sc[aft]
+        else:
+            am = (sc < after[0]) | ((sc == after[0]) & (ids > after[1]))
+            ids, sc = ids[am], sc[am]
+    if k is not None and len(ids) > k:
+        if not sort_spec:
+            ids, sc = _topk_cut(ids, sc, k)
+        else:  # sort override: cogroup mode only (needs the docs side)
+            dind = ctx.docs.set_index("doc_id")
+            data = {"doc_id": ids, "score": sc}
+            by, asc = [], []
+            for i, (f, dsc) in enumerate(sort_spec):
+                data[f"v{i}"] = ids if f == "doc_id" \
+                    else dind[f].loc[ids].to_numpy()
+                by.append(f"v{i}")
+                asc.append(not dsc)
+            sel = (pd.DataFrame(data)
+                   .sort_values(by + ["doc_id"], ascending=asc + [True],
+                                kind="mergesort")
+                   .head(k))
+            ids = sel["doc_id"].to_numpy()
+            sc = sel["score"].to_numpy()
+    return ids, sc, n_matches
+
+
+def _candidate_rows(ids: np.ndarray, sc: np.ndarray, n_matches: int) -> dict:
+    """Kernel output columns: the candidates plus one sentinel row
+    ``(-1, n_matches)`` carrying the shard's hit count."""
+    return {"doc_id": np.concatenate([ids.astype(np.int64), np.int64([-1])]),
+            "score": np.concatenate([sc, [float(n_matches)]])}
+
+
+def make_search_kernel(specs: list, k: int | None, shard_width: int,
+                       avgdl_by_field: dict, wand: bool = False,
+                       sort_spec: list | None = None,
                        deleted: np.ndarray | None = None,
-                       cogroup: bool = True,
-                       phrase_terms: set | None = None,
-                       needs_universe: bool = False,
-                       boost_mult: dict | None = None,
-                       k1: float = BM25_K1, b: float = BM25_B,
-                       after: tuple | None = None,
-                       block_acc: tuple | None = None,
-                       avgdl_by_field: dict | None = None):
-    """Build the per-shard kernel (two wire-ups, same body):
+                       cogroup: bool = False, batch: bool = False,
+                       after: tuple | None = None, block_acc=None):
+    """Build the per-shard kernel over planned queries (:class:`QuerySpec`).
+    Three entry points share one core — :class:`_ShardContext` decodes a
+    shard once, :func:`_score_spec` scores one query against it:
 
-    * fast path (``cogroup=False``): ``groupBy(shard)`` over posting blocks
-      only — doc-length norms decode from the blocks (Lucene-norms design),
-      metadata filters arrive as zero-scored field terms (``lang=en``), and
-      the (small) tombstone set is a broadcast numpy array.  NOTHING but the
-      query terms' postings moves at query time — the property that keeps
-      p95 flat at 10^12 docs.
-    * cogroup path (``cogroup=True``): ships a filtered doc-store side per
-      shard; needed for range predicates and sort-field overrides.
+    * fast path (one spec, ``cogroup=False``): ``groupBy(shard)`` over
+      posting blocks only — doc-length norms decode from the blocks
+      (Lucene-norms design), metadata filters arrive as zero-scored field
+      terms (``lang=en``), and the (small) tombstone set is a broadcast
+      numpy array.  NOTHING but the query terms' postings moves at query
+      time — the property that keeps p95 flat at 10^12 docs.
+    * cogroup path (one spec, ``cogroup=True``): ships a filtered
+      doc-store side per shard; needed for range predicates and
+      sort-field overrides.
+    * batch (``batch=True``, fast-path specs): one context per shard,
+      then every spec scored against it with WAND off — each term decodes
+      once per shard however many queries read it.  Per-query latency at
+      small corpora is ~95% fixed Spark job overhead (BENCH/BASELINE.md),
+      so one job for the whole query set is the big lever; results equal
+      ``search()``'s since WAND == exhaustive.
 
-    ``idf_map``: term → idf.  ``pos_terms``/``neg_terms``: terms appearing
-    positively / under NOT; ``zero_terms``: field terms that filter but
-    score 0.  Only pos-only scored terms are WAND-prunable (a term used
-    under NOT must decode fully or exclusion would under-remove); UB totals
-    include every scored positive term so pruning stays safe.  Emits
-    candidate rows ``(doc_id, score)`` (≤ k per shard, or all matches when
-    k is None) plus one sentinel row ``(-1, n_matches)`` with the shard's
-    hit count.
+    Each query emits candidate rows ``(doc_id, score)`` (≤ k per shard, or
+    all matches when k is None) plus one sentinel row ``(-1, n_matches)``
+    with the shard's hit count; batch rows carry the spec's index as
+    ``qid``.
 
     ``after``: Solr cursorMark deep paging — ``(score, doc_id)`` of the
-    previous page's last hit; only strictly-after candidates (score
-    lower, or tied with larger doc_id) are emitted, so page N ships
+    previous page's last hit (or ``(sort values…, doc_id)`` under a field
+    sort); only strictly-after candidates are emitted, so page N ships
     ≤ k rows per shard instead of the offset path's start+k.  The
     sentinel still counts the FULL match set (Solr reports total
     numFound on every cursor page).
     """
-    phrase_terms = phrase_terms or set()
-    all_terms = sorted(pos_terms | neg_terms | zero_terms | phrase_terms)
-    prunable = (pos_terms - neg_terms) - zero_terms - phrase_terms
     deleted_sorted = np.sort(deleted) if deleted is not None and len(deleted) \
         else None
-    # per-field norms sidecars (Lucene per-field similarity): content uses
-    # the classic NORMS_TERM; each extra scored field in play adds its own
-    # sidecar term.  Single-field queries keep the exact prior shape.
-    norm_term_of_field = {"content": NORMS_TERM}
-    for t in all_terms:
-        fld = term_scored_field(t)
-        if fld != "content":
-            norm_term_of_field[fld] = field_norms_term(fld)
-    _sidecar_terms = set(norm_term_of_field.values())
-    avgdl_of = dict(avgdl_by_field or {})
-    avgdl_of.setdefault("content", avgdl)
 
-    def kernel(key, blocks: pd.DataFrame, docs: pd.DataFrame | None = None):
+    def context(key, blocks, docs=None):
+        return _ShardContext(key, blocks, docs, specs, shard_width,
+                             deleted_sorted, avgdl_by_field)
+
+    # closures stay unannotated: Spark infers the pandas eval type from
+    # type hints, and partial hints make it warn on every call
+    if batch:
+        def batch_kernel(key, blocks):
+            ctx = context(key, blocks)
+            frames = []
+            for qi, spec in enumerate(specs):
+                rows = _candidate_rows(*_score_spec(ctx, spec, k))
+                frames.append(pd.DataFrame(
+                    {"qid": np.full(len(rows["doc_id"]), qi, dtype=np.int64),
+                     **rows}))
+            return pd.concat(frames, ignore_index=True)
+        return batch_kernel
+
+    (spec,) = specs
+
+    def kernel(key, blocks, docs=None):
         if docs is not None and len(docs) == 0:
             return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
                                  "score": pd.Series([], dtype="float64")})
-        shard = int(key[0])
-        base = shard * shard_width
-        if docs is not None:
-            allowed = np.zeros(shard_width, dtype=bool)
-            d_ids = docs["doc_id"].to_numpy()
-            allowed[d_ids - base] = True
-            allowed_ids = np.sort(d_ids)
-        else:
-            allowed = None
-            allowed_ids = np.empty(0, dtype=np.int64)  # no Range in fast AST
-
-        def decode_raw(rows: pd.DataFrame, keep: np.ndarray, mask: bool):
-            """Decode kept blocks → (sorted ids, tf values) within shard."""
-            return _decode_blocks_raw(rows, keep, mask, base, shard_width,
-                                      allowed, deleted_sorted)
-
-        by_term_all = {t: g.sort_values("first_doc")
-                       for t, g in blocks.groupby("term")} if len(blocks) else {}
-        by_term = {t: g for t, g in by_term_all.items()
-                   if t not in _sidecar_terms}
-        per_term: dict[str, tuple] = {}
-
-        # norms sidecars: per-doc lengths for this shard, one per scored
-        # field in play (Lucene per-field norms)
-        norm_data: dict[str, tuple] = {}
-        for fld, nterm in norm_term_of_field.items():
-            nrows = by_term_all.get(nterm)
-            if nrows is not None:
-                norm_data[fld] = decode_raw(
-                    nrows, np.ones(len(nrows), bool), mask=False)
-            else:
-                norm_data[fld] = (np.empty(0, dtype=np.int64), np.empty(0))
-        norm_ids, norm_vals = norm_data["content"]
-
-        def decode_term(t: str, rows: pd.DataFrame, keep: np.ndarray):
-            """Decode kept blocks of one term → (sorted ids, scores)."""
-            ids, tfs = decode_raw(rows, keep, mask=True)
-            if t in zero_terms or not len(ids):
-                return ids, np.zeros(len(ids))
-            fld = term_scored_field(t)
-            n_ids, n_vals = norm_data[fld]
-            if not len(n_ids):
-                raise RuntimeError(
-                    f"norms sidecar for field {fld!r} missing in shard"
-                    f" {shard} while scoring term {t!r} (norms present:"
-                    f" { {f: len(v[0]) for f, v in norm_data.items()} })")
-            dls = n_vals[np.searchsorted(n_ids, ids)]
-            a = avgdl_of.get(fld, avgdl)
-            idf_t = idf_map[t]
-            sc = idf_t * tfs * (k1 + 1.0) / (tfs + k1 * (1 - b + b * dls / a))
-            return ids, sc
-
-        def decode_positions(rows: pd.DataFrame):
-            """Full decode incl. token positions → (ids, tfs, pflat, poffs)."""
-            return _decode_blocks_positions(rows, base, shard_width,
-                                            allowed, deleted_sorted)
-
-        # positional data for phrase member terms (full decode; these are
-        # never WAND-prunable — pruning is disabled on phrase queries)
-        per_term_pos: dict[str, tuple] = {}
-        for t in phrase_terms:
-            rows = by_term.get(t)
-            if rows is not None:
-                per_term_pos[t] = decode_positions(rows)
-        # shard universe (live docs) for complement legs: the filtered docs
-        # side in cogroup mode, else the norms sidecar (covers every doc)
-        # minus broadcast tombstones.  Complement-then-filter == filter-
-        # then-complement for the AND-of-filters shape, so both paths agree.
-        if needs_universe:
-            if allowed is not None:
-                universe = allowed_ids
-            elif deleted_sorted is not None:
-                universe = norm_ids[
-                    ~np.isin(norm_ids, deleted_sorted)].astype(np.int64)
-            else:
-                universe = norm_ids.astype(np.int64)
-        else:
-            universe = np.empty(0, dtype=np.int64)
-        env = {"per_term_pos": per_term_pos, "idf_map": idf_map,
-               "norm_ids": norm_ids, "norm_vals": norm_vals,
-               "norms_by_field": norm_data, "avgdl_by_field": avgdl_of,
-               "universe": universe, "k1": k1, "b": b, "avgdl": avgdl}
-
-        empty = (np.empty(0, dtype=np.int64), np.empty(0))
-        if not wand or k is None or scored_ast is None or not prunable:
-            for t in all_terms:
-                if t in phrase_terms and t not in pos_terms | neg_terms:
-                    continue  # only used positionally
-                rows = by_term.get(t)
-                per_term[t] = empty if rows is None else \
-                    decode_term(t, rows, np.ones(len(rows), bool))
-        else:
-            # ---- block-max WAND (Q8) --------------------------------------
-            # phase 1: evaluate the AST over each prunable term's top-UB
-            # blocks only (non-prunable terms decode fully); the kth partial
-            # score is a LOWER bound on the true kth score: partial posting
-            # lists ⇒ computed ≤ true, and AND over partial lists only
-            # yields genuine matches.
-            ubs: dict[str, np.ndarray] = {}
-            spans: dict[str, tuple] = {}
-            for t in pos_terms - zero_terms:
-                rows = by_term.get(t)
-                if rows is None:
-                    continue
-                t_fld = term_scored_field(t)
-                t_nids, t_nvals = norm_data[t_fld]
-                t_avgdl = avgdl_of.get(t_fld, avgdl)
-                if len(t_nids):
-                    # per-block dl_min over the block's docID RANGE
-                    # (round-5): the norms sidecar is already decoded
-                    # per shard, so each block's minimum doc length over
-                    # [first_doc, last_doc] comes from two searchsorteds
-                    # — a superset of the block's postings, hence still
-                    # a safe bound, and never looser than the old
-                    # shard-global min (real corpora cluster doc length:
-                    # vendored/minified/generated files).
-                    fd = rows["first_doc"].to_numpy(np.int64)
-                    ld = rows["last_doc"].to_numpy(np.int64)
-                    lo = np.searchsorted(t_nids, fd)
-                    hi = np.searchsorted(t_nids, ld, side="right")
-                    dl_min = np.maximum(np.array(
-                        [t_nvals[a:z].min() if z > a else 1.0
-                         for a, z in zip(lo, hi)]), 1.0)
-                else:
-                    dl_min = 1.0
-                ub = _term_ub(idf_map[t],
-                              rows["block_max_tf"].to_numpy(np.float64),
-                              k1, b, t_avgdl, dl_min)
-                ub = ub * (boost_mult or {}).get(t, 1.0)
-                if t in prunable:
-                    ubs[t] = ub
-                spans[t] = (rows["first_doc"].to_numpy(np.int64),
-                            rows["last_doc"].to_numpy(np.int64), ub)
-            m = max(1, -(-2 * k // 128))
-            sel: dict[str, np.ndarray] = {}
-            for t in sorted(prunable):
-                if t in ubs and by_term.get(t) is not None:
-                    keep = np.zeros(len(ubs[t]), dtype=bool)
-                    keep[np.argsort(-ubs[t], kind="stable")[:m]] = True
-                    sel[t] = keep
-            # seed ALIGNMENT (round-5): additionally decode each term's
-            # blocks overlapping the OTHER prunable terms' seed spans —
-            # for AND shapes, disjoint top-UB seeds intersect to nothing,
-            # θ stays -inf, and phase 2 can never prune; aligned seeds
-            # make the phase-1 intersection real.  Extra decode is ≤ a
-            # few blocks per (term, other-seed); θ remains a valid lower
-            # bound (more partial postings only raise computed scores
-            # toward, never past, the truth).
-            extra = {t: np.zeros_like(mask) for t, mask in sel.items()}
-            for t, mask in sel.items():
-                fd_t, ld_t, _ub = spans[t]
-                for u, umask in sel.items():
-                    if u == t:
-                        continue
-                    fd_u, ld_u, _ = spans[u]
-                    for j in np.nonzero(umask)[0]:
-                        lo = np.searchsorted(ld_t, fd_u[j], side="left")
-                        hi = np.searchsorted(fd_t, ld_u[j], side="right")
-                        extra[t][lo:hi] = True
-            phase1: dict[str, tuple] = {}
-            p1mask: dict[str, np.ndarray] = {}
-            full: dict[str, tuple] = {}
-            for t in all_terms:
-                rows = by_term.get(t)
-                if rows is None:
-                    phase1[t] = full[t] = empty
-                elif t not in prunable:
-                    phase1[t] = full[t] = decode_term(
-                        t, rows, np.ones(len(rows), bool))
-                else:
-                    p1mask[t] = sel[t] | extra[t]
-                    phase1[t] = decode_term(t, rows, p1mask[t])
-            p_ids, p_sc = _eval_ast(scored_ast, phase1, allowed_ids, env)
-            if after is not None and not sort_spec:
-                # Sound θ-pool cursor filter (round-6 ADVICE high):
-                # phase-1 scores are PARTIAL, so filtering on them lets
-                # a previous-page doc whose mass sits in an undecoded
-                # block slip under the cursor with an understated score
-                # and inflate θ past the true kth after-cursor score —
-                # the block-aligned phase-2 bound then prunes blocks
-                # holding genuine page docs.  Admit a doc only when its
-                # per-doc UPPER bound (partial score + the UB of its
-                # containing UNDECODED block, per partially-decoded
-                # term) is certainly past the cursor; conservatively
-                # excluded genuine docs only lower θ — less pruning,
-                # never a wrong page.  Each doc's posting for a term
-                # lies in exactly one block (disjoint, docID-sorted), so
-                # the containing block is one searchsorted per term.
-                p_ub = p_sc.copy()
-                for t, mask in p1mask.items():
-                    fd_t, ld_t, ub_t = spans[t]
-                    if not len(fd_t):
-                        continue
-                    idx = np.searchsorted(fd_t, p_ids, side="right") - 1
-                    safe = np.clip(idx, 0, None)
-                    inb = (idx >= 0) & (p_ids <= ld_t[safe]) & ~mask[safe]
-                    p_ub[inb] += ub_t[safe[inb]]
-                pm = (p_ub < after[0]) | ((p_ub == after[0])
-                                          & (p_ids > after[1]))
-                p_ids, p_sc = p_ids[pm], p_sc[pm]
-            theta = float(np.partition(p_sc, -k)[-k]) if len(p_ids) >= k \
-                else -np.inf
-            # phase 2: a block of term t survives unless even its best
-            # doc plus every OTHER scored term's best CO-LOCATED
-            # contribution stays < θ.  Block-ALIGNED cross-term bound
-            # (round-5, true block-max WAND): other terms contribute the
-            # max UB of their blocks OVERLAPPING this block's docID
-            # range, not their corpus-wide max — any doc in the block
-            # takes term u's score from exactly one overlapping u-block,
-            # so the sum bounds every doc's total and pruning stays
-            # safe.  The old global bound (ub + Σ other max UBs) could
-            # never prune multi-term queries: any block plus a hot
-            # term's corpus-wide max always cleared θ.  Blocks are
-            # sorted by first_doc and disjoint per term, so overlap is
-            # two searchsorteds; the window maxima come from per-term
-            # sparse tables (round-6), so the whole bound is
-            # O(terms² · blocks · log blocks) vectorized numpy — no
-            # per-block Python loop in the hot kernel.
-            ub_tabs = {u: _sparse_max(s[2]) for u, s in spans.items()}
-            for t in all_terms:
-                if t in full:
-                    per_term[t] = full[t]
-                    continue
-                rows = by_term[t]
-                fd_t, ld_t, ub_t = spans[t]
-                other = np.zeros(len(ub_t))
-                for u, (fd_u, ld_u, ub_u) in spans.items():
-                    if u == t:
-                        continue
-                    lo = np.searchsorted(ld_u, fd_t, side="left")
-                    hi = np.searchsorted(fd_u, ld_t, side="right")
-                    # sparse-table window maxima (round-6): vectorized
-                    # O(blocks_t) per term pair instead of the old
-                    # per-block Python loop's O(blocks_t · blocks_u)
-                    other += _window_max(ub_tabs[u], lo, hi)
-                keep = (ub_t + other) >= theta
-                # phase-1 decodes are REUSED, not re-decoded (round-5):
-                # phase 2 decodes only surviving blocks phase 1 hasn't
-                # seen and merges the two sorted runs — before this,
-                # every seed block decoded twice per query.  Including a
-                # decoded-but-prunable block is safe (supersets of the
-                # kept postings only move the evaluation toward
-                # exhaustive, which WAND must equal anyway).
-                fresh = keep & ~p1mask[t]
-                if block_acc is not None:
-                    # WAND effectiveness telemetry (round-4 verdict #4):
-                    # candidate blocks vs blocks decoded in total
-                    # (phase-1 seeds + phase-2 survivors)
-                    block_acc[0].add(int(len(keep)))
-                    block_acc[1].add(int((keep | p1mask[t]).sum()))
-                ids2, sc2 = decode_term(t, rows, fresh)
-                ids1, sc1 = phase1[t]
-                if not len(ids2):
-                    per_term[t] = (ids1, sc1)
-                elif not len(ids1):
-                    per_term[t] = (ids2, sc2)
-                else:
-                    ids_c = np.concatenate([ids1, ids2])
-                    sc_c = np.concatenate([sc1, sc2])
-                    order = np.argsort(ids_c, kind="stable")
-                    per_term[t] = (ids_c[order], sc_c[order])
-
-        if scored_ast is None:
-            ids, sc = allowed_ids, np.zeros(len(allowed_ids))
-        else:
-            ids, sc = _eval_ast(scored_ast, per_term, allowed_ids, env)
-
-        n_matches = len(ids)
-        if after is not None:
-            if sort_spec:
-                # field-sort cursor (round-4 verdict #5): after =
-                # (sort values…, doc_id); keep docs strictly LATER in
-                # the (sort keys…, doc_id asc) lexicographic order —
-                # same ≤k-rows-per-shard property as the score cursor
-                dind = docs.set_index("doc_id")
-                tie = np.ones(len(ids), dtype=bool)
-                aft = np.zeros(len(ids), dtype=bool)
-                for i, (f, dsc) in enumerate(sort_spec):
-                    v = ids if f == "doc_id" \
-                        else dind[f].loc[ids].to_numpy()
-                    later = (v < after[i]) if dsc else (v > after[i])
-                    aft |= tie & later
-                    tie &= v == after[i]
-                aft |= tie & (ids > after[-1])
-                ids, sc = ids[aft], sc[aft]
-            else:
-                am = (sc < after[0]) | ((sc == after[0]) & (ids > after[1]))
-                ids, sc = ids[am], sc[am]
-        if k is not None and len(ids) > k:
-            if not sort_spec:
-                ids, sc = _topk_cut(ids, sc, k)
-            else:  # sort override: cogroup mode only (needs the docs side)
-                dind = docs.set_index("doc_id")
-                data = {"doc_id": ids, "score": sc}
-                by, asc = [], []
-                for i, (f, dsc) in enumerate(sort_spec):
-                    data[f"v{i}"] = ids if f == "doc_id" \
-                        else dind[f].loc[ids].to_numpy()
-                    by.append(f"v{i}")
-                    asc.append(not dsc)
-                sel = (pd.DataFrame(data)
-                       .sort_values(by + ["doc_id"],
-                                    ascending=asc + [True],
-                                    kind="mergesort")
-                       .head(k))
-                ids = sel["doc_id"].to_numpy()
-                sc = sel["score"].to_numpy()
-        out = pd.DataFrame({"doc_id": ids.astype(np.int64), "score": sc})
-        out = pd.concat([out, pd.DataFrame(
-            {"doc_id": [-1], "score": [float(n_matches)]})], ignore_index=True)
-        return out
+        ctx = context(key, blocks, docs)
+        return pd.DataFrame(_candidate_rows(*_score_spec(
+            ctx, spec, k, wand=wand, sort_spec=sort_spec, after=after,
+            block_acc=block_acc)))
 
     if cogroup:
         return kernel
-    return lambda key, blocks: kernel(key, blocks, None)
-
-
-def make_batch_kernel(specs: list, shard_width: int, avgdl: float,
-                      fetch: int, deleted: np.ndarray | None = None,
-                      k1: float = BM25_K1, b: float = BM25_B):
-    """Per-shard kernel evaluating MANY queries in one wave (fast path
-    only).  Each term's postings (and each phrase term's positions)
-    decode ONCE per shard; per query only the BM25 scoring (a vector
-    expression over the shared (ids, tfs)) and the AST evaluation re-run.
-    Emits ``(qid, doc_id, score)`` candidate rows (≤ ``fetch`` per query
-    per shard) plus one sentinel row ``(qid, -1, n_matches)`` per query.
-
-    Per-query p95 at small corpora is ~95% fixed Spark job overhead
-    (BENCH/BASELINE.md) — batching amortizes one job over the whole query
-    set, the single biggest headline-latency lever (round-2 verdict #3).
-    WAND pruning is off in batch mode (the shared decode IS the saving);
-    results are bit-identical to ``search()`` since WAND == exhaustive.
-    """
-    union_terms = sorted(set().union(*[set(s["all_terms"]) for s in specs]))
-    phrase_union = sorted(set().union(*[s["phrase_terms"] for s in specs]))
-    any_universe = any(s["needs_universe"] for s in specs)
-    deleted_sorted = np.sort(deleted) \
-        if deleted is not None and len(deleted) else None
-    empty = (np.empty(0, dtype=np.int64), np.empty(0))
-
-    def kernel(key, blocks: pd.DataFrame):
-        base = int(key[0]) * shard_width
-        by_term_all = {t: g.sort_values("first_doc")
-                       for t, g in blocks.groupby("term")} if len(blocks) \
-            else {}
-        by_term = {t: g for t, g in by_term_all.items() if t != NORMS_TERM}
-        nrows = by_term_all.get(NORMS_TERM)
-        if nrows is not None:
-            norm_ids, norm_vals = _decode_blocks_raw(
-                nrows, np.ones(len(nrows), bool), False, base, shard_width,
-                None, None)
-        else:
-            norm_ids = np.empty(0, dtype=np.int64)
-            norm_vals = np.empty(0)
-        raw_cache: dict[str, tuple] = {}
-
-        def raw(t: str):
-            if t not in raw_cache:
-                rows = by_term.get(t)
-                raw_cache[t] = empty if rows is None else _decode_blocks_raw(
-                    rows, np.ones(len(rows), bool), True, base, shard_width,
-                    None, deleted_sorted)
-            return raw_cache[t]
-
-        pos_cache: dict[str, tuple] = {}
-        for t in phrase_union:
-            rows = by_term.get(t)
-            if rows is not None:
-                pos_cache[t] = _decode_blocks_positions(
-                    rows, base, shard_width, None, deleted_sorted)
-        if any_universe:
-            universe = norm_ids.astype(np.int64) if deleted_sorted is None \
-                else norm_ids[~np.isin(norm_ids,
-                                       deleted_sorted)].astype(np.int64)
-        else:
-            universe = np.empty(0, dtype=np.int64)
-
-        frames = []
-        no_ids = np.empty(0, dtype=np.int64)
-        for qi, s in enumerate(specs):
-            per_term: dict[str, tuple] = {}
-            for t in s["all_terms"]:
-                ids, tfs = raw(t)
-                if t in s["zero_terms"] or not len(ids):
-                    per_term[t] = (ids, np.zeros(len(ids)))
-                else:
-                    dls = norm_vals[np.searchsorted(norm_ids, ids)]
-                    idf_t = s["idf_map"][t]
-                    per_term[t] = (ids, idf_t * tfs * (k1 + 1.0)
-                                   / (tfs + k1 * (1 - b + b * dls / avgdl)))
-            env = {"per_term_pos": pos_cache, "idf_map": s["idf_map"],
-                   "norm_ids": norm_ids, "norm_vals": norm_vals,
-                   "universe": universe, "k1": k1, "b": b, "avgdl": avgdl}
-            ids, sc = _eval_ast(s["ast"], per_term, no_ids, env)
-            n_matches = len(ids)
-            if n_matches > fetch:
-                ids, sc = _topk_cut(ids, sc, fetch)
-            frames.append(pd.DataFrame({
-                "qid": np.full(len(ids) + 1, qi, dtype=np.int64),
-                "doc_id": np.concatenate(
-                    [ids.astype(np.int64), np.int64([-1])]),
-                "score": np.concatenate([sc, [float(n_matches)]])}))
-        return pd.concat(frames, ignore_index=True)
-
-    return kernel
+    return lambda key, blocks: kernel(key, blocks)
 
 
 # --------------------------------------------------------------- searcher --
@@ -1379,28 +1366,6 @@ class Searcher:
                 self._df_cache[t] = found.get(t, 0)
         return {t: idf(self.n_docs_total, self._df_cache[t]) for t in terms}
 
-    def _neg_terms(self, node, acc: set, under_not=False):
-        if isinstance(node, Term):
-            if under_not:
-                acc.add(node.term)
-        elif isinstance(node, (And, Or, DisMax, MinMatch)):
-            for c in node.children:
-                self._neg_terms(c, acc, under_not)
-        elif isinstance(node, Not):
-            self._neg_terms(node.child, acc, True)
-        elif isinstance(node, Boost):
-            self._neg_terms(node.child, acc, under_not)
-
-    def _pos_terms(self, node, acc: set):
-        if isinstance(node, Term):
-            acc.add(node.term)
-        elif isinstance(node, (And, Or, DisMax, MinMatch)):
-            for c in node.children:
-                self._pos_terms(c, acc)
-        elif isinstance(node, Boost):
-            self._pos_terms(node.child, acc)
-        # Not children deliberately skipped
-
     # -- prefix expansion (Lucene PrefixQuery rewrite) -----------------------
     def _expand_prefix(self, prefix: str, cap: int = 1024) -> list[str]:
         """prefix → matching index terms, from the (tiny) term_stats table
@@ -1506,16 +1471,6 @@ class Searcher:
             return MinMatch(tuple(self._expand_ast(c)
                                   for c in node.children), node.m)
         return node
-
-    @staticmethod
-    def _const_terms(node, acc: set):
-        if isinstance(node, ConstSet):
-            acc.update(node.terms)
-        elif isinstance(node, (And, Or, DisMax, MinMatch)):
-            for c in node.children:
-                Searcher._const_terms(c, acc)
-        elif isinstance(node, (Not, Boost)):
-            Searcher._const_terms(node.child, acc)
 
     def _postings_scan(self, all_terms, norm_terms,
                        needs_universe: bool) -> DataFrame:
@@ -2137,7 +2092,6 @@ class Searcher:
         fetch = None if k is None else start + k
         eff_spec = [] if (not sort_spec
                           or sort_spec[0][0] == "score") else sort_spec
-        eff_sort = eff_spec[0][0] if eff_spec else None
         if after is not None and eff_spec \
                 and len(after) != len(eff_spec) + 1:
             raise UnsupportedQuery(
@@ -2149,194 +2103,71 @@ class Searcher:
             # back silently empty (round-6 review)
             raise UnsupportedQuery("cursor contains a NULL sort value")
 
-        # ---- path selection ------------------------------------------------
-        # fast path: only the query terms' postings move (norms decode from
-        # the blocks, equality filters become zero-scored field terms,
-        # tombstones broadcast).  cogroup path: ships a filtered doc-store
-        # side per shard — needed for range predicates / sort overrides.
-        filters_as_terms = self._filters_as_field_terms(plan.filters)
-        # any Range surviving planning is the [* TO *] match-all, evaluated
-        # against the shard universe — both paths handle it
-        fast = (eff_sort is None
-                and filters_as_terms is not None
-                and self._deleted_np is not None)
-        zero_terms: set[str] = set()
-        kernel_ast = plan.scored_ast
-        if fast and filters_as_terms:
-            conjuncts = list(plan.scored_ast.children) \
-                if isinstance(plan.scored_ast, And) else [plan.scored_ast]
-            for kind, ft in filters_as_terms:
-                node = Term(ft)
-                conjuncts.append(Not(node) if kind == "neg" else node)
-                zero_terms.add(ft)
-            kernel_ast = And(tuple(conjuncts))
-
-        if kernel_ast is not None:
-            kernel_ast = self._expand_ast(kernel_ast)
-        neg: set[str] = set()
-        self._neg_terms(kernel_ast, neg)
-        pos: set[str] = set()
-        self._pos_terms(kernel_ast, pos)
-        phrase_terms: set[str] = set()
-        _collect_phrase_terms(kernel_ast, phrase_terms)
-        if phrase_terms and not self.positions:
-            raise UnsupportedQuery(
-                "phrase query against an index built with positions=False"
-                " (Lucene IndexOptions.DOCS_AND_FREQS)")
-        const_terms: set[str] = set()
-        self._const_terms(kernel_ast, const_terms)
-        all_terms = sorted(pos | neg | phrase_terms | const_terms)
-        # nested metadata equality was rewritten to field terms ("lang=en")
-        # by the planner — they filter but never score, in either path
-        # (Solr fq semantics) UNLESS the caller opted into scored field
-        # terms (MoreLikeThis similarity over mlt.fl metadata fields —
-        # round-7 review: zero-scoring degenerated that ranking to
-        # doc_id order)
-        from .build import FIELD_TERMS
-        if not score_field_terms:
-            zero_terms |= {t for t in all_terms
-                           if "=" in t and t.split("=", 1)[0]
-                           in FIELD_TERMS}
-        # prefix-expanded terms used ONLY constant-score skip idf/scoring in
-        # decode; a term that is also scored elsewhere stays scored (the
-        # ConstSet leg zeroes itself at eval time either way)
-        zero_terms |= const_terms - pos - neg - phrase_terms
-        # terms appearing ONLY under NOT contribute doc-id sets, never
-        # scores (And-exclusion and Or-complement legs read ids alone), so
-        # they are zero-scored: decode then never touches the norms sidecar
-        # for them, keeping the norms semi-join pruning sound — a shard
-        # whose only blocks belong to a negated term carries no norms rows,
-        # and BM25-scoring there would IndexError (round-2 advice)
-        zero_terms |= neg - pos - phrase_terms
-        # df is fetched for EVERY term (one tiny pruned lookup): scoring
-        # terms need idf, and the k=None bulk path gates its broadcast on
-        # the Σdf union bound over all contributing terms
-        idf_map = self._idf_map(all_terms)
-        needs_universe = _needs_universe(kernel_ast)
-
-        W = self.shard_width
-        norm_terms = sorted((pos | phrase_terms) - zero_terms)
-        postings = self._postings_scan(all_terms, norm_terms, needs_universe)
+        spec = self._plan_spec(plan, field_sort=bool(eff_spec),
+                               score_field_terms=score_field_terms)
         # exact numFound requires evaluating every block — WAND's whole
         # point is to skip blocks, so counting disables it (Lucene likewise
-        # only reports exact totals when pruning is off).  A sort override
-        # also disables it: score upper bounds say nothing about which docs
-        # win on an arbitrary sort field.
-        boost_mult: dict = {}
-        _boost_mults(kernel_ast, boost_mult)
-        boost_mult = {t: w for t, w in boost_mult.items() if w != 1.0}
-        kernel = make_search_kernel(
-            kernel_ast, idf_map, pos, neg, zero_terms, fetch, W, self.avgdl,
-            (wand and not with_count and eff_sort is None
-             and not phrase_terms and not needs_universe),
-            eff_spec or None, deleted=self._deleted_np if fast else None,
-            cogroup=not fast, phrase_terms=phrase_terms,
-            needs_universe=needs_universe, boost_mult=boost_mult,
-            after=after, block_acc=getattr(self, "_wand_acc", None),
-            avgdl_by_field=self.field_avgdl)
-        if fast:
-            cand = (postings.groupBy("shard")
-                    .applyInPandas(kernel, "doc_id long, score double"))
-        else:
-            doc_cols = ["doc_id"]
-            for f, _d in eff_spec:
-                if f not in doc_cols:
-                    doc_cols.append(f)
-            docs_side = (docs_f.select(*doc_cols)
-                         .withColumn("shard", F.expr(f"doc_id DIV {W}")))
-            cand = (
-                postings.groupBy("shard")
-                .cogroup(docs_side.groupBy("shard"))
-                .applyInPandas(kernel, "doc_id long, score double")
-            )
-        extra = [f for f, _d in eff_spec
-                 if f not in ("repo", "path", "commit", "doc_id")]
-        out_schema = ("doc_id long, repo string, path string, commit string,"
-                      " score double")
-        if keep_sort_cols and extra:
-            # cursor paging over a field sort (search_after) reads the
-            # last row's sort values to build the next cursor — carry
-            # the sort columns through the output schema
-            dtypes = dict(self.docs.dtypes)
-            out_schema += "".join(f", {f} {dtypes[f]}" for f in extra)
+        # only reports exact totals when pruning is off)
+        cand = self._candidates([spec], fetch, wand=wand and not with_count,
+                                sort_spec=eff_spec or None, after=after,
+                                docs_f=docs_f)
+        if k is not None and not eff_spec:
+            ((rows, num_found),) = self._merge_fetch(cand, 1, start, k)
+            df = local_df(self.spark, rows, self._OUT_SCHEMA)
+            return (df, num_found) if with_count else df
 
         if k is not None:
-            # Q9, bounded: per-shard candidates are ≤ fetch rows each —
-            # below COLLECT_CAP the driver merges them directly (one job)
-            # and fetches ONLY those docs from the store (isin row-group
-            # pruning on doc_id-ordered files).  Past the cap (huge shard
-            # counts) an executor-side merge — TakeOrdered for score
-            # order, an in-cluster join+sort for field sorts — keeps the
-            # driver at O(start+k) rows regardless of shard count.
-            n_shards = -(-self.n_docs_total // W)
-            big = n_shards * (fetch + 1) > self.COLLECT_CAP
+            # field sort: each shard ships its first ``fetch`` candidates by
+            # the sort keys, UNCUT across shards (≤ fetch·shards ids); the
+            # doc fetch sorts and cuts to start+k executor-side — an
+            # in-cluster join+sort past COLLECT_CAP — so the driver only
+            # ever collects O(start + k) rows
+            extra = [f for f, _d in eff_spec
+                     if f not in ("repo", "path", "commit", "doc_id")]
+            tail = extra if keep_sort_cols else []
+            out_schema = self._OUT_SCHEMA
+            if tail:
+                # cursor paging over a field sort (search_after) reads the
+                # last row's sort values to build the next cursor — carry
+                # the sort columns through the output schema
+                dtypes = dict(self.docs.dtypes)
+                out_schema += "".join(f", {f} {dtypes[f]}" for f in tail)
+            n_shards = -(-self.n_docs_total // self.shard_width)
             num_found = None
-            if big:
+            score_by_id = None
+            if n_shards * (fetch + 1) > self.COLLECT_CAP:
                 self._last_collect_strategy = "distributed_cut"
                 if with_count:
                     cand = cand.persist()
                     num_found = int(
                         cand.filter(F.col("doc_id") == -1)
                         .agg(F.sum("score")).collect()[0][0] or 0)
-                hits_df = cand.filter(F.col("doc_id") >= 0)
-                if eff_sort is not None:
-                    keys = [F.col(f).desc() if dsc else F.col(f).asc()
-                            for f, dsc in eff_spec]
-                    sel = (self.docs.join(hits_df, "doc_id")
-                           .select("doc_id", "repo", "path", "commit",
-                                   "score", *extra)
-                           .orderBy(*keys, F.asc("doc_id")).limit(fetch))
-                    fetched = [r.asDict() for r in sel.collect()][start:]
-                    if with_count:
-                        cand.unpersist()
-                    cols = ["doc_id", "repo", "path", "commit", "score"] \
-                        + (extra if keep_sort_cols else [])
-                    out = [tuple(r[c] for c in cols) for r in fetched]
-                    df = local_df(self.spark, out, out_schema)
-                    return (df, num_found) if with_count else df
-                hits = [(r["doc_id"], r["score"]) for r in
-                        hits_df.orderBy(F.desc("score"), F.asc("doc_id"))
-                        .limit(fetch).collect()]
-                hits = hits[start:start + k]
-                if with_count:
-                    cand.unpersist()
+                src = self.docs.join(cand.filter(F.col("doc_id") >= 0),
+                                     "doc_id").select(
+                    "doc_id", "repo", "path", "commit", "score", *extra)
             else:
                 self._last_collect_strategy = "driver_merge"
                 rows = cand.collect()
                 num_found = int(sum(r["score"] for r in rows
                                     if r["doc_id"] == -1))
-                hits = [(r["doc_id"], r["score"]) for r in rows
-                        if r["doc_id"] >= 0]
-                if eff_sort is None:
-                    hits.sort(key=lambda t: (-t[1], t[0]))
-                    hits = hits[start:start + k]
-            if not hits:
-                empty = local_df(self.spark, [], out_schema)
-                return (empty, num_found) if with_count else empty
-            ids = [h[0] for h in hits]
-            score_by_id = dict(hits)
-            # doc fetch: the sort-override path carries UNCUT candidates
-            # (≤ fetch·shards ids — at 125k shards a ~10^6-element In
-            # predicate blows up the plan; round-2 verdict #6) — see
-            # _fetch_by_ids for the isin/broadcast choice.
-            sel = self._fetch_by_ids(ids).select(
-                "doc_id", "repo", "path", "commit", *extra)
-            if eff_sort:
-                # cut to start+k INSIDE the job (executor-side sort of the
-                # ≤ fetch·shards candidates) — the driver only ever
-                # collects O(start + k) rows
-                keys = [F.col(f).desc() if dsc else F.col(f).asc()
-                        for f, dsc in eff_spec]
-                sel = sel.orderBy(*keys, F.asc("doc_id")).limit(start + k)
-            fetched = [r.asDict() for r in sel.collect()]
-            if eff_sort:
-                fetched = fetched[start:start + k]
-            else:
-                fetched.sort(
-                    key=lambda r: (-score_by_id[r["doc_id"]], r["doc_id"]))
-            tail = extra if keep_sort_cols else []
+                score_by_id = {r["doc_id"]: r["score"] for r in rows
+                               if r["doc_id"] >= 0}
+                if not score_by_id:
+                    empty = local_df(self.spark, [], out_schema)
+                    return (empty, num_found) if with_count else empty
+                # a ~10^6-element In predicate blows up the plan at 125k
+                # shards (round-2 verdict #6) — see _fetch_by_ids
+                src = self._fetch_by_ids(list(score_by_id)).select(
+                    "doc_id", "repo", "path", "commit", *extra)
+            keys = [F.col(f).desc() if dsc else F.col(f).asc()
+                    for f, dsc in eff_spec]
+            sel = src.orderBy(*keys, F.asc("doc_id")).limit(fetch)
+            fetched = sel.collect()[start:]
+            if with_count and score_by_id is None:
+                cand.unpersist()
             out = [(r["doc_id"], r["repo"], r["path"], r["commit"],
-                    score_by_id[r["doc_id"]], *[r[c] for c in tail])
+                    r["score"] if score_by_id is None
+                    else score_by_id[r["doc_id"]], *[r[c] for c in tail])
                    for r in fetched]
             df = local_df(self.spark, out, out_schema)
             return (df, num_found) if with_count else df
@@ -2352,8 +2183,8 @@ class Searcher:
         if with_count:
             cand = cand.persist()
             hits_df = cand.filter(F.col("doc_id") >= 0)
-        est_matches = sum(self._df_cache.get(t, 0) for t in all_terms)
-        self._last_bulk_broadcast = (not needs_universe
+        est_matches = sum(self._df_cache.get(t, 0) for t in spec.all_terms)
+        self._last_bulk_broadcast = (not spec.needs_universe
                                      and est_matches <= self.BROADCAST_DOC_CAP)
         if self._last_bulk_broadcast:
             hits_df = F.broadcast(hits_df)
@@ -2370,51 +2201,182 @@ class Searcher:
             return df, num_found
         return joined
 
-    # -- batch execution ------------------------------------------------------
-    def _plan_fast_spec(self, q) -> dict | None:
-        """Plan one query into a batch-kernel spec, or None when the query
-        needs the cogroup / match-all machinery (range filters, pure
-        filter queries, oversized tombstone sets) and must run serially."""
-        plan = plan_query(q)
-        if plan.match_all:
-            return None
+    # -- query pipeline: planner → kernel wave → merge + fetch ---------------
+    def _plan_spec(self, plan: Plan, field_sort: bool = False,
+                   score_field_terms: bool = False) -> QuerySpec:
+        """The one query planner (``search``, ``search_batch``): a scored
+        plan (not match-all) → the :class:`QuerySpec` the per-shard core
+        evaluates.
+
+        Path choice — fast path: only the query terms' postings move
+        (norms decode from the blocks, equality filters become zero-scored
+        field terms, tombstones broadcast).  Cogroup path: ships a
+        filtered doc-store side per shard — needed for range predicates,
+        sort overrides and oversized tombstone sets."""
+        from .build import FIELD_TERMS
+
         filters_as_terms = self._filters_as_field_terms(plan.filters)
-        if filters_as_terms is None or self._deleted_np is None:
-            return None
-        zero_terms: set[str] = set()
-        kernel_ast = plan.scored_ast
-        if filters_as_terms:
-            conjuncts = list(kernel_ast.children) \
-                if isinstance(kernel_ast, And) else [kernel_ast]
+        # any Range surviving planning is the [* TO *] match-all, evaluated
+        # against the shard universe — both paths handle it
+        fast = (not field_sort and filters_as_terms is not None
+                and self._deleted_np is not None)
+        zero: set[str] = set()
+        ast = plan.scored_ast
+        if fast and filters_as_terms:
+            conjuncts = list(ast.children) if isinstance(ast, And) else [ast]
             for kind, ft in filters_as_terms:
                 node = Term(ft)
                 conjuncts.append(Not(node) if kind == "neg" else node)
-                zero_terms.add(ft)
-            kernel_ast = And(tuple(conjuncts))
-        kernel_ast = self._expand_ast(kernel_ast)
-        neg: set[str] = set()
-        self._neg_terms(kernel_ast, neg)
-        pos: set[str] = set()
-        self._pos_terms(kernel_ast, pos)
-        phrase_terms: set[str] = set()
-        _collect_phrase_terms(kernel_ast, phrase_terms)
-        if phrase_terms and not self.positions:
+                zero.add(ft)
+            ast = And(tuple(conjuncts))
+        ast = self._expand_ast(ast)
+        sets = _term_sets(ast)
+        pos, neg, phrase, const = (sets["pos"], sets["neg"], sets["phrase"],
+                                   sets["const"])
+        if phrase and not self.positions:
             raise UnsupportedQuery(
-                "phrase query against an index built with positions=False")
-        const_terms: set[str] = set()
-        self._const_terms(kernel_ast, const_terms)
-        all_terms = sorted(pos | neg | phrase_terms | const_terms)
-        from .build import FIELD_TERMS
-        zero_terms |= {t for t in all_terms
-                       if "=" in t and t.split("=", 1)[0] in FIELD_TERMS}
-        zero_terms |= const_terms - pos - neg - phrase_terms
-        zero_terms |= neg - pos - phrase_terms
-        idf_map = self._idf_map(all_terms)
-        return {"ast": kernel_ast, "all_terms": all_terms,
-                "zero_terms": zero_terms, "phrase_terms": phrase_terms,
-                "idf_map": idf_map,
-                "norm_terms": sorted((pos | phrase_terms) - zero_terms),
-                "needs_universe": _needs_universe(kernel_ast)}
+                "phrase query against an index built with positions=False"
+                " (Lucene IndexOptions.DOCS_AND_FREQS)")
+        all_terms = sorted(pos | neg | phrase | const)
+        # nested metadata equality was rewritten to field terms ("lang=en")
+        # by the planner — they filter but never score, in either path
+        # (Solr fq semantics) UNLESS the caller opted into scored field
+        # terms (MoreLikeThis similarity over mlt.fl metadata fields —
+        # round-7 review: zero-scoring degenerated that ranking to
+        # doc_id order)
+        if not score_field_terms:
+            zero |= {t for t in all_terms
+                     if "=" in t and t.split("=", 1)[0] in FIELD_TERMS}
+        # prefix-expanded terms used ONLY constant-score skip idf/scoring in
+        # decode; a term that is also scored elsewhere stays scored (the
+        # ConstSet leg zeroes itself at eval time either way)
+        zero |= const - pos - neg - phrase
+        # terms appearing ONLY under NOT contribute doc-id sets, never
+        # scores (And-exclusion and Or-complement legs read ids alone), so
+        # they are zero-scored: decode then never touches the norms sidecar
+        # for them, keeping the norms semi-join pruning sound — a shard
+        # whose only blocks belong to a negated term carries no norms rows,
+        # and BM25-scoring there would IndexError (round-2 advice)
+        zero |= neg - pos - phrase
+        boost_mult: dict = {}
+        _boost_mults(ast, boost_mult)
+        return QuerySpec(
+            ast=ast, fast=fast, pos=pos, neg=neg, zero=zero, phrase=phrase,
+            eval_terms=sorted(pos | neg | const), all_terms=all_terms,
+            norm_terms=sorted((pos | phrase) - zero),
+            # df is fetched for EVERY term (one tiny pruned lookup):
+            # scoring terms need idf, and the k=None bulk path gates its
+            # broadcast on the Σdf union bound over all contributing terms
+            idf_map=self._idf_map(all_terms),
+            needs_universe=_needs_universe(ast),
+            boost_mult={t: w for t, w in boost_mult.items() if w != 1.0})
+
+    def _candidates(self, specs: list, fetch: int | None, wand: bool = False,
+                    sort_spec: list | None = None,
+                    after: tuple | None = None,
+                    docs_f: DataFrame | None = None,
+                    batch: bool = False) -> DataFrame:
+        """One kernel wave over planned queries → per-shard candidate rows
+        (:func:`make_search_kernel`): ONE postings scan over the specs'
+        union term set grouped by shard, cogrouped with the filtered doc
+        store ``docs_f`` off the fast path."""
+        W = self.shard_width
+        fast = all(s.fast for s in specs)
+        postings = self._postings_scan(
+            sorted(set().union(*(s.all_terms for s in specs))),
+            sorted(set().union(*(s.norm_terms for s in specs))),
+            any(s.needs_universe for s in specs))
+        kernel = make_search_kernel(
+            specs, fetch, W, self.field_avgdl, wand=wand,
+            sort_spec=sort_spec, deleted=self._deleted_np if fast else None,
+            cogroup=not fast, batch=batch, after=after,
+            block_acc=getattr(self, "_wand_acc", None))
+        schema = ("qid long, " if batch else "") + "doc_id long, score double"
+        if fast:
+            return postings.groupBy("shard").applyInPandas(kernel, schema)
+        doc_cols = list(dict.fromkeys(
+            ["doc_id"] + [f for f, _d in sort_spec or []]))
+        docs_side = (docs_f.select(*doc_cols)
+                     .withColumn("shard", F.expr(f"doc_id DIV {W}")))
+        return (postings.groupBy("shard")
+                .cogroup(docs_side.groupBy("shard"))
+                .applyInPandas(kernel, schema))
+
+    def _merge_fetch(self, cand: DataFrame, n_queries: int, start: int,
+                     k: int) -> list:
+        """Score-ordered pages from per-shard candidates — the ONE merge +
+        fetch of ``search`` and ``search_batch`` (Q9, bounded).  Each shard
+        ships ≤ start+k candidates per query: below COLLECT_CAP the driver
+        merges them directly (one job); past it (huge shard counts) an
+        executor-side cut runs first, so the driver collects O(start+k)
+        rows per query however many shards exist.  Then ONE doc fetch for
+        every page's ids (isin row-group pruning on doc_id-ordered files).
+        ``cand`` rows carry ``qid`` when batched.
+        → per query ``(rows, num_found)``."""
+        from collections import defaultdict
+
+        fetch = start + k
+        if "qid" not in cand.columns:
+            cand = cand.withColumn("qid", F.lit(0).cast("long"))
+        n_shards = -(-self.n_docs_total // self.shard_width)
+        if n_shards * n_queries * (fetch + 1) > self.COLLECT_CAP:
+            self._last_collect_strategy = "distributed_cut"
+            cand = cand.persist()
+            hits = cand.filter(F.col("doc_id") >= 0)
+            okeys = (F.desc("score"), F.asc("doc_id"))
+            if n_queries == 1:
+                top = hits.orderBy(*okeys).limit(fetch)    # TakeOrdered
+            else:
+                # per-query cut, TWO-LEVEL: level 1 cuts per (qid,
+                # doc_id % CUT_FANIN) so one query's candidates spread
+                # over CUT_FANIN tasks (a row in the global top-fetch is
+                # in its salt group's top-fetch — the cut is a superset,
+                # level 2 is exact); level 2 then sees at most
+                # CUT_FANIN·fetch rows per qid
+                from pyspark.sql import Window as _W
+
+                salted = hits.withColumn(
+                    "salt", (F.col("doc_id") % self.CUT_FANIN).cast("int"))
+                w1 = _W.partitionBy("qid", "salt").orderBy(*okeys)
+                w2 = _W.partitionBy("qid").orderBy(*okeys)
+                top = (salted.withColumn("rn", F.row_number().over(w1))
+                       .filter(F.col("rn") <= fetch).drop("rn", "salt")
+                       .withColumn("rn", F.row_number().over(w2))
+                       .filter(F.col("rn") <= fetch).drop("rn"))
+                if getattr(self, "_cut_debug", False):
+                    lvl1 = (salted.groupBy("qid", "salt").count()
+                            .agg(F.max("count")).collect()[0][0])
+                    per_q = (hits.groupBy("qid").count()
+                             .agg(F.max("count")).collect()[0][0])
+                    self._last_cut_stats = (int(lvl1 or 0), int(per_q or 0))
+            # the per-shard count rows pre-aggregate executor-side instead
+            # of shipping n_shards·n_queries rows
+            cnt = (cand.filter(F.col("doc_id") == -1).groupBy("qid")
+                   .agg(F.sum("score").alias("score"))
+                   .select("qid", F.lit(-1).cast("long").alias("doc_id"),
+                           "score"))
+            rows = top.unionByName(cnt).collect()
+            cand.unpersist()
+        else:
+            self._last_collect_strategy = "driver_merge"
+            rows = cand.collect()
+        per_hits: dict[int, list] = defaultdict(list)
+        per_n: dict[int, float] = defaultdict(float)
+        for r in rows:
+            if r["doc_id"] == -1:
+                per_n[r["qid"]] += r["score"]
+            else:
+                per_hits[r["qid"]].append((r["doc_id"], r["score"]))
+        pages = [sorted(per_hits[q], key=lambda t: (-t[1], t[0]))[start:fetch]
+                 for q in range(n_queries)]
+        ids = sorted({d for page in pages for d, _s in page})
+        meta: dict[int, object] = {}
+        if ids:
+            meta = {r["doc_id"]: r for r in self._fetch_by_ids(ids)
+                    .select("doc_id", "repo", "path", "commit").collect()}
+        return [([(d, meta[d]["repo"], meta[d]["path"], meta[d]["commit"], s)
+                  for d, s in page if d in meta], int(per_n[q]))
+                for q, page in enumerate(pages)]
 
     def search_batch(self, queries: list, k: int = 10, start: int = 0,
                      with_count: bool = False) -> list:
@@ -2425,108 +2387,33 @@ class Searcher:
         N queries instead of 2N — per-query latency at real corpus sizes
         is ~95% fixed job overhead, so the suite wall collapses.
 
-        Results are bit-identical to per-query ``search()`` (verified in
-        tests).  Queries outside the fast path (match-all, range filters)
-        transparently fall back to serial execution.  Returns a list
-        aligned with ``queries``: DataFrames, or (DataFrame, num_found)
-        tuples when ``with_count`` (counts are exact — the batch kernel
-        decodes fully, WAND is off by design)."""
-        from collections import defaultdict
-
+        Same planner, per-shard core and merge + fetch as ``search()``, so
+        results are bit-identical to per-query ``search()`` — on classic
+        and multi-field indexes alike (``test_search_batch_bit_identical``,
+        ``test_dismax.py::test_batch_equals_serial_two_fields``).  Queries
+        outside the fast path (match-all, range filters) transparently fall
+        back to serial execution.  Returns a list aligned with ``queries``:
+        DataFrames, or (DataFrame, num_found) tuples when ``with_count``
+        (counts are exact — the batch kernel decodes fully, WAND is off by
+        design)."""
         specs, order = [], []
         results: dict[int, object] = {}
         for i, q in enumerate(queries):
-            spec = self._plan_fast_spec(q)
-            if spec is None:
+            plan = plan_query(q)
+            spec = None if plan.match_all else self._plan_spec(plan)
+            if spec is None or not spec.fast:
                 results[i] = self.search(q, k=k, start=start,
                                          with_count=with_count)
             else:
                 order.append(i)
                 specs.append(spec)
-        with self._no_aqe():
-            if specs:
-                union_terms = sorted(set().union(
-                    *[set(s["all_terms"]) for s in specs]))
-                union_norm = sorted(set().union(
-                    *[set(s["norm_terms"]) for s in specs]))
-                any_universe = any(s["needs_universe"] for s in specs)
-                postings = self._postings_scan(union_terms, union_norm,
-                                               any_universe)
-                fetch = start + k
-                kernel = make_batch_kernel(specs, self.shard_width, self.avgdl,
-                                           fetch, deleted=self._deleted_np)
-                cand = postings.groupBy("shard").applyInPandas(
-                    kernel, "qid long, doc_id long, score double")
-                n_shards = -(-self.n_docs_total // self.shard_width)
-                if n_shards * len(specs) * (fetch + 1) > self.COLLECT_CAP:
-                    # executor-side per-query cut, TWO-LEVEL: level 1 cuts per
-                    # (qid, doc_id % CUT_FANIN) so one query's candidates
-                    # spread over CUT_FANIN tasks (a row in the global
-                    # top-fetch is in its salt group's top-fetch — the cut is
-                    # a superset, level 2 is exact); level 2 then sees at most
-                    # CUT_FANIN·fetch rows per qid.  The driver collects only
-                    # O(fetch) rows per query however many shards exist, and
-                    # the per-shard count rows pre-aggregate executor-side
-                    # instead of shipping n_shards·n_queries rows.
-                    from pyspark.sql import Window as _W
-
-                    self._last_collect_strategy = "distributed_cut"
-                    cand = cand.persist()
-                    hits = cand.filter(F.col("doc_id") >= 0)
-                    salted = hits.withColumn(
-                        "salt", (F.col("doc_id") % self.CUT_FANIN).cast("int"))
-                    okeys = (F.desc("score"), F.asc("doc_id"))
-                    w1 = _W.partitionBy("qid", "salt").orderBy(*okeys)
-                    w2 = _W.partitionBy("qid").orderBy(*okeys)
-                    hits_part = (
-                        salted.withColumn("rn", F.row_number().over(w1))
-                        .filter(F.col("rn") <= fetch).drop("rn", "salt")
-                        .withColumn("rn", F.row_number().over(w2))
-                        .filter(F.col("rn") <= fetch).drop("rn"))
-                    if getattr(self, "_cut_debug", False):
-                        lvl1 = (salted.groupBy("qid", "salt").count()
-                                .agg(F.max("count")).collect()[0][0])
-                        per_q = (hits.groupBy("qid").count()
-                                 .agg(F.max("count")).collect()[0][0])
-                        self._last_cut_stats = (int(lvl1 or 0), int(per_q or 0))
-                    cnt = (cand.filter(F.col("doc_id") == -1)
-                           .groupBy("qid")
-                           .agg(F.sum("score").alias("score"))
-                           .select("qid",
-                                   F.lit(-1).cast("long").alias("doc_id"),
-                                   "score"))
-                    rows = hits_part.unionByName(cnt).collect()
-                    cand.unpersist()
-                else:
-                    self._last_collect_strategy = "driver_merge"
-                    rows = cand.collect()
-                per_hits: dict[int, list] = defaultdict(list)
-                per_n: dict[int, float] = defaultdict(float)
-                for r in rows:
-                    if r["doc_id"] == -1:
-                        per_n[r["qid"]] += r["score"]
-                    else:
-                        per_hits[r["qid"]].append((r["doc_id"], r["score"]))
-                finals: dict[int, list] = {}
-                need_ids: set[int] = set()
-                for j in range(len(specs)):
-                    hits = per_hits.get(j, [])
-                    hits.sort(key=lambda t: (-t[1], t[0]))
-                    hits = hits[start:start + k]
-                    finals[j] = hits
-                    need_ids.update(h[0] for h in hits)
-                meta: dict[int, dict] = {}
-                if need_ids:
-                    meta = {r["doc_id"]: r for r in
-                            self._fetch_by_ids(sorted(need_ids))
-                            .select("doc_id", "repo", "path",
-                                    "commit").collect()}
-                for j, i in enumerate(order):
-                    out = [(d, meta[d]["repo"], meta[d]["path"],
-                            meta[d]["commit"], s) for d, s in finals[j]]
-                    df = local_df(self.spark, out, self._OUT_SCHEMA)
-                    results[i] = (df, int(per_n.get(j, 0))) if with_count \
-                        else df
+        if specs:
+            with self._no_aqe():
+                cand = self._candidates(specs, start + k, batch=True)
+                pages = self._merge_fetch(cand, len(specs), start, k)
+            for i, (rows, n) in zip(order, pages):
+                df = local_df(self.spark, rows, self._OUT_SCHEMA)
+                results[i] = (df, n) if with_count else df
         return [results[i] for i in range(len(queries))]
 
     def _match_all(self, docs_f: DataFrame, k, start, sort_spec,
