@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
+from .session import worker_task
+
 TOKEN_RE = r"[a-z0-9]+"
 
 
@@ -33,6 +35,7 @@ def tokenize_py(text: str) -> list[str]:
 
 
 @pandas_udf(ArrayType(StringType()))
+@worker_task
 def tokenize_arrow(content: pd.Series) -> pd.Series:
     # vectorized pandas .str path — one regex pass per Arrow batch,
     # no per-row Python function calls

@@ -49,6 +49,7 @@ from .analyze import tokenize_arrow, tokenize_codegen
 from .catalog import ManifestParquetCatalog
 from .corpus import read_corpus
 from .docids import assign_doc_ids
+from .session import worker_task
 
 POSTINGS_SCHEMA = StructType([
     StructField("term", StringType()),
@@ -251,7 +252,7 @@ def tokd_to_tf(tokd: DataFrame, n_buckets: int,
     queries against such an index raise UnsupportedQuery."""
     empty_pos = F.array().cast("array<int>")
     tok_tf = tokd.select("doc_id", "toks").mapInArrow(
-        _doc_tf_mapper(positions),
+        worker_task(_doc_tf_mapper(positions)),
         "term string, doc_id long, tf long, positions array<int>")
     extra = tokd.select(F.lit(NORMS_TERM).alias("term"), "doc_id",
                         F.col("doc_len").alias("tf"),
@@ -275,7 +276,7 @@ def tokd_to_tf(tokd: DataFrame, n_buckets: int,
         pfx = scored_term(fld, "")
         fpart = (
             tokd.select("doc_id", F.col(f"{fld}_toks").alias("toks"))
-            .mapInArrow(_doc_tf_mapper(positions),
+            .mapInArrow(worker_task(_doc_tf_mapper(positions)),
                         "term string, doc_id long, tf long,"
                         " positions array<int>")
             .select(F.concat(F.lit(pfx), F.col("term")).alias("term"),
@@ -541,7 +542,7 @@ class IndexBuilder:
             # Arrow boundary (see _encode_mapper)
             blocks = (
                 grouped_postings(tf)
-                .mapInArrow(encode_batches, POSTINGS_SCHEMA)
+                .mapInArrow(worker_task(encode_batches), POSTINGS_SCHEMA)
             )
             # layout shuffle of compressed blocks only: one hash partition
             # per bucket, term-clustered inside each file

@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructType
 
+from .session import worker_task
+
 SORT_KEY = ["repo", "path", "commit"]
 
 
@@ -79,7 +81,7 @@ def assign_doc_ids(corpus: DataFrame, num_partitions: int | None = None) -> Data
                        type=pa.int64())))
             base += n
 
-    tagged = part.mapInArrow(tag, tag_schema).persist(
+    tagged = part.mapInArrow(worker_task(tag), tag_schema).persist(
         StorageLevel.MEMORY_AND_DISK)
     counts = tagged.groupBy("_pid").count().collect()
     by_pid = {r["_pid"]: r["count"] for r in counts}

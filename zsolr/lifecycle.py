@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from .build import BuildConfig, IndexBuilder
 from .catalog import ManifestParquetCatalog
 from .docids import assign_doc_ids
+from .session import worker_task
 
 
 def _op_meta(op: str) -> dict:
@@ -466,7 +467,7 @@ def _append_partial_index(spark: SparkSession, cat: ManifestParquetCatalog,
     encode = builder._encode_mapper(width)
     from .build import POSTINGS_SCHEMA, grouped_postings
     blocks = (grouped_postings(delta_tf.withColumn("salt", F.lit(0)))
-              .mapInArrow(encode, POSTINGS_SCHEMA)
+              .mapInArrow(worker_task(encode), POSTINGS_SCHEMA)
               .repartition(cfg.n_buckets, "bucket")
               .sortWithinPartitions("term", "first_doc"))
     staged_blocks = cat.stage(blocks, "postings", partition_by=["bucket"])
@@ -515,7 +516,7 @@ def compact(spark: SparkSession, cat: ManifestParquetCatalog):
     from .build import POSTINGS_SCHEMA, grouped_postings
     tfs = cat.read(spark, "tfs")
     blocks = (grouped_postings(tfs.withColumn("salt", F.lit(0)))
-              .mapInArrow(encode, POSTINGS_SCHEMA)
+              .mapInArrow(worker_task(encode), POSTINGS_SCHEMA)
               .repartition(cfg.n_buckets, "bucket")
               .sortWithinPartitions("term", "first_doc"))
     cat.write(blocks, "postings", mode="overwrite", partition_by=["bucket"],

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .analyze import tokenize_codegen
+from .session import worker_task
 
 STOPWORDS = ("the", "a")
 
@@ -197,7 +198,7 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     Pass ``max_bucket=None`` to disable explicitly."""
     sig = (_spread(docs.select(F.col(id_col).alias("doc_id"),
                                F.col(text_col).alias("_txt")))
-           .mapInArrow(_minhash_sig_mapper(n_hashes),
+           .mapInArrow(worker_task(_minhash_sig_mapper(n_hashes)),
                        "doc_id long, " + ", ".join(
                            f"mh{k} long" for k in range(n_hashes))))
     band_structs = []
@@ -414,7 +415,7 @@ def simhash32(docs: DataFrame, text_col: str = "text",
 
     return (_spread(docs.select(F.col(id_col).alias("doc_id"),
                                 F.col(text_col).alias("_txt")))
-            .mapInArrow(gen, "doc_id long, simhash long"))
+            .mapInArrow(worker_task(gen), "doc_id long, simhash long"))
 
 
 # ----------------------------------------------------- similarity search ---
@@ -526,7 +527,7 @@ def _with_buckets(src: DataFrame, bands: list, prefixes: list) -> DataFrame:
     out_schema = StructType(list(src.schema.fields)
                             + [StructField("bucket", StringType())])
     return _spread(src).mapInArrow(
-        _hyperplane_bucket_mapper(bands, prefixes), out_schema)
+        worker_task(_hyperplane_bucket_mapper(bands, prefixes)), out_schema)
 
 
 def lsh_bucket_topk(embeddings: DataFrame, query_vec: list[float],
@@ -840,7 +841,7 @@ def token_budget_cut(docs: DataFrame, budget: int,
             run += int(pdf[tok_col].sum())
             yield pdf[csum <= budget]
 
-    return part.mapInPandas(cut, schema)
+    return part.mapInPandas(worker_task(cut), schema)
 
 
 def build_training_set(docs: DataFrame, *, text_col: str = "text",
@@ -986,7 +987,8 @@ def media_features(docs: DataFrame, text_col: str = "text",
             })
 
     return payload.mapInPandas(
-        kernel, "doc_id long, n_bytes long, width long, height long")
+        worker_task(kernel),
+        "doc_id long, n_bytes long, width long, height long")
 
 
 def media_decode_stub(payload: bytes) -> np.ndarray:

@@ -1,24 +1,30 @@
 """BM25 top-k query engine (SURVEY.md §2.2 Q2-Q11; lifecycle E2').
 
 Replaces zeit.solr's ``SolrConnection.search(q, rows=, sort=, fq=)``:
-parse (Q1, driver) → metadata-filter hoisting (Q2, Catalyst pushdown) →
-posting lookup with bucket partition pruning (Q3) → one distributed wave of
-doc-range-shard kernels doing boolean set algebra + BM25 + block-max WAND +
-bounded top-k (Q4-Q8, vectorized numpy inside ``applyInPandas`` cogroup) →
-tiny global merge ``orderBy(score desc, doc_id).limit(k)`` → broadcast join
-to the doc store for ``(repo, path, commit, score)`` output (Q9).
+parse (Q1, driver) → ONE planner, ``Searcher._plan_spec`` → ``QuerySpec``
+(equality filters become zero-scored field terms, multi-term expansion,
+idf, fast-vs-cogroup choice) → posting lookup with bucket partition pruning
+(Q3) → one distributed wave of doc-range-shard kernels doing boolean set
+algebra + BM25 + block-max WAND + bounded top-k (Q4-Q8, vectorized numpy in
+``make_search_kernel``): a ``groupBy(shard).applyInPandas`` fast path over
+the query terms' postings only, and a cogroup with a filtered doc-store
+side only for range predicates, sort overrides and tombstone overflow →
+``Searcher._merge_fetch`` (Q9): below ``COLLECT_CAP`` the driver merges the
+per-shard candidates itself (else an executor-side cut runs first), then
+ONE ``_fetch_by_ids`` isin fetch of the page's ``(repo, path, commit)``.
+``search`` and ``search_batch`` share all three stages.
 
 Scale design (north_rule: 10^12 files):
 * postings for the query's terms are read with **bucket partition pruning**
   (``bucket=crc32(term)%NB`` directories) + parquet term dictionary filters
   — the scan touches only the query terms' data;
 * the corpus docID space is cut into contiguous **shards**; every posting
-  block is routed to the shards its ``[first_doc, last_doc]`` range overlaps
-  and the doc store is routed by ``doc_id DIV width`` — a **cogroup** then
-  gives each kernel task all query-term blocks AND all doc metadata
-  (doc_len, filter columns) for its docID range, so AND/OR/NOT + BM25 +
-  filters evaluate locally with **zero additional shuffle** and bounded
-  per-task state (≤ shard_width docs);
+  block (norms sidecar included) is routed to the shards its
+  ``[first_doc, last_doc]`` range overlaps, so each kernel task holds all
+  query-term blocks and doc lengths for its docID range — on the cogroup
+  path also the doc store routed by ``doc_id DIV width`` — and AND/OR/NOT
+  + BM25 + filters evaluate locally with **zero additional shuffle** and
+  bounded per-task state (≤ shard_width docs);
 * per-shard candidates are ≤ k rows each → the global merge is O(k·shards),
   driver-side tiny.
 
@@ -43,6 +49,7 @@ from .build import (NORMS_TERM, field_norms_term, scored_term, term_bucket,
 from .catalog import ManifestParquetCatalog
 from .parse import (And, Boost, Contains, DisMax, Fuzzy, MinMatch, Not, Or,
                     Phrase, Prefix, Range, Term, Wildcard, parse)
+from .session import worker_task
 
 DOC_META_FIELDS = ("repo", "path", "commit", "lang", "ts")
 
@@ -2293,14 +2300,15 @@ class Searcher:
             block_acc=getattr(self, "_wand_acc", None))
         schema = ("qid long, " if batch else "") + "doc_id long, score double"
         if fast:
-            return postings.groupBy("shard").applyInPandas(kernel, schema)
+            return postings.groupBy("shard").applyInPandas(
+                worker_task(kernel), schema)
         doc_cols = list(dict.fromkeys(
             ["doc_id"] + [f for f, _d in sort_spec or []]))
         docs_side = (docs_f.select(*doc_cols)
                      .withColumn("shard", F.expr(f"doc_id DIV {W}")))
         return (postings.groupBy("shard")
                 .cogroup(docs_side.groupBy("shard"))
-                .applyInPandas(kernel, schema))
+                .applyInPandas(worker_task(kernel), schema))
 
     def _merge_fetch(self, cand: DataFrame, n_queries: int, start: int,
                      k: int) -> list:
@@ -2483,7 +2491,7 @@ class Searcher:
 
         schema = StructType([StructField("doc_id", LongType()),
                              StructField("tf", LongType())])
-        out = blocks.mapInPandas(decode, schema)
+        out = blocks.mapInPandas(worker_task(decode), schema)
         if self._n_deleted:
             out = out.join(self.docs.select("doc_id"), "doc_id", "left_semi")
         return out

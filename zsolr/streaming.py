@@ -23,6 +23,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from .build import BuildConfig
 from .catalog import ManifestParquetCatalog
 from .lifecycle import incremental_update
+from .session import worker_task
 
 CORPUS_SCHEMA = StructType([
     StructField("repo", StringType()),
@@ -190,7 +191,7 @@ def sessionize_stream(spark: SparkSession, events_dir: str,
     fl = spark.readStream.schema(schema).parquet(flush_dir)
     stream = ev.unionByName(fl).withWatermark("ts", f"{wm} seconds")
     out = (stream.groupBy(F.col("user_id"))
-           .applyInPandasWithState(fn, out_schema, state_schema,
+           .applyInPandasWithState(worker_task(fn), out_schema, state_schema,
                                    "append", GroupStateTimeout.EventTimeTimeout)
            .filter(F.col("user_id") >= 0))   # drop the flush sentinel user
     w = out.writeStream.outputMode("append") \
