@@ -401,7 +401,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .otherwise(F.lit("unchanged")).alias("status"))
     q["incremental_diff"] = incremental_diff
 
-    # ---- training-data ops (dedup / similarity / text / multimodal) ----
+    # ---- training-data ops (dedup / similarity / text) ----
     q["dedup_exact"] = lambda spark, sf: ops.dedup_exact(_docs(spark, sf))
     # max_bucket=None EXPLICITLY (round-4 advice): the engine's default
     # skew guard (4096) has no oracle-side twin — at a scale where a band
@@ -416,11 +416,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["lang_id_ngram"] = lambda spark, sf: ops.lang_id_ngram(
         _docs(spark, sf).filter(F.col("doc_id") % 5 == 0))
     q["quality_score"] = lambda spark, sf: ops.quality_score(_docs(spark, sf))
-    # (media_features stays pytest-covered — its driver row is retired for
-    # the 50-row cap in favor of the round-3/4 query components; round 6
-    # likewise retires doc_fingerprint, ngram_jaccard and token_count_bpe
+    # (round 6 retired doc_fingerprint, ngram_jaccard and token_count_bpe
     # — pure-codegen breadth with python-oracle pytest rings — for
-    # filter_ts_range, mlt_top and explain_score, the round-6 cut paths)
+    # filter_ts_range, mlt_top and explain_score, the round-6 cut paths;
+    # media_features and ngram_jaccard_adjacent were later deleted as
+    # unused)
 
     def dedup_emb_cosine(spark, sf):
         """Embedding near-dup pairs over the fixture augmented with scaled

@@ -234,9 +234,10 @@ def test_namespacing_roundtrip():
 def test_dictionary_scans_exclude_field_terms(searcher):
     """Prefix/fuzzy/wildcard/contains expansion and suggest must never
     surface namespaced per-field terms or sidecars."""
-    for t in searcher._expand_contains("ile"):
+    for t in searcher._expand_terms("*ile*", lambda t: t.contains("ile")):
         assert not t.startswith("\x00") and not t.startswith("\x01")
-    for t in searcher._expand_prefix("fi"):
+    for t in searcher._expand_terms("prefix fi*",
+                                    lambda t: t.startswith("fi")):
         assert not t.startswith("\x00") and not t.startswith("\x01")
     sugg = [r["term"] for r in searcher.suggest("f", n=50).collect()]
     assert all(not t.startswith(("\x00", "\x01")) for t in sugg)

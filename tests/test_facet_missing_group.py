@@ -470,13 +470,13 @@ def test_json_facet_single_match_set_evaluation(spark, null_index, ns,
 
     conn = SolrConnection(spark, null_index)
     calls = {"n": 0}
-    orig = Searcher.match_scores
+    orig = Searcher._match_set
 
-    def counting(self, q):
+    def counting(self, q, *a, **kw):
         calls["n"] += 1
-        return orig(self, q)
+        return orig(self, q, *a, **kw)
 
-    monkeypatch.setattr(Searcher, "match_scores", counting)
+    monkeypatch.setattr(Searcher, "_match_set", counting)
     res = conn.json_facet("spark", {
         "langs": {"type": "terms", "field": "lang", "limit": 3},
         "lens": {"type": "terms", "field": "lang", "limit": 2,
@@ -491,3 +491,29 @@ def test_json_facet_single_match_set_evaluation(spark, null_index, ns,
     })
     assert calls["n"] == 1, calls
     assert res["count"] > 0 and res["langs"]["buckets"]
+
+
+@pytest.mark.parametrize("q", ["[* TO *] AND NOT spark",
+                               "lang:en AND NOT spark"])
+def test_exclusion_match_set_same_on_every_route(spark, null_index, ns, q):
+    """A match-all plan with an exclusion (``*:* AND NOT x``, or a
+    filter AND NOT x) is ONE match set on every bulk route: facets,
+    multi-field facets, stats, pivots, json.facet and the facade's
+    facet-only request all count what ``match_scores`` counts (three of
+    them used to drop the exclusion and count every filtered doc)."""
+    from zsolr.connection import SolrConnection
+
+    n = ns.match_scores(q).count()
+    everything = ns.match_scores(q.split(" AND NOT ")[0]).count()
+    assert 0 < n < everything   # the exclusion really removes docs
+    assert sum(r["hits"] for r in
+               ns.facet(q, "lang", missing=True).collect()) == n
+    assert ns.facet_fields(q, ["lang"], with_hits=True)[1] == n
+    assert ns.stats(q).collect()[0]["n"] == n
+    assert sum(r["hits"] for r in
+               ns.facet_pivot(q, "lang", "repo").collect()) == n
+    conn = SolrConnection(spark, null_index)
+    assert conn.json_facet(q, {"langs": {"type": "terms",
+                                         "field": "lang"}})["count"] == n
+    assert conn.search(q, rows=0, facet_field="lang").hits == n
+    assert conn.search(q, rows=5, facet_field="lang").hits == n

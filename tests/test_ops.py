@@ -63,15 +63,6 @@ def test_minhash_lsh_pairs_symmetric_and_plausible(spark, docs_df):
     assert misses == 0 or hits / (hits + misses) > 0.9
 
 
-def test_ngram_jaccard_matches_python(spark, docs_df, docs_py):
-    got = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-           for r in ops.ngram_jaccard_adjacent(docs_df).collect()}
-    by_id = {d["doc_id"]: set(_tokens(d["text"])) for d in docs_py}
-    for (a, b), j in list(got.items())[:100]:
-        exp = len(by_id[a] & by_id[b]) / len(by_id[a] | by_id[b])
-        assert abs(j - round(exp, 6)) < 1e-9
-
-
 def test_simhash_matches_python(spark, docs_df, docs_py):
     sub = docs_df.filter("doc_id % 20 = 0")
     got = {r["doc_id"]: r["simhash"] for r in ops.simhash32(sub).collect()}
@@ -186,17 +177,6 @@ def test_doc_fingerprint_matches_python_oracle(spark, docs_df):
             h = int(hashlib.md5(t.encode()).hexdigest()[:7], 16)
             acc = (acc * ops.FP_BASE + h) % ops.FP_MOD
         assert got[d["doc_id"]] == acc, d["doc_id"]
-
-
-def test_media_features_stub(spark, docs_df):
-    out = {r["doc_id"]: r for r in ops.media_features(docs_df).collect()}
-    for d in [r.asDict() for r in docs_df.limit(20).collect()]:
-        row = out[d["doc_id"]]
-        n = len(d["text"].encode())
-        assert (row["n_bytes"], row["width"], row["height"]) == \
-            (n, n % 512, (n // 7) % 512)
-    with pytest.raises(NotImplementedError):
-        ops.media_decode_stub(b"\x89PNG")
 
 
 def test_dedup_embedding_cosine_planted(spark):
@@ -539,16 +519,3 @@ def test_trained_ivf_improves_recall(spark, sf_dir):
     trained = recall(c1)
     assert trained >= seeded, (trained, seeded)
     assert trained >= 0.5                          # sane absolute floor
-
-
-def test_sessionize_native_equals_numbered(spark, sf_dir):
-    """The built-in F.session_window twin produces the same session SET
-    (user, start, end, n) as the numbered lag/running-sum implementation
-    on the events fixture (which has no exact-gap boundary pairs — the
-    one documented semantic difference)."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    num = {(r["user_id"], r["start_s"], r["end_s"], r["n_events"])
-           for r in ops.sessionize_events(e, gap_s=1800).collect()}
-    nat = {(r["user_id"], r["start_s"], r["end_s"], r["n_events"])
-           for r in ops.sessionize_native(e, gap_s=1800).collect()}
-    assert num == nat and len(num) > 50

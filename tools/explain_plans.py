@@ -207,24 +207,19 @@ def main():
         s.facet("[* TO *]", "path", prefix="dir1", limit=5),
         [("prefix pushed", "StringStartsWith(path,dir1)")])
 
-    # 13. round-6: search_boosted = ONE kernel wave (exhaustive
-    # match_scores) + doc join + TakeOrdered — per-doc recency
+    # 13. round-6: search_boosted = ONE kernel wave (the exhaustive
+    # _match_set) + doc join + TakeOrdered — per-doc recency
     # multipliers defeat static block-max bounds, so the plan must show
     # exactly one FlatMapGroupsInPandas and a bounded top-k cut, never a
     # global sort
-    bq = s.search_boosted("spark", k=5, boost="recip(ms(NOW,ts),1e-9,1,1)",
-                          now="2021-06-01T00:00:00Z")
+    boost, now = "recip(ms(NOW,ts),1e-9,1,1)", "2021-06-01T00:00:00Z"
+    bq = s.search_boosted("spark", k=5, boost=boost, now=now)
     # the method returns a driver-local page; audit the lazy plan it cut
-    from zsolr.search import parse_boost_function  # noqa: F401 (doc link)
-    from pyspark.sql import functions as _F
-    scored = s.match_scores("spark")
-    j = scored.join(s.docs.select("doc_id", "repo", "path", "commit", "ts"),
-                    "doc_id")
-    lazy = j.select("doc_id", (_F.col("score") / (_F.lit(1e-9) * (
-        _F.lit(1622505600000.0)
-        - _F.unix_timestamp(_F.col("ts")).cast("double") * 1000.0)
-        + _F.lit(1.0))).alias("score")) \
-        .orderBy(_F.desc("score"), _F.asc("doc_id")).limit(5)
+    # from the engine's own match set and boost multiplier
+    bfield, mult = s._boost_mult(boost, now)
+    j = s._match_set("spark", ["repo", "path", "commit", bfield])
+    lazy = j.select("doc_id", (F.col("score") * mult).alias("score")) \
+        .orderBy(F.desc("score"), F.asc("doc_id")).limit(5)
     ltxt = explain_str(lazy)
     # formatted explain lists each node twice (tree line + detail header)
     one_kernel = ltxt.count("FlatMapGroupsInPandas") == 2
@@ -243,9 +238,7 @@ def main():
     # rank-1 heads broadcast back onto the cut (O(rows·n) driver rows,
     # never one row per group); replicate the lazy shape the eager
     # method executes over its persisted match set
-    scored7 = s.match_scores("spark")
-    j7 = scored7.join(s.docs.select("doc_id", "lang"), "doc_id")
-    cut7 = s._group_cut(j7, "lang", 2)
+    cut7 = s._group_cut(s._match_set("spark", ["lang"]), "lang", 2)
     heads7 = (cut7.filter(F.col("rank") == 1)
               .orderBy(F.desc("score"), F.asc("doc_id")).limit(3)
               .select(F.col("group_val").alias("_gv")))
@@ -283,7 +276,7 @@ def main():
     # 16. round-7: json.facet nested terms — parent page broadcast onto
     # the pair frame, salted two-level sub cut (production persists the
     # pair frame so the scoring kernel runs once; audited lazily here)
-    pairs7 = (s._matched_docs("spark")
+    pairs7 = (s._match_set("spark", ["lang", "repo"])
               .filter(F.col("lang").isNotNull())
               .groupBy("lang", "repo")
               .agg(F.count(F.lit(1)).alias("cnt")))

@@ -79,8 +79,7 @@ def main():
             out[f"{key}__kernel_ms"] = round(best_of(kernel_only) * 1000, 1)
             sc.setJobDescription(f"profile fetch: {q}")
             out[f"{key}__fetch_ms"] = round(best_of(
-                lambda: s._fetch_by_ids(ids).select(
-                    "doc_id", "repo", "path", "commit").collect()) * 1000, 1)
+                lambda: s._doc_meta(ids)) * 1000, 1)
             sc.setJobDescription(f"profile full: {q}")
             out[f"{key}__full_ms"] = round(best_of(
                 lambda: s.search(q, k=10).collect()) * 1000, 1)

@@ -330,6 +330,56 @@ class BuildResult:
     resumed_stages: list = field(default_factory=list)
 
 
+def write_stats(spark: SparkSession, cat: ManifestParquetCatalog,
+                tfs: DataFrame, docs: DataFrame, cfg: BuildConfig,
+                shard_width: int | None, meta: dict | None = None):
+    """The ONE stats writer of builds and lifecycle ops: ``term_stats``
+    (df, max_tf, bucket per term) and the one-row ``index_stats`` from
+    the (live) ``tfs`` and ``docs`` rows.  term_stats rows are sorted by
+    (bucket, term) inside each partition, so the same index writes the
+    same bytes (the aggregation otherwise emits them in shuffle-arrival
+    order).  ``shard_width`` None = :func:`compute_shard_width` of the doc
+    count (a fresh build); lifecycle ops pass the persisted width, which
+    existing posting blocks were split at.
+    → (n_docs, avgdl, shard_width)."""
+    import pyarrow as pa
+
+    term_stats = (
+        tfs.groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df"), F.max("tf").alias("max_tf"))
+        .withColumn("bucket", F.pmod(F.crc32(F.col("term")),
+                                     F.lit(cfg.n_buckets)).cast("int"))
+        .sortWithinPartitions("bucket", "term"))
+    cat.write(term_stats, "term_stats", mode="overwrite", meta=meta)
+    extra_scored = [f for f in cfg.scored_fields if f != "content"]
+    agg = docs.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.avg("doc_len").alias("avgdl"),
+        *[F.avg(f"{f}_len").alias(f"avgdl_{f}") for f in extra_scored],
+    ).collect()[0]
+    n_docs, avgdl = int(agg["n_docs"]), float(agg["avgdl"] or 0.0)
+    width = shard_width or compute_shard_width(
+        n_docs, spark.sparkContext.defaultParallelism)
+    stats_cols = {
+        "n_docs": pa.array([n_docs], pa.int64()),
+        "avgdl": pa.array([avgdl], pa.float64()),
+        "n_buckets": pa.array([cfg.n_buckets], pa.int32()),
+        "block_size": pa.array([cfg.block_size], pa.int32()),
+        "codec": pa.array([cfg.codec], pa.int32()),
+        "shard_width": pa.array([width], pa.int64()),
+        "positions": pa.array([int(cfg.positions)], pa.int32()),
+    }
+    for f in extra_scored:
+        # per-field avgdl (Lucene per-field similarity stats); absent for
+        # single-field indexes, so their stats keep the legacy schema —
+        # and every lifecycle op must keep it, or the Searcher loses the
+        # index's scored fields and dismax breaks
+        stats_cols[f"avgdl_{f}"] = pa.array(
+            [float(agg[f"avgdl_{f}"] or 0.0)], pa.float64())
+    cat.write_small(stats_cols, "index_stats", mode="overwrite", meta=meta)
+    return n_docs, avgdl, width
+
+
 def _dir_bytes(path: str) -> int:
     total = 0
     for root, _dirs, files in os.walk(path):
@@ -571,47 +621,15 @@ class IndexBuilder:
     def _stage_stats(self, spark: SparkSession, build_id: str, fp: str,
                      result: BuildResult):
         t0 = time.time()
-        tf = self.cat.read(spark, "tfs")
-        term_stats = tf.groupBy("term").agg(
-            F.count(F.lit(1)).alias("df"),
-            F.max("tf").alias("max_tf"),
-        ).withColumn(
-            "bucket",
-            F.pmod(F.crc32(F.col("term")), F.lit(self.cfg.n_buckets)).cast("int"),
-        )
-        self.cat.write(term_stats, "term_stats", mode="overwrite")
-        docs = self.cat.read(spark, "docs")
-        extra_scored = [f for f in self.cfg.scored_fields if f != "content"]
-        agg = docs.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.avg("doc_len").alias("avgdl"),
-            *[F.avg(f"{f}_len").alias(f"avgdl_{f}") for f in extra_scored],
-        ).collect()[0]
-        import pyarrow as pa
-
-        width = self.cfg.shard_width or compute_shard_width(
-            int(agg["n_docs"]), spark.sparkContext.defaultParallelism)
-        stats_cols = {
-            "n_docs": pa.array([int(agg["n_docs"])], pa.int64()),
-            "avgdl": pa.array([float(agg["avgdl"] or 0.0)], pa.float64()),
-            "n_buckets": pa.array([self.cfg.n_buckets], pa.int32()),
-            "block_size": pa.array([self.cfg.block_size], pa.int32()),
-            "codec": pa.array([self.cfg.codec], pa.int32()),
-            "shard_width": pa.array([width], pa.int64()),
-            "positions": pa.array([int(self.cfg.positions)], pa.int32()),
-        }
-        for f in extra_scored:
-            # per-field avgdl (Lucene per-field similarity stats); absent
-            # for single-field indexes, so legacy stats stay byte-identical
-            stats_cols[f"avgdl_{f}"] = pa.array(
-                [float(agg[f"avgdl_{f}"] or 0.0)], pa.float64())
-        self.cat.write_small(stats_cols, "index_stats", mode="overwrite")
+        n_docs, avgdl, width = write_stats(
+            spark, self.cat, self.cat.read(spark, "tfs"),
+            self.cat.read(spark, "docs"), self.cfg, self.cfg.shard_width)
         wall = int((time.time() - t0) * 1000)
         self._manifest_append(spark, [
-            (build_id, "stats", 0, fp, int(agg["n_docs"]), 0, wall, "committed"),
+            (build_id, "stats", 0, fp, n_docs, 0, wall, "committed"),
         ])
-        result.n_docs = int(agg["n_docs"])
-        result.avgdl = float(agg["avgdl"] or 0.0)
+        result.n_docs = n_docs
+        result.avgdl = avgdl
         return width
 
     # ----------------------------------------------------------------- run --

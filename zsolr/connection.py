@@ -248,14 +248,8 @@ class SolrConnection:
                 facets["facet_queries"] = self._searcher.facet_query(
                     ast, fqs_)
             grows = {fld: gdf.collect() for fld, gdf in gdfs.items()}
-            ids = sorted({r["doc_id"] for rows_ in grows.values()
-                          for r in rows_})
-            meta = {}
-            if ids:
-                meta = {r["doc_id"]: r.asDict() for r in
-                        self._searcher._fetch_by_ids(ids)
-                        .select("doc_id", "repo", "path", "commit")
-                        .collect()}
+            meta = self._searcher._doc_meta(
+                r["doc_id"] for rows_ in grows.values() for r in rows_)
             grouped: dict = {}
             for fld, rows_ in grows.items():
                 by_group: dict = {}
@@ -267,8 +261,8 @@ class SolrConnection:
                                     kv[1][0]["doc_id"]))
                 groups = []
                 for gval, members in heads:
-                    dl = [dict(meta[r["doc_id"]], score=r["score"])
-                          for r in members]
+                    dl = [dict(meta[r["doc_id"]].asDict(),
+                               score=r["score"]) for r in members]
                     dl = _apply_fl(dl, fl)
                     groups.append({"groupValue": gval,
                                    "doclist": {
@@ -516,7 +510,7 @@ class SolrConnection:
         # facet entry (round-7 review: this used to re-run the scoring
         # kernel once for the count plus once per entry — the N+1 shape
         # the round-5 facet_fields work banned for facet.field)
-        matched = s._matched_docs(ast).persist()
+        matched = s._match_set(ast).persist()
         try:
             out = self._json_facet_entries(s, ast, facet, matched, agg_re)
         finally:

@@ -25,7 +25,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .build import BuildConfig, IndexBuilder
+from .build import BuildConfig, IndexBuilder, write_stats
 from .catalog import ManifestParquetCatalog
 from .docids import assign_doc_ids
 from .session import worker_task
@@ -103,45 +103,14 @@ def _cfg_from_stats(cfg_row) -> BuildConfig:
 def _refresh_stats(spark: SparkSession, cat: ManifestParquetCatalog,
                    meta: dict | None = None):
     """Recompute term/index stats over live (non-tombstoned) rows so idf/N
-    stay exact after deletes/updates (Appendix A: N counts non-deleted)."""
+    stay exact after deletes/updates (Appendix A: N counts non-deleted).
+    The build-time parameters come back from index_stats, the alignment
+    width included (immutable post-build: existing posting blocks were
+    split at those boundaries)."""
     cfg_row = cat.read(spark, "index_stats").collect()[0]
-    n_buckets = int(cfg_row["n_buckets"])
-    tfs = _live(spark, cat, "tfs")
-    term_stats = tfs.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df"), F.max("tf").alias("max_tf"),
-    ).withColumn("bucket",
-                 F.pmod(F.crc32(F.col("term")), F.lit(n_buckets)).cast("int"))
-    cat.write(term_stats, "term_stats", mode="overwrite", meta=meta)
-    docs = _live(spark, cat, "docs")
-    extra_scored = [f for f in _stats_scored_fields(cfg_row)
-                    if f != "content"]
-    agg = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("doc_len").alias("avgdl"),
-        *[F.avg(f"{f}_len").alias(f"avgdl_{f}") for f in extra_scored],
-    ).collect()[0]
-    import pyarrow as pa
-
-    stats_cols = {
-        "n_docs": pa.array([int(agg["n"])], pa.int64()),
-        "avgdl": pa.array([float(agg["avgdl"] or 0.0)], pa.float64()),
-        "n_buckets": pa.array([n_buckets], pa.int32()),
-        "block_size": pa.array([int(cfg_row["block_size"])], pa.int32()),
-        "codec": pa.array([int(cfg_row["codec"])], pa.int32()),
-        # alignment width is immutable post-build: existing posting blocks
-        # were split at these boundaries
-        "shard_width": pa.array([int(cfg_row["shard_width"])], pa.int64()),
-        "positions": pa.array(
-            [int(cfg_row.asDict().get("positions", 1))], pa.int32()),
-    }
-    for f in extra_scored:
-        # per-field avgdl survives every lifecycle op — dropping it would
-        # sever the Searcher's scored-field detection and break dismax on
-        # any index that saw a delete/update
-        stats_cols[f"avgdl_{f}"] = pa.array(
-            [float(agg[f"avgdl_{f}"] or 0.0)], pa.float64())
-    cat.write_small(stats_cols, "index_stats", mode="overwrite",
-                    meta=meta)
+    write_stats(spark, cat, _live(spark, cat, "tfs"),
+                _live(spark, cat, "docs"), _cfg_from_stats(cfg_row),
+                int(cfg_row["shard_width"]), meta=meta)
 
 
 def incremental_update(spark: SparkSession, cat: ManifestParquetCatalog,

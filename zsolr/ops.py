@@ -1,6 +1,6 @@
 """Large-scale training-data pipeline operators over the ``documents`` /
-``embeddings`` tables: deduplication, similarity search, text analysis,
-multimodal plumbing.
+``embeddings`` tables: deduplication, similarity search and
+text analysis.
 
 These extend the zeit.solr-parity engine (task brief: first-class
 components).  Every operator is pure DataFrame + built-in functions where
@@ -15,10 +15,7 @@ baseline with an LSH-bucketed variant as the 100 TB path.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -339,25 +336,6 @@ def dedup_keep(docs: DataFrame, pairs: DataFrame,
             .select("doc_id"))
     return docs.join(drop.withColumnRenamed("doc_id", id_col),
                      id_col, "left_anti")
-
-
-def ngram_jaccard_adjacent(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id") -> DataFrame:
-    """Token-set Jaccard between consecutive doc ids — the verifier pass a
-    near-dup pipeline runs on candidate pairs (here: a deterministic pair
-    set so the oracle is SQL-expressible).  → (doc_a, doc_b, jaccard)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.array_sort(F.array_distinct(
-            tokenize_codegen(F.col(text_col)))).alias("ts"))
-    a, b = toks.alias("a"), toks.alias("b")
-    j = a.join(b, F.col("b.doc_id") == F.col("a.doc_id") + 1)
-    inter = F.size(F.array_intersect(F.col("a.ts"), F.col("b.ts")))
-    union = F.size(F.array_union(F.col("a.ts"), F.col("b.ts")))
-    return j.select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.round(inter.cast("double") / union, 6).alias("jaccard"))
 
 
 def simhash32(docs: DataFrame, text_col: str = "text",
@@ -938,61 +916,3 @@ def sessionize_events(events: DataFrame, gap_s: int = 1800) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_events"),
                  F.min(F.unix_timestamp("ts")).alias("start_s"),
                  F.max(F.unix_timestamp("ts")).alias("end_s")))
-
-
-def sessionize_native(events: DataFrame, gap_s: int = 1800) -> DataFrame:
-    """Built-in ``F.session_window`` twin of :func:`sessionize_events` —
-    prefer the native operator where its semantics fit: Spark's session
-    window merges events closer than the gap (a partial hash agg with
-    in-partition window merging, and watermark-backed state eviction in
-    streaming), but carries no session numbering.  Boundary semantics:
-    Spark closes at ``diff >= gap`` (end-exclusive window) while the
-    numbered implementation closes at ``diff > gap`` — identical whenever
-    no consecutive pair lands exactly ``gap`` apart (asserted in tests).
-    ``end_s`` = window end − gap = last event time.
-    → (user_id, start_s, end_s, n_events)."""
-    return (events
-            .groupBy(F.session_window(F.col("ts"), f"{gap_s} seconds"),
-                     "user_id")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select("user_id",
-                    F.unix_timestamp("session_window.start").alias("start_s"),
-                    (F.unix_timestamp("session_window.end") - gap_s)
-                    .alias("end_s"),
-                    "n_events"))
-
-
-# -------------------------------------------------------------- multimodal ---
-
-def media_features(docs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
-    """Multimodal plumbing: payloads ride as opaque ``binary`` columns and
-    feature extraction runs as an Arrow-batched kernel over ``mapInPandas``.
-
-    The decode step is a deterministic fake (image libs aren't in this
-    container — see ``media_decode_stub``); the Spark-side schema,
-    partitioning, kernel signature and batch shape are real and tested.
-    → (doc_id, n_bytes, width, height)."""
-    payload = docs.select(F.col(id_col).alias("doc_id"),
-                          F.encode(F.col(text_col), "utf-8").alias("payload"))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = pdf["payload"].map(len).to_numpy(dtype=np.int64)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "n_bytes": n,
-                "width": n % 512,          # fake-decoded dimensions
-                "height": (n // 7) % 512,
-            })
-
-    return payload.mapInPandas(
-        worker_task(kernel),
-        "doc_id long, n_bytes long, width long, height long")
-
-
-def media_decode_stub(payload: bytes) -> np.ndarray:
-    """Real image/audio decode is not available in this container."""
-    raise NotImplementedError(
-        "decode requires an image/audio library not present in this "
-        "environment; media_features uses a deterministic fake instead")
