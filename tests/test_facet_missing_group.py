@@ -312,6 +312,57 @@ def test_field_sort_cursor_null_value_raises(ns):
                         after=(None, 3))
 
 
+@pytest.mark.parametrize("sort", ["lang asc", "lang desc"])
+def test_field_sort_page_same_on_every_route(spark, null_index, ns, sort):
+    """A field-sorted page of a scored query is one page whatever the
+    route — ``search``, the facade, the facade with facets — and it is
+    Catalyst's order over the match set: NULL values first on asc, last
+    on desc, doc_id ascending within ties."""
+    from zsolr.connection import SolrConnection
+
+    fld, d = sort.split()
+    key = F.col(fld).desc() if d == "desc" else F.col(fld).asc()
+    exp = [(r["doc_id"], r[fld]) for r in ns.match_scores("spark")
+           .join(ns.docs.select("doc_id", fld), "doc_id")
+           .orderBy(key, F.asc("doc_id")).limit(5).collect()]
+    if d == "asc":   # the fixture's NULL run leads the asc page
+        assert all(v is None for _i, v in exp)
+    exp_ids = [i for i, _v in exp]
+    got = [r["doc_id"] for r in ns.search("spark", k=5, sort=sort).collect()]
+    conn = SolrConnection(spark, null_index)
+    plain = conn.search("spark", rows=5, sort=sort)
+    faceted = conn.search("spark", rows=5, sort=sort, facet_field="repo")
+    assert got == exp_ids
+    assert [x["doc_id"] for x in plain.docs] == exp_ids
+    assert [x["doc_id"] for x in faceted.docs] == exp_ids
+    assert plain.hits == faceted.hits
+
+
+@pytest.mark.parametrize("q", ["spark", "[* TO *]"])
+def test_desc_field_sort_cursor_reaches_null_run(ns, q):
+    """``desc`` sorts NULLs last, so a cursor walk must reach the NULL
+    run and raise the NULL-cursor guard — on a scored query and on
+    match-all alike — never end early and silently drop those docs."""
+    from zsolr.search import UnsupportedQuery
+
+    after = None
+    with pytest.raises(UnsupportedQuery, match="NULL sort value"):
+        for _ in range(ns.n_docs_total // 100 + 2):
+            _df, after = ns.search_after(q, k=100, after=after,
+                                         sort="lang desc")
+
+
+def test_bulk_read_keeps_field_sort(ns):
+    """``k=None`` is the unbounded form of the same page: it keeps the
+    field sort (not score order) and stays a lazy DataFrame."""
+    lazy = ns.search("spark", k=None, sort="path")
+    assert "LocalRelation" not in \
+        lazy._jdf.queryExecution().analyzed().toString()
+    assert [tuple(r) for r in lazy.collect()] == \
+        [tuple(r) for r in ns.search("spark", k=10**6, sort="path")
+         .collect()]
+
+
 def test_facade_boost_with_facets_one_wave(spark, null_index, ns,
                                            monkeypatch):
     """boost + facet.field shares ONE kernel evaluation (round-6

@@ -596,10 +596,10 @@ def test_group_top1_single_aggregation_plan(spark, built_index):
 
 
 def test_sort_override_fetch_bounded(spark, tmp_path, monkeypatch):
-    """Sort-override doc fetch on a many-shard index (round-2 verdict #6):
-    past ISIN_FETCH_CAP the candidate ids ride a broadcast join (plan size
-    O(1), driver collects only start+k rows) and results must equal the
-    isin path's."""
+    """Score-ordered page doc fetch on a many-shard index: past
+    ISIN_FETCH_CAP the page ids ride a broadcast join (plan size O(1),
+    driver collects only start+k rows) and results must equal the isin
+    path's."""
     import numpy as np
 
     from zsolr.build import BuildConfig, IndexBuilder
@@ -616,19 +616,16 @@ def test_sort_override_fetch_bounded(spark, tmp_path, monkeypatch):
     IndexBuilder(cat, BuildConfig(n_buckets=4, shard_width=4)).build(
         spark, "fx", corpus_df=corpus)         # 100 shards
     s = Searcher(spark, cat)
-    via_isin = [r["doc_id"]
-                for r in s.search("spark", k=10, sort="path").collect()]
+    via_isin = [tuple(r) for r in s.search("spark", k=10).collect()]
     assert s._last_fetch_strategy == "isin"
-    monkeypatch.setattr(Searcher, "ISIN_FETCH_CAP", 16)
+    monkeypatch.setattr(Searcher, "ISIN_FETCH_CAP", 4)
     s2 = Searcher(spark, cat)
-    via_join = [r["doc_id"]
-                for r in s2.search("spark", k=10, sort="path").collect()]
+    via_join = [tuple(r) for r in s2.search("spark", k=10).collect()]
     assert s2._last_fetch_strategy == "broadcast_join"
     assert via_join == via_isin
-    exp = [r["doc_id"] for r in
-           cat.read(spark, "docs").orderBy("path", "doc_id")
-           .limit(10).collect()]
-    assert via_join == exp
+    exp = [(r["doc_id"], r["repo"], r["path"], r["commit"]) for r in
+           cat.read(spark, "docs").orderBy("doc_id").limit(10).collect()]
+    assert [t[:4] for t in via_join] == exp
 
 
 def test_search_batch_bit_identical(searcher):
@@ -656,13 +653,13 @@ def test_kernels_raise_no_eval_type_warning(searcher):
     """The kernels handed to applyInPandas carry no partial type hints:
     Spark infers a pandas eval type from hints and warns ("Cannot infer
     the eval type from type hints") on every call when they are partial.
-    Checked on the batch kernel and on a cogroup (field-sort) query."""
+    Checked on the batch kernel and on a cogroup (range-filter) query."""
     import warnings
 
     with warnings.catch_warnings(record=True) as rec:
         warnings.simplefilter("always")
         searcher.search_batch(["spark", "hash AND join"], k=5)
-        searcher.search("spark", k=5, sort="path").collect()
+        searcher.search("commit:[a TO f] AND spark", k=5).collect()
     assert not [str(w.message) for w in rec
                 if "eval type" in str(w.message)]
 
@@ -954,11 +951,11 @@ def test_facet_prefix(searcher):
 @pytest.mark.parametrize("sort", ["doc_len desc", "repo desc, path"])
 def test_cursor_paging_field_sort(searcher, sort):
     """Round-4 verdict #5: cursorMark over a field-sort override — the
-    cursor tuple is (sort values…, doc_id), the kernel's strictly-after
-    filter runs over the sort's own lexicographic order (ties included:
-    doc_len collides heavily), and the page walk equals the offset path
-    with no gaps or overlaps.  Every page ships ≤ k rows per shard by
-    construction (the kernel cut applies after the cursor filter)."""
+    cursor tuple is (sort values…, doc_id), the strictly-after predicate
+    runs over the sort's own lexicographic order (ties included: doc_len
+    collides heavily), and the page walk equals the offset path with no
+    gaps or overlaps.  Every page is a k-row TakeOrdered over the match
+    set by construction (the cut applies after the cursor predicate)."""
     q, k = "hash AND join", 60
     pages, cur = [], None
     budget = searcher.n_docs_total // k + 3   # scale-aware page budget

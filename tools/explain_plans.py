@@ -234,6 +234,26 @@ def main():
          f"{'✅' if page_ok else '❌'} search_boosted returns the k-page"],
         ltxt[:4000] + "\n"))
 
+    # 13b. field-sorted scored page: the kernel scores and cuts by score
+    # only, so a sort override is the match set (fast-path kernel, no
+    # doc-store cogroup) cut by ONE TakeOrdered — audited on the engine's
+    # own unbounded page (search k=None keeps the sort) cut to k rows
+    fsort = s.search("spark", k=None, sort="doc_len desc").limit(5)
+    ftxt = explain_str(fsort)
+    f_kernel = ftxt.count("FlatMapGroupsInPandas") == 2
+    f_nocog = "FlatMapCoGroupsInPandas" not in ftxt
+    f_cut = ("TakeOrderedAndProject" in ftxt
+             and "rangepartitioning" not in ftxt)
+    sections.append((
+        "Field-sorted scored page: one kernel wave + TakeOrdered cut",
+        [f"{'✅' if f_kernel else '❌'} exactly one FlatMapGroupsInPandas"
+         " (the fast-path kernel)",
+         f"{'✅' if f_nocog else '❌'} no FlatMapCoGroupsInPandas (a sort"
+         " override ships no doc-store side)",
+         f"{'✅' if f_cut else '❌'} TakeOrderedAndProject on the sort keys"
+         " (no global sort: no rangepartitioning Exchange)"],
+        ftxt[:4000] + "\n"))
+
     # 14. round-7: grouped_page — the group page is a TakeOrdered over
     # rank-1 heads broadcast back onto the cut (O(rows·n) driver rows,
     # never one row per group); replicate the lazy shape the eager

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from .catalog import ManifestParquetCatalog
 from .parse import And, Boost, Not, parse
-from .search import Searcher, UnsupportedQuery, _is_meta, _parse_sort
+from .search import Searcher, UnsupportedQuery, _field_sort, _is_meta
 
 
 class Results:
@@ -345,9 +345,8 @@ class SolrConnection:
             # advice): a prefix test misclassified any field whose name
             # starts with "score" (e.g. `score_v asc`) as a score cursor
             # and coerced its mark to (float, int), corrupting it.
-            spec = _parse_sort(sort)
-            fielded = bool(spec) and spec[0][0] != "score"
-            after = _decode_mark(cursor_mark, fielded=fielded)
+            after = _decode_mark(cursor_mark,
+                                 fielded=bool(_field_sort(sort)))
             page, nxt, hits = self._searcher.search_after(
                 ast, k=max(rows, 1), after=after, with_count=True,
                 sort=sort, as_rows=True)

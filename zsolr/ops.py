@@ -684,18 +684,6 @@ def dedup_embedding_cosine(embeddings: DataFrame, tau: float = 0.99,
 
 # ------------------------------------------------------------ text analysis ---
 
-def lang_id_heuristic(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
-    """Stopword-ratio language signal (n-gram-heuristic stand-in; the real
-    profile table swaps in transparently).  → (doc_id, en_ratio)."""
-    toks = tokenize_codegen(F.col(text_col))
-    stops = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.round(stops.cast("double") /
-                F.greatest(F.size(toks), F.lit(1)), 6).alias("en_ratio"))
-
-
 # character-trigram profiles (public-knowledge frequency lists); weights
 # are membership hits — enough to separate languages at paragraph length
 LANG_TRIGRAMS = {
@@ -710,12 +698,12 @@ LANG_TRIGRAMS = {
 
 def lang_id_ngram(docs: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:
-    """Character-trigram language ID (the real n-gram heuristic, replacing
-    the stopword stand-in for multi-language corpora): per language, count
-    how many of the doc's trigrams hit that language's profile; predict
-    the argmax (ties → lexicographically first language — same rule in
-    the DuckDB oracle).  Pure codegen: trigram array via transform over a
-    position sequence, per-language hit counts via size(filter(...)).
+    """Character-trigram language ID (an n-gram heuristic for
+    multi-language corpora): per language, count how many of the doc's
+    trigrams hit that language's profile; predict the argmax (ties →
+    lexicographically first language — same rule in the DuckDB oracle).
+    Pure codegen: trigram array via transform over a position sequence,
+    per-language hit counts via size(filter(...)).
     → (doc_id, en_hits, de_hits, fr_hits, pred_lang)."""
     cols = {}
     for lang, grams in LANG_TRIGRAMS.items():

@@ -7,12 +7,14 @@ idf, fast-vs-cogroup choice) → posting lookup with bucket partition pruning
 (Q3) → one distributed wave of doc-range-shard kernels doing boolean set
 algebra + BM25 + block-max WAND + bounded top-k (Q4-Q8, vectorized numpy in
 ``make_search_kernel``): a ``groupBy(shard).applyInPandas`` fast path over
-the query terms' postings only, and a cogroup with a filtered doc-store
-side only for range predicates, sort overrides and tombstone overflow →
+the query terms' postings only, and a cogroup with a filtered doc-id side
+only for range predicates and tombstone overflow →
 ``Searcher._merge_fetch`` (Q9): below ``COLLECT_CAP`` the driver merges the
 per-shard candidates itself (else an executor-side cut runs first), then
 ONE ``_fetch_by_ids`` isin fetch of the page's ``(repo, path, commit)``.
-``search`` and ``search_batch`` share all three stages.
+``search`` and ``search_batch`` share all three stages.  Every other page
+(field sorts and their cursors, match-all, facets, boosts) is ONE
+TakeOrdered over the match set (``Searcher._page``).
 
 Scale design (north_rule: 10^12 files):
 * postings for the query's terms are read with **bucket partition pruning**
@@ -22,9 +24,9 @@ Scale design (north_rule: 10^12 files):
   block (norms sidecar included) is routed to the shards its
   ``[first_doc, last_doc]`` range overlaps, so each kernel task holds all
   query-term blocks and doc lengths for its docID range — on the cogroup
-  path also the doc store routed by ``doc_id DIV width`` — and AND/OR/NOT
-  + BM25 + filters evaluate locally with **zero additional shuffle** and
-  bounded per-task state (≤ shard_width docs);
+  path also the filtered doc ids routed by ``doc_id DIV width`` — and
+  AND/OR/NOT + BM25 + filters evaluate locally with **zero additional
+  shuffle** and bounded per-task state (≤ shard_width docs);
 * per-shard candidates are ≤ k rows each → the global merge is O(k·shards),
   driver-side tiny.
 
@@ -75,9 +77,15 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
 
             st = _SCHEMA_CACHE[schema] = _parse_datatype_string(schema)
         schema = st
+    if not rows:
+        # an empty pandas frame skips the Arrow path (RDD relation, one
+        # job per collect); an empty Arrow table stays a LocalRelation
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table(),
+                                     schema)
     names = [f.name for f in schema.fields]
-    rows = [tuple(r) for r in rows] if rows else []
-    cols = list(zip(*rows)) if rows else [() for _ in names]
+    cols = list(zip(*[tuple(r) for r in rows]))
     # object dtype everywhere: pandas numeric inference would coerce
     # int columns with Nones to float; Arrow casts object columns to the
     # declared Spark types exactly (and None → null)
@@ -397,6 +405,13 @@ def _parse_sort(sort: str | None) -> list[tuple[str, bool]]:
         raise UnsupportedQuery(
             "compound sort mixing 'score' with fields is not supported")
     return spec
+
+
+def _field_sort(sort: str | None) -> list[tuple[str, bool]]:
+    """The field-sort spec of a Solr ``sort=`` value: ``[]`` for the
+    default score order (no sort, or ``score [desc]``)."""
+    spec = _parse_sort(sort)
+    return [] if not spec or spec[0][0] == "score" else spec
 
 
 def _filter_expr(filters: list[tuple]):
@@ -800,20 +815,18 @@ class _ShardContext:
     live-doc universe and a per-term cache of full decodes — so a term
     decodes fully at most once per shard however many queries read it.
 
-    ``docs`` is the cogroup path's filtered doc-store side (``None`` on
+    ``d_ids`` are the cogroup path's filtered doc-store ids (``None`` on
     the fast path, where the broadcast tombstone set masks instead)."""
 
-    def __init__(self, key, blocks: pd.DataFrame, docs, specs: list,
+    def __init__(self, key, blocks: pd.DataFrame, d_ids, specs: list,
                  shard_width: int, deleted_sorted, avgdl_of: dict):
         self.base = int(key[0]) * shard_width
         self.width = shard_width
         self.deleted_sorted = deleted_sorted
-        self.docs = docs
         self.k1, self.b = BM25_K1, BM25_B
         self.avgdl_of = avgdl_of
-        if docs is not None:
+        if d_ids is not None:
             self.allowed = np.zeros(shard_width, dtype=bool)
-            d_ids = docs["doc_id"].to_numpy()
             self.allowed[d_ids - self.base] = True
             self.allowed_ids = np.sort(d_ids)
         else:
@@ -854,7 +867,7 @@ class _ShardContext:
         norm_ids = self.norms["content"][0].astype(np.int64)
         if not any(s.needs_universe for s in specs):
             self.universe = np.empty(0, dtype=np.int64)
-        elif docs is not None:
+        elif d_ids is not None:
             self.universe = self.allowed_ids
         elif deleted_sorted is not None:
             self.universe = norm_ids[~np.isin(norm_ids, deleted_sorted)]
@@ -1075,19 +1088,17 @@ def _wand_per_term(ctx: _ShardContext, spec, prunable: set, k: int,
 
 
 def _score_spec(ctx: _ShardContext, spec, k: int | None, wand: bool = False,
-                sort_spec: list | None = None, after: tuple | None = None,
-                block_acc=None):
+                after: tuple | None = None, block_acc=None):
     """Score one planned query on one shard → (ids, scores, n_matches):
-    the shard's top ``k`` candidates (all matches when k is None) in
-    score order, or in ``sort_spec`` order (cogroup path only).  WAND runs
-    when asked and sound: a bounded score-ordered top k whose AST has
-    prunable terms and no phrase or complement leg."""
+    the shard's top ``k`` candidates in score order (all matches when k
+    is None).  WAND runs when asked and sound: a bounded top k whose AST
+    has prunable terms and no phrase or complement leg."""
     env = ctx.env(spec)
     # only pos-only scored terms are WAND-prunable (a term used under NOT
     # must decode fully or exclusion would under-remove); UB totals
     # include every scored positive term so pruning stays safe
     prunable = spec.pos - spec.neg - spec.zero - spec.phrase
-    if (wand and k is not None and not sort_spec and prunable
+    if (wand and k is not None and prunable
             and not spec.phrase and not spec.needs_universe):
         per_term = _wand_per_term(ctx, spec, prunable, k, env, after,
                                   block_acc)
@@ -1097,42 +1108,10 @@ def _score_spec(ctx: _ShardContext, spec, k: int | None, wand: bool = False,
     ids, sc = _eval_ast(spec.ast, per_term, ctx.allowed_ids, env)
     n_matches = len(ids)
     if after is not None:
-        if sort_spec:
-            # field-sort cursor (round-4 verdict #5): after =
-            # (sort values…, doc_id); keep docs strictly LATER in
-            # the (sort keys…, doc_id asc) lexicographic order —
-            # same ≤k-rows-per-shard property as the score cursor
-            dind = ctx.docs.set_index("doc_id")
-            tie = np.ones(len(ids), dtype=bool)
-            aft = np.zeros(len(ids), dtype=bool)
-            for i, (f, dsc) in enumerate(sort_spec):
-                v = ids if f == "doc_id" else dind[f].loc[ids].to_numpy()
-                later = (v < after[i]) if dsc else (v > after[i])
-                aft |= tie & later
-                tie &= v == after[i]
-            aft |= tie & (ids > after[-1])
-            ids, sc = ids[aft], sc[aft]
-        else:
-            am = (sc < after[0]) | ((sc == after[0]) & (ids > after[1]))
-            ids, sc = ids[am], sc[am]
+        am = (sc < after[0]) | ((sc == after[0]) & (ids > after[1]))
+        ids, sc = ids[am], sc[am]
     if k is not None and len(ids) > k:
-        if not sort_spec:
-            ids, sc = _topk_cut(ids, sc, k)
-        else:  # sort override: cogroup mode only (needs the docs side)
-            dind = ctx.docs.set_index("doc_id")
-            data = {"doc_id": ids, "score": sc}
-            by, asc = [], []
-            for i, (f, dsc) in enumerate(sort_spec):
-                data[f"v{i}"] = ids if f == "doc_id" \
-                    else dind[f].loc[ids].to_numpy()
-                by.append(f"v{i}")
-                asc.append(not dsc)
-            sel = (pd.DataFrame(data)
-                   .sort_values(by + ["doc_id"], ascending=asc + [True],
-                                kind="mergesort")
-                   .head(k))
-            ids = sel["doc_id"].to_numpy()
-            sc = sel["score"].to_numpy()
+        ids, sc = _topk_cut(ids, sc, k)
     return ids, sc, n_matches
 
 
@@ -1145,7 +1124,6 @@ def _candidate_rows(ids: np.ndarray, sc: np.ndarray, n_matches: int) -> dict:
 
 def make_search_kernel(specs: list, k: int | None, shard_width: int,
                        avgdl_by_field: dict, wand: bool = False,
-                       sort_spec: list | None = None,
                        deleted: np.ndarray | None = None,
                        cogroup: bool = False, batch: bool = False,
                        after: tuple | None = None, block_acc=None):
@@ -1160,8 +1138,8 @@ def make_search_kernel(specs: list, k: int | None, shard_width: int,
       numpy array.  NOTHING but the query terms' postings moves at query
       time — the property that keeps p95 flat at 10^12 docs.
     * cogroup path (one spec, ``cogroup=True``): ships a filtered
-      doc-store side per shard; needed for range predicates and
-      sort-field overrides.
+      doc-store id side per shard; needed for range predicates and
+      oversized tombstone sets.
     * batch (``batch=True``, fast-path specs): one context per shard,
       then every spec scored against it with WAND off — each term decodes
       once per shard however many queries read it.  Per-query latency at
@@ -1175,17 +1153,16 @@ def make_search_kernel(specs: list, k: int | None, shard_width: int,
     ``qid``.
 
     ``after``: Solr cursorMark deep paging — ``(score, doc_id)`` of the
-    previous page's last hit (or ``(sort values…, doc_id)`` under a field
-    sort); only strictly-after candidates are emitted, so page N ships
-    ≤ k rows per shard instead of the offset path's start+k.  The
-    sentinel still counts the FULL match set (Solr reports total
-    numFound on every cursor page).
+    previous page's last hit; only strictly-after candidates are emitted,
+    so page N ships ≤ k rows per shard instead of the offset path's
+    start+k.  The sentinel still counts the FULL match set (Solr reports
+    total numFound on every cursor page).
     """
     deleted_sorted = np.sort(deleted) if deleted is not None and len(deleted) \
         else None
 
-    def context(key, blocks, docs=None):
-        return _ShardContext(key, blocks, docs, specs, shard_width,
+    def context(key, blocks, d_ids=None):
+        return _ShardContext(key, blocks, d_ids, specs, shard_width,
                              deleted_sorted, avgdl_by_field)
 
     # closures stay unannotated: Spark infers the pandas eval type from
@@ -1208,10 +1185,10 @@ def make_search_kernel(specs: list, k: int | None, shard_width: int,
         if docs is not None and len(docs) == 0:
             return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
                                  "score": pd.Series([], dtype="float64")})
-        ctx = context(key, blocks, docs)
+        ctx = context(key, blocks,
+                      None if docs is None else docs["doc_id"].to_numpy())
         return pd.DataFrame(_candidate_rows(*_score_spec(
-            ctx, spec, k, wand=wand, sort_spec=sort_spec, after=after,
-            block_acc=block_acc)))
+            ctx, spec, k, wand=wand, after=after, block_acc=block_acc)))
 
     if cogroup:
         return kernel
@@ -1699,43 +1676,19 @@ class Searcher:
         (``_match_set``, the same match set facets/grouping use; the
         Lucene alternative — FeatureField impacts baking the boost into
         the index — is a format change not warranted here), joined to
-        the page and boost columns, then a TakeOrdered cut: O(start+k)
-        driver rows regardless of match-set size.
+        the page and boost columns, then :meth:`_page`'s TakeOrdered cut:
+        O(start+k) driver rows regardless of match-set size.
 
         → top-k (doc_id, repo, path, commit, score) by boosted score
         desc, doc_id asc; ``(df, num_found)`` when ``with_count``."""
-        field, mult = self._boost_mult(boost, now)
-        fcols = list(dict.fromkeys(facet_fields or []))
-        matched = self._match_set(q, ["repo", "path", "commit", field]
-                                  + fcols)
-        share = with_count or bool(facet_fields)
-        if share:
-            # count, page, and facets share ONE evaluation of the match
-            # set (the round-5/6 no-double-kernel rule; round-6 review:
-            # the facade used to run facet_fields as a second wave on
-            # boosted+faceted requests)
-            matched = matched.persist()
-        try:
-            boosted = matched.select("doc_id", "repo", "path", "commit",
-                                     (F.col("score") * mult).alias("score"))
-            rows = (boosted.orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(start + k).collect())[start:]
-            df = local_df(self.spark, rows, self._OUT_SCHEMA)
-            facets = {}
-            for f in fcols:
-                agg = self._facet_agg(matched, f, facet_limit, "count",
-                                      facet_mincount, facet_prefix,
-                                      facet_missing)
-                facets[f] = [(r[0], r["hits"]) for r in agg.collect()]
-            nf = matched.count() if with_count else None
-            if facet_fields:
-                return df, nf, facets
-            if with_count:
-                return df, nf
-            return df
-        finally:
-            if share:
-                matched.unpersist()
+        df, nf, facets = self._page(
+            q, k, start, with_count=with_count,
+            boost=self._boost_mult(boost, now),
+            facets=(list(dict.fromkeys(facet_fields or [])), facet_limit,
+                    "count", facet_mincount, facet_prefix, facet_missing))
+        if facet_fields:
+            return df, nf, facets
+        return (df, nf) if with_count else df
 
     def _dismax_rewrite(self, node, qf: dict, tie: float):
         """edismax qf expansion: every SCORED bare/content term becomes a
@@ -1958,15 +1911,15 @@ class Searcher:
         STRICTLY AFTER ``after`` — the previous page's last-hit cursor
         (``None`` = first page) — plus the cursor for the next page.
         Unlike ``start=`` offsets — whose executor cut grows as
-        start+k — every page ships ≤ k candidate rows per shard, so page
-        10^6 costs the same as page 1 (the reason Solr added cursorMark).
+        start+k — every page cuts only k rows past the cursor (≤ k
+        candidate rows per shard in score order, a k-row TakeOrdered
+        under a field sort), so page 10^6 costs the same as page 1 (the
+        reason Solr added cursorMark).
 
         ``as_rows=True`` returns the page as a list of plain dicts
         instead of a DataFrame — the zero-extra-job shape for driver
         consumers (:meth:`export`, the facade): the page is evaluated
-        exactly ONCE here (round-6; the ``_match_all`` path used to
-        return a lazy plan that downstream ``collect()`` re-evaluated,
-        doubling every match-all export page).  With ``as_rows=False``
+        exactly ONCE here.  With ``as_rows=False``
         the returned DataFrame is always driver-local
         (``createDataFrame`` over the already-collected page), so a
         second ``collect()`` costs no distributed work either way.
@@ -1974,15 +1927,16 @@ class Searcher:
         ``sort`` (round-4 verdict #5): Solr supports cursors over ANY
         stable sort, and deep field-sorted export is the classic
         reindex-consumer pattern — with a field sort the cursor tuple is
-        ``(sort field values…, doc_id)`` and the kernel's strictly-after
-        filter runs over the same lexicographic order the sort uses; the
-        doc_id tiebreak the engine always appends is Solr's required
-        uniqueKey tiebreak.  Default (or ``sort='score'``) pages the
-        ranking order with cursor ``(score, doc_id)``.
+        ``(sort field values…, doc_id)`` and the page is a TakeOrdered
+        over the match set behind a Catalyst strictly-after predicate in
+        the same lexicographic order (:meth:`_page`); the doc_id
+        tiebreak the engine always appends is Solr's required uniqueKey
+        tiebreak.  Default (or ``sort='score'``) pages the ranking order
+        with cursor ``(score, doc_id)``, where the kernel applies the
+        strictly-after filter before its cut.
         → (df, next_after) or (df, next_after, num_found) with
         ``with_count``."""
-        spec = _parse_sort(sort)
-        eff = [] if (not spec or spec[0][0] == "score") else spec
+        eff = _field_sort(sort)
         with self._no_aqe():
             res = self._search_uncached(q, k, 0, sort if eff else None, wand,
                                         with_count, after=after,
@@ -2057,9 +2011,7 @@ class Searcher:
             raise UnsupportedQuery(
                 "cursor paging requires start=0 (Solr cursorMark"
                 " semantics)")
-        sort_spec = _parse_sort(sort)
-        eff_spec = [] if (not sort_spec
-                          or sort_spec[0][0] == "score") else sort_spec
+        eff_spec = _field_sort(sort)
         if after is not None:
             if plan.match_all and not eff_spec:
                 # Solr's classic full-export pattern is exactly
@@ -2081,95 +2033,109 @@ class Searcher:
                 # or the export walk would end silently (round-6 review)
                 raise UnsupportedQuery("cursor contains a NULL sort value")
 
-        if plan.match_all:
-            return self._match_all(self._match_set(plan), k, start,
-                                   sort_spec, with_count, after=after,
-                                   keep_sort_cols=keep_sort_cols)
+        if plan.match_all or eff_spec or k is None:
+            df, num_found, _f = self._page(
+                plan, k, start, eff_spec, after=after, with_count=with_count,
+                keep_sort_cols=keep_sort_cols,
+                score_field_terms=score_field_terms)
+            return (df, num_found) if with_count else df
 
-        if k is None:
-            # bulk match set (exports, delete-by-query style consumers):
-            # fully distributed, never collected unless counted
-            out = (self._match_set(plan, ["repo", "path", "commit"],
-                                   score_field_terms=score_field_terms)
-                   .orderBy(F.desc("score"), F.asc("doc_id")))
-            if with_count:
-                rows = out.collect()
-                return local_df(self.spark, rows, out.schema), len(rows)
-            return out
-
-        fetch = start + k
-        spec = self._plan_spec(plan, field_sort=bool(eff_spec),
-                               score_field_terms=score_field_terms)
+        spec = self._plan_spec(plan, score_field_terms=score_field_terms)
         # exact numFound requires evaluating every block — WAND's whole
         # point is to skip blocks, so counting disables it (Lucene likewise
         # only reports exact totals when pruning is off).  The cogroup
         # path's doc side is the match set of the top-level filters alone.
         cand = self._candidates(
-            [spec], fetch, wand=wand and not with_count,
-            sort_spec=eff_spec or None, after=after,
+            [spec], start + k, wand=wand and not with_count, after=after,
             docs_f=self._match_set(Plan(None, [], plan.filters, True)))
-        if not eff_spec:
-            ((rows, num_found),) = self._merge_fetch(cand, 1, start, k)
-            df = local_df(self.spark, rows, self._OUT_SCHEMA)
-            return (df, num_found) if with_count else df
-
-        # field sort: each shard ships its first ``fetch`` candidates by
-        # the sort keys, UNCUT across shards (≤ fetch·shards ids); the
-        # doc fetch sorts and cuts to start+k executor-side — an
-        # in-cluster join+sort past COLLECT_CAP — so the driver only
-        # ever collects O(start + k) rows
-        extra = [f for f, _d in eff_spec
-                 if f not in ("repo", "path", "commit", "doc_id")]
-        tail = extra if keep_sort_cols else []
-        out_schema = self._OUT_SCHEMA
-        if tail:
-            # cursor paging over a field sort (search_after) reads the
-            # last row's sort values to build the next cursor — carry
-            # the sort columns through the output schema
-            dtypes = dict(self.docs.dtypes)
-            out_schema += "".join(f", {f} {dtypes[f]}" for f in tail)
-        n_shards = -(-self.n_docs_total // self.shard_width)
-        num_found = None
-        score_by_id = None
-        if n_shards * (fetch + 1) > self.COLLECT_CAP:
-            self._last_collect_strategy = "distributed_cut"
-            if with_count:
-                cand = cand.persist()
-                num_found = int(
-                    cand.filter(F.col("doc_id") == -1)
-                    .agg(F.sum("score")).collect()[0][0] or 0)
-            src = self.docs.join(cand.filter(F.col("doc_id") >= 0),
-                                 "doc_id").select(
-                "doc_id", "repo", "path", "commit", "score", *extra)
-        else:
-            self._last_collect_strategy = "driver_merge"
-            rows = cand.collect()
-            num_found = int(sum(r["score"] for r in rows
-                                if r["doc_id"] == -1))
-            score_by_id = {r["doc_id"]: r["score"] for r in rows
-                           if r["doc_id"] >= 0}
-            if not score_by_id:
-                empty = local_df(self.spark, [], out_schema)
-                return (empty, num_found) if with_count else empty
-            # a ~10^6-element In predicate blows up the plan at 125k
-            # shards (round-2 verdict #6) — see _fetch_by_ids
-            src = self._fetch_by_ids(list(score_by_id)).select(
-                "doc_id", "repo", "path", "commit", *extra)
-        keys = [F.col(f).desc() if dsc else F.col(f).asc()
-                for f, dsc in eff_spec]
-        sel = src.orderBy(*keys, F.asc("doc_id")).limit(fetch)
-        fetched = sel.collect()[start:]
-        if with_count and score_by_id is None:
-            cand.unpersist()
-        out = [(r["doc_id"], r["repo"], r["path"], r["commit"],
-                r["score"] if score_by_id is None
-                else score_by_id[r["doc_id"]], *[r[c] for c in tail])
-               for r in fetched]
-        df = local_df(self.spark, out, out_schema)
+        ((rows, num_found),) = self._merge_fetch(cand, 1, start, k)
+        df = local_df(self.spark, rows, self._OUT_SCHEMA)
         return (df, num_found) if with_count else df
 
+    def _page(self, q, k: int | None, start: int = 0,
+              sort_spec: list | tuple = (), after: tuple | None = None,
+              with_count: bool = False, keep_sort_cols: bool = False,
+              boost: tuple | None = None, facets: tuple | None = None,
+              score_field_terms: bool = False):
+        """The ONE result-page builder over a match set
+        (:meth:`_match_set`): field sorts and their cursors, match-all
+        pages, ``k=None`` bulk reads, :meth:`search_with_facets` and
+        :meth:`search_boosted` — every page the score-ordered kernel
+        merge (:meth:`_merge_fetch`) does not cut.
+
+        The strictly-after cursor over ``(sort values…, doc_id)`` is a
+        Catalyst predicate (pushed down to the parquet scan on
+        match-all), and the page is ONE TakeOrdered on ``(sort keys, or
+        score desc; then doc_id asc)`` plus the offset, so the driver
+        collects O(start+k) rows whatever the match-set size.  NULL sort
+        values order as Catalyst's (first on asc, last on desc).
+        ``boost``: ``(field, multiplier Column)`` scaling the score
+        (:meth:`_boost_mult`).  ``facets``: ``(fields, limit, sort,
+        mincount, prefix, missing)`` aggregated over the same match set
+        (:meth:`_facet_agg`).
+
+        Count rule: a pure doc-store scan (:attr:`Plan.scan_only`) stays
+        an uncached, pushed-down scan counted with ``count()``; a
+        kernel-backed match set persists only when numFound or facets
+        are asked for — the count, the page and the facets then read
+        the persisted set, which is unpersisted after.  Without either,
+        a page costs one TakeOrdered job.
+
+        → ``(page_df, num_found, {field: [(value, hits), …]})``;
+        ``k=None`` gives the lazy, unbounded ordered frame as the page."""
+        plan = q if isinstance(q, Plan) else plan_query(q)
+        fields = list(facets[0]) if facets else []
+        tail = [f for f, _d in sort_spec
+                if f not in ("repo", "path", "commit", "doc_id")] \
+            if keep_sort_cols else []
+        matched = self._match_set(
+            plan, ["repo", "path", "commit", *[f for f, _d in sort_spec],
+                   *([boost[0]] if boost else []), *fields],
+            score_field_terms=score_field_terms)
+        share = (k is not None and (with_count or bool(fields))
+                 and not plan.scan_only)
+        if share:
+            matched = matched.persist()
+        try:
+            src = matched
+            if boost:
+                src = src.withColumn("score", F.col("score") * boost[1])
+            if after is not None:
+                pred, tie = F.lit(False), F.lit(True)
+                for (f, dsc), v in zip([*sort_spec, ("doc_id", False)],
+                                       after):
+                    # NULLs sort last on desc: later than any value, so
+                    # the walk reaches them (and the NULL-cursor guard)
+                    later = ((F.col(f) < v) | F.col(f).isNull()) if dsc \
+                        else (F.col(f) > v)
+                    pred = pred | (tie & later)
+                    tie = tie & (F.col(f) == v)
+                src = src.filter(pred)
+            keys = [F.col(f).desc() if dsc else F.col(f).asc()
+                    for f, dsc in sort_spec] or [F.desc("score")]
+            ordered = (src.orderBy(*keys, F.asc("doc_id"))
+                       .select("doc_id", "repo", "path", "commit", "score",
+                               *tail))
+            if k is None:
+                return (ordered, matched.count() if with_count else None,
+                        {})
+            num_found = matched.count() if with_count else None
+            sel = ordered.limit(start + k)
+            rows = sel.collect()[start:]
+            ranked: dict = {}
+            for f in fields:
+                agg = self._facet_agg(matched, f, *facets[1:])
+                ranked[f] = [(r[0], r["hits"]) for r in agg.collect()]
+        finally:
+            if share:
+                matched.unpersist()
+        dtypes = dict(self.docs.dtypes)
+        schema = self._OUT_SCHEMA + "".join(f", {f} {dtypes[f]}"
+                                            for f in tail)
+        return local_df(self.spark, rows, schema), num_found, ranked
+
     # -- query pipeline: planner → kernel wave → merge + fetch ---------------
-    def _plan_spec(self, plan: Plan, field_sort: bool = False,
+    def _plan_spec(self, plan: Plan,
                    score_field_terms: bool = False) -> QuerySpec:
         """The one query planner (``search``, ``search_batch``): a scored
         plan (not match-all) → the :class:`QuerySpec` the per-shard core
@@ -2178,15 +2144,14 @@ class Searcher:
         Path choice — fast path: only the query terms' postings move
         (norms decode from the blocks, equality filters become zero-scored
         field terms, tombstones broadcast).  Cogroup path: ships a
-        filtered doc-store side per shard — needed for range predicates,
-        sort overrides and oversized tombstone sets."""
+        filtered doc-id side per shard — needed for range predicates and
+        oversized tombstone sets."""
         from .build import FIELD_TERMS
 
         filters_as_terms = self._filters_as_field_terms(plan.filters)
         # any Range surviving planning is the [* TO *] match-all, evaluated
         # against the shard universe — both paths handle it
-        fast = (not field_sort and filters_as_terms is not None
-                and self._deleted_np is not None)
+        fast = filters_as_terms is not None and self._deleted_np is not None
         zero: set[str] = set()
         ast = plan.scored_ast
         if fast and filters_as_terms:
@@ -2240,14 +2205,13 @@ class Searcher:
             boost_mult={t: w for t, w in boost_mult.items() if w != 1.0})
 
     def _candidates(self, specs: list, fetch: int | None, wand: bool = False,
-                    sort_spec: list | None = None,
                     after: tuple | None = None,
                     docs_f: DataFrame | None = None,
                     batch: bool = False) -> DataFrame:
         """One kernel wave over planned queries → per-shard candidate rows
         (:func:`make_search_kernel`): ONE postings scan over the specs'
-        union term set grouped by shard, cogrouped with the filtered doc
-        store ``docs_f`` off the fast path."""
+        union term set grouped by shard, cogrouped with the ids of the
+        filtered doc store ``docs_f`` off the fast path."""
         W = self.shard_width
         fast = all(s.fast for s in specs)
         postings = self._postings_scan(
@@ -2256,16 +2220,14 @@ class Searcher:
             any(s.needs_universe for s in specs))
         kernel = make_search_kernel(
             specs, fetch, W, self.field_avgdl, wand=wand,
-            sort_spec=sort_spec, deleted=self._deleted_np if fast else None,
+            deleted=self._deleted_np if fast else None,
             cogroup=not fast, batch=batch, after=after,
             block_acc=getattr(self, "_wand_acc", None))
         schema = ("qid long, " if batch else "") + "doc_id long, score double"
         if fast:
             return postings.groupBy("shard").applyInPandas(
                 worker_task(kernel), schema)
-        doc_cols = list(dict.fromkeys(
-            ["doc_id"] + [f for f, _d in sort_spec or []]))
-        docs_side = (docs_f.select(*doc_cols)
+        docs_side = (docs_f.select("doc_id")
                      .withColumn("shard", F.expr(f"doc_id DIV {W}")))
         return (postings.groupBy("shard")
                 .cogroup(docs_side.groupBy("shard"))
@@ -2380,48 +2342,6 @@ class Searcher:
                 df = local_df(self.spark, rows, self._OUT_SCHEMA)
                 results[i] = (df, n) if with_count else df
         return [results[i] for i in range(len(queries))]
-
-    def _match_all(self, matched: DataFrame, k, start, sort_spec,
-                   with_count: bool, after: tuple | None = None,
-                   keep_sort_cols: bool = False):
-        """Page of a match-all plan's match set (filter-only / existence
-        queries, exclusions anti-joined by :meth:`_match_set`): pure
-        Catalyst (Q2) — predicate pushdown to the parquet scan.
-
-        ``after``: field-sort cursor (the `q=*:*` full-export pattern) —
-        the strictly-after condition becomes a lexicographic Catalyst
-        predicate evaluated before the sort+limit, so every page is a
-        TakeOrdered over a pushed-down-filtered scan; numFound stays the
-        full (pre-cursor) match count, per Solr."""
-        eff = [(f, dsc) for f, dsc in (sort_spec or []) if f != "score"]
-        extra = [f for f, _d in eff
-                 if f not in ("repo", "path", "commit", "doc_id")] \
-            if keep_sort_cols else []
-        filtered = matched
-        if after is not None:
-            conds = []
-            eq = F.lit(True)
-            for i, (f, dsc) in enumerate(eff):
-                later = (F.col(f) < F.lit(after[i])) if dsc \
-                    else (F.col(f) > F.lit(after[i]))
-                conds.append(eq & later)
-                eq = eq & (F.col(f) == F.lit(after[i]))
-            conds.append(eq & (F.col("doc_id") > F.lit(after[-1])))
-            pred = conds[0]
-            for c in conds[1:]:
-                pred = pred | c
-            filtered = matched.filter(pred)
-        out = filtered.select("doc_id", "repo", "path", "commit", "score",
-                              *extra)
-        keys = [F.col(f).desc() if dsc else F.col(f).asc() for f, dsc in eff]
-        out = out.orderBy(*keys, F.asc("doc_id"))
-        if k is not None:
-            out = out.limit(start + k)
-            if start:
-                out = out.offset(start)
-        if with_count:
-            return out, matched.count()
-        return out
 
     def term_postings(self, term: str) -> DataFrame:
         """Q3 demo: decode one term's posting list → (doc_id, tf) rows.
@@ -3361,32 +3281,11 @@ class Searcher:
         Solr computes facets from the same match set as the page, and
         the counted page already forces a FULL (non-WAND) decode, so
         nothing is lost by sharing: the scored match set persists once;
-        the page is a TakeOrdered over it, numFound a count, and every
-        facet field a tiny agg over the cached set.
+        the page is :meth:`_page`'s TakeOrdered over it, numFound a
+        count, and every facet field a tiny agg over the cached set.
         → (page_df, num_found, {field: [(value, hits), …]}) with the
         page bit-identical to ``search(..., with_count=True)`` and the
         facet rankings bit-identical to ``facet_fields``."""
-        sort_spec = _parse_sort(sort)
-        eff = [] if (not sort_spec or sort_spec[0][0] == "score") \
-            else sort_spec
-        scols = [f for f, _d in eff if f != "doc_id"]
-        matched = self._match_set(q, [*fields, *scols]).persist()
-        try:
-            num_found = matched.count()
-            keys = [F.col(f).desc() if dsc else F.col(f).asc()
-                    for f, dsc in eff] if eff else [F.desc("score")]
-            cut = (matched.select("doc_id", "score", *scols)
-                   .orderBy(*keys, F.asc("doc_id"))
-                   .limit(start + k).collect())[start:]
-            meta = self._doc_meta(r["doc_id"] for r in cut)
-            page = local_df(self.spark, [
-                (*meta[r["doc_id"]], float(r["score"])) for r in cut],
-                self._OUT_SCHEMA)
-            facets: dict = {}
-            for f in fields:
-                agg = self._facet_agg(matched, f, facet_limit, facet_sort,
-                                      mincount, prefix, missing)
-                facets[f] = [(r[0], r["hits"]) for r in agg.collect()]
-            return page, num_found, facets
-        finally:
-            matched.unpersist()
+        return self._page(q, k, start, _field_sort(sort), with_count=True,
+                          facets=(fields, facet_limit, facet_sort, mincount,
+                                  prefix, missing))
