@@ -368,3 +368,35 @@ def test_delta_crash_windows_atomic(tmp_path, spark, corpus_df,
     assert cat.read(spark, "docs").count() == 45
     ids = cat.read(spark, "docs").select("doc_id").collect()
     assert len({r["doc_id"] for r in ids}) == 45  # no duplicate docs
+
+
+def test_docs_files_doc_id_sorted(tmp_path, spark, corpus_df):
+    """Every doc-store file is written doc_id-sorted — by the build, an
+    add's delta and a compact — so its row groups carry tight doc_id
+    ranges for the page fetch's point read."""
+    import pyarrow.parquet as pq
+
+    from zsolr.lifecycle import incremental_add
+
+    cat, _res = _build(tmp_path / "idx", spark, corpus_df)
+
+    def check(stage):
+        files = cat.data_files(cat.snapshot("docs"))
+        assert files, stage
+        for path in files:
+            ids = pq.read_table(path, columns=["doc_id"])["doc_id"]
+            ids = ids.to_numpy()
+            assert (ids[1:] >= ids[:-1]).all(), (stage, path)
+
+    check("build")
+    delta = spark.createDataFrame(
+        [(f"srcS{i % 3}", f"s/f{i}.py", "f" * 40, "en", f"sorted spark {i}")
+         for i in range(40)],
+        "repo string, path string, commit string, lang string,"
+        " content string")
+    incremental_add(spark, cat, delta.repartition(4))
+    check("add")
+    delete_by_ids(spark, cat, [0, 1, 2])
+    compact(spark, cat)
+    check("compact")
+

@@ -595,15 +595,18 @@ def test_group_top1_single_aggregation_plan(spark, built_index):
     assert "Aggregate" in plan and "partial_min" in plan
 
 
-def test_sort_override_fetch_bounded(spark, tmp_path, monkeypatch):
-    """Score-ordered page doc fetch on a many-shard index: past
-    ISIN_FETCH_CAP the page ids ride a broadcast join (plan size O(1),
-    driver collects only start+k rows) and results must equal the isin
-    path's."""
+def test_sort_override_fetch_bounded(spark, tmp_path):
+    """Score-ordered page doc fetch on a many-shard index: the page's
+    ``(doc_id, repo, path, commit)`` come from a driver-side point read
+    of the pinned doc-store snapshot's row groups (``_doc_meta``), which
+    must equal a Spark isin scan of the doc store — for a page, for every
+    doc, and for ids spanning the base and a delta data dir."""
     import numpy as np
+    from pyspark.sql import functions as F
 
     from zsolr.build import BuildConfig, IndexBuilder
     from zsolr.catalog import ManifestParquetCatalog
+    from zsolr.connection import SolrConnection
 
     rng = np.random.default_rng(7)
     rows = [("r", f"p{rng.integers(10**9):09d}-{i:04d}", "c", "en",
@@ -616,16 +619,36 @@ def test_sort_override_fetch_bounded(spark, tmp_path, monkeypatch):
     IndexBuilder(cat, BuildConfig(n_buckets=4, shard_width=4)).build(
         spark, "fx", corpus_df=corpus)         # 100 shards
     s = Searcher(spark, cat)
-    via_isin = [tuple(r) for r in s.search("spark", k=10).collect()]
-    assert s._last_fetch_strategy == "isin"
-    monkeypatch.setattr(Searcher, "ISIN_FETCH_CAP", 4)
-    s2 = Searcher(spark, cat)
-    via_join = [tuple(r) for r in s2.search("spark", k=10).collect()]
-    assert s2._last_fetch_strategy == "broadcast_join"
-    assert via_join == via_isin
+    page = [tuple(r) for r in s.search("spark", k=10).collect()]
     exp = [(r["doc_id"], r["repo"], r["path"], r["commit"]) for r in
            cat.read(spark, "docs").orderBy("doc_id").limit(10).collect()]
-    assert [t[:4] for t in via_join] == exp
+    assert [t[:4] for t in page] == exp
+
+    def via_spark(srch, ids):
+        return {r["doc_id"]: r for r in
+                srch.docs.filter(F.col("doc_id").isin(ids))
+                .select("doc_id", "repo", "path", "commit").collect()}
+
+    ids = [t[0] for t in page]
+    assert s._doc_meta(ids) == via_spark(s, ids)
+    all_ids = [r["doc_id"] for r in
+               cat.read(spark, "docs").select("doc_id").collect()]
+    assert len(all_ids) == 400
+    assert s._doc_meta(all_ids) == via_spark(s, all_ids)
+    assert s._doc_meta([]) == {}
+
+    conn = SolrConnection(spark, cat)
+    conn.add([{"repo": "r", "path": f"delta-{i}", "content": "spark new"}
+              for i in range(3)])
+    assert len(cat.snapshot("docs")["data_dirs"]) == 2
+    s2 = conn._searcher
+    new_ids = sorted(via_spark(s2, list(range(400, 410))))
+    assert len(new_ids) == 3
+    span = all_ids[:5] + new_ids
+    got = s2._doc_meta(span)
+    assert len(got) == 8 and got == via_spark(s2, span)
+    # the first searcher stays on the snapshot it pinned at open
+    assert s._doc_meta(new_ids) == {}
 
 
 def test_search_batch_bit_identical(searcher):
@@ -1134,6 +1157,60 @@ def test_query_result_cache(spark, built_index):
     s0 = Searcher(spark, cat)
     s0.search("spark", k=5).collect()
     assert not s0._result_cache
+
+
+def _group_jobs(spark, name, fn):
+    """Spark job ids that ``fn()`` ran, via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        fn()
+        return sc.statusTracker().getJobIdsForGroup(name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_ranked_pages_run_one_job(searcher, spark):
+    """A score-ordered page is ONE Spark job, the kernel wave: the page's
+    doc fields come from a driver-side point read, not a second doc-store
+    scan.  Pinned for a ranked search, a search_batch of 6 queries, a
+    score-cursor page and a range-filtered (cogroup) page, each run once
+    first so every term's df is cached."""
+    batch = ["spark", "hash AND join", "stream OR batch",
+             "lang:en AND spark", "merge AND sort", "dup"]
+    first, cursor = searcher.search_after("spark", k=5, as_rows=True)
+    assert len(first) == 5
+    calls = {
+        "search": lambda: searcher.search("hash AND join", k=10).collect(),
+        "search_batch": lambda: [df.collect() for df in
+                                 searcher.search_batch(batch, k=10)],
+        "cursor": lambda: searcher.search_after(
+            "spark", k=5, after=cursor, as_rows=True),
+        "range": lambda: searcher.search(
+            "commit:[a TO f] AND spark", k=10).collect(),
+    }
+    for fn in calls.values():
+        fn()
+    for name, fn in calls.items():
+        jobs = _group_jobs(spark, f"zsolr-one-job-{name}", fn)
+        assert len(jobs) == 1, (name, jobs)
+
+
+def test_ranked_pages_compile_no_new_code(searcher, spark):
+    """Same-shape ranked queries reuse Spark's generated code: after one
+    warm-up, four more ``a AND b`` pages compile no new class (a doc_id
+    In-list fetch inlines its ids into generated code, so every page
+    used to compile anew)."""
+    qs = ["hash AND join", "spark AND stream", "merge AND sort",
+          "batch AND window", "spark AND join"]
+    searcher._idf_map(sorted({t for q in qs for t in q.split(" AND ")}))
+    searcher.search(qs[0], k=10).collect()
+    metric = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+              .METRIC_COMPILATION_TIME())
+    before = metric.getCount()
+    for q in qs[1:]:
+        searcher.search(q, k=10).collect()
+    assert metric.getCount() - before == 0
 
 
 def test_export_one_job_per_page(searcher, spark):

@@ -62,11 +62,28 @@ def main():
         [("lang pushed", "PushedFilters: [IsNotNull(lang), EqualTo(lang,en)"),
          ("column pruning (no content columns)", "ReadSchema")])
 
-    # 3. doc fetch by candidate ids: min/max row-group pruning via In
-    add("Result fetch (Q9): isin pushdown on doc_id-ordered files",
-        s.docs.filter(F.col("doc_id").isin([1, 5, 9]))
-        .select("doc_id", "repo", "path", "commit"),
-        [("In filter pushed", "PushedFilters: [In(doc_id")])
+    # 3. page fetch: a driver-side point read of the doc store's row
+    # groups (footer min/max of doc_id), no Spark job
+    sc = spark.sparkContext
+    ids = [1, 5, 9]
+    sc.setJobGroup("plans-fetch", "page fetch")
+    try:
+        meta = s._doc_meta(ids)
+        n_fetch_jobs = len(
+            sc.statusTracker().getJobIdsForGroup("plans-fetch"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    exp_meta = {r["doc_id"]: r for r in
+                s.docs.filter(F.col("doc_id").isin(ids))
+                .select("doc_id", "repo", "path", "commit").collect()}
+    sections.append((
+        "Result fetch (Q9): driver point read of doc_id-sorted row groups",
+        [f"{'✅' if n_fetch_jobs == 0 else '❌'} _doc_meta({ids}) ran "
+         f"{n_fetch_jobs} Spark jobs",
+         f"{'✅' if meta == exp_meta else '❌'} same rows as a doc_id isin"
+         " scan of the doc store"],
+        "Job count from a job group around Searcher._doc_meta on the\n"
+        "audit index.\n"))
 
     # 4. tf extraction: per-doc Arrow kernel, zero exchange (round 8 —
     # every (term, doc_id) group lives inside one document row, so the
@@ -155,7 +172,7 @@ def main():
     sections.append((
         "Batch execution (round-3): one kernel wave for N queries",
         [f"{'✅' if n_ok else '❌'} 2 queries through one "
-         "postings scan + one doc fetch (2 Spark jobs total)"],
+         "postings scan + one driver-side doc fetch (1 Spark job)"],
         "search_batch unions the queries' term sets, decodes each term\n"
         "once per shard, and evaluates every AST against the shared\n"
         "decode; see BENCH batch_suite_s/batch_speedup.\n"))
@@ -357,6 +374,57 @@ def main():
          " + \\x01 field terms) reaches the parquet scan as"
          " GreaterThanOrEqual"],
         dict_txt[:2500] + "\n"))
+
+    # 18. the kernel wave's shuffle is sized to the shard count, not
+    # spark.sql.shuffle.partitions: on the default-width (one-shard)
+    # sf0.001 index the postings — and on the cogroup path the doc-id
+    # side too — exchange into ONE partition (Spark plans a one-partition
+    # repartition as SinglePartition); the 8-shard audit index hashes
+    # into 8
+    from zsolr.search import Plan, plan_query
+    oroot = "/tmp/zsolr-plans-one"
+    _sh.rmtree(oroot, ignore_errors=True)
+    ocat = ManifestParquetCatalog(oroot)
+    IndexBuilder(ocat, BuildConfig(n_buckets=8)).build(
+        spark, "plans-one", corpus_df=corpus)
+    one = Searcher(spark, ocat)
+    rplan = plan_query("commit:[a TO f] AND spark")
+
+    def wave_plan(srch, q, **kw):
+        with srch._no_aqe():
+            return (srch._candidates([srch._plan_spec(plan_query(q))], 10,
+                                     **kw)
+                    ._jdf.queryExecution().executedPlan().toString())
+    ftxt = wave_plan(one, "hash AND join", wand=True)
+    rtxt = wave_plan(one, "commit:[a TO f] AND spark",
+                     docs_f=one._match_set(Plan(None, [], rplan.filters,
+                                                True)))
+    mtxt = wave_plan(s, "hash AND join", wand=True)
+    n_one = -(-one.n_docs_total // one.shard_width)
+    n_multi = -(-s.n_docs_total // s.shard_width)
+    single = "Exchange SinglePartition, REPARTITION_BY_NUM"
+    f_ok = ftxt.count("Exchange ") == ftxt.count(single) == 1
+    f_k = ftxt.count("FlatMapGroupsInPandas")
+    r_ok = (rtxt.count("Exchange ") == rtxt.count(single) == 2
+            and rtxt.count("FlatMapCoGroupsInPandas") == 1)
+    m_hash = "Exchange hashpartitioning(shard#"
+    m_ok = (mtxt.count("Exchange ") == mtxt.count(m_hash) == 1
+            and f"L, {n_multi}), REPARTITION_BY_NUM" in mtxt)
+    sections.append((
+        "Kernel wave (Q4-Q8): shuffle sized to the shard count",
+        [f"{'✅' if n_one == 1 else '❌'} default-width sf0.001 index has"
+         f" {n_one} shard(s)",
+         f"{'✅' if f_ok else '❌'} fast ranked wave: exactly one Exchange,"
+         f" `{single}`",
+         f"{'✅' if f_k == 1 else '❌'} fast ranked wave: {f_k}"
+         " FlatMapGroupsInPandas",
+         f"{'✅' if r_ok else '❌'} fq range wave: one `{single}` on each"
+         " side of the one FlatMapCoGroupsInPandas",
+         f"{'✅' if m_ok else '❌'} {n_multi}-shard audit index: one"
+         f" `hashpartitioning(shard, {n_multi})` Exchange (shuffle"
+         " partitions 16)"],
+        ftxt[:3000] + "\n\n" + rtxt[:4000] + "\n\n" + mtxt[:3000]
+        + "\n"))
 
     with open(os.path.join(os.path.dirname(os.path.dirname(
             os.path.abspath(__file__))), "PLANS.md"), "w") as f:

@@ -445,8 +445,10 @@ class IndexBuilder:
         tf = tokd_to_tf(tokd, cfg.n_buckets, positions=cfg.positions,
                         scored_fields=cfg.scored_fields)
         self.cat.write(tf, "tfs", mode="overwrite")
-        docs = tokd.drop("toks", *[f"{f}_toks" for f in cfg.scored_fields
-                                   if f != "content"])
+        # doc_id-sorted files: tight row-group ranges for the page fetch
+        docs = (tokd.drop("toks", *[f"{f}_toks" for f in cfg.scored_fields
+                                    if f != "content"])
+                .sortWithinPartitions("doc_id"))
         self.cat.write(docs, "docs", mode="overwrite")
         spark.catalog.clearCache()  # drop the docID range-partition cache
         wall = int((time.time() - t0) * 1000)

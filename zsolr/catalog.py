@@ -399,16 +399,30 @@ class ManifestParquetCatalog:
                             schema_json=df.schema.json(),
                             expected_parent=expected_parent)
 
-    def read(self, spark: SparkSession, table: str,
-             snapshot_id: str | None = None) -> DataFrame:
+    def snapshot(self, table: str, snapshot_id: str | None = None) -> dict:
+        """The manifest of ``table``'s current (or given) snapshot.  A
+        reader that resolves it once and passes its id to :meth:`read`
+        and its :meth:`data_files` to a point read sees one snapshot on
+        both paths, whatever commits in between."""
         self._recover_txns()
         if snapshot_id is None:
             snap = self.current_snapshot(table)
             if snap is None:
                 raise FileNotFoundError(f"no snapshot for table {table!r}")
-        else:
-            with open(self._snap_path(table, snapshot_id)) as f:
-                snap = json.load(f)
+            return snap
+        with open(self._snap_path(table, snapshot_id)) as f:
+            return json.load(f)
+
+    @staticmethod
+    def data_files(snap: dict) -> list[str]:
+        """Every parquet data file of a snapshot, in data-dir order (the
+        files ``spark.read.parquet`` reads: hidden ``_``/``.`` names
+        skipped)."""
+        return [p for d in snap["data_dirs"] for p in _parquet_files(d)]
+
+    def read(self, spark: SparkSession, table: str,
+             snapshot_id: str | None = None) -> DataFrame:
+        snap = self.snapshot(table, snapshot_id)
         # per-dir read + unionByName keeps partition discovery (and thus
         # directory-level pruning on e.g. bucket=) intact for every data dir
         dfs = [self._read_dir(spark, d, snap) for d in snap["data_dirs"]]
@@ -516,13 +530,7 @@ class ManifestParquetCatalog:
         uncommitted dirs too) — no Spark job."""
         import pyarrow.parquet as pq
 
-        total = 0
-        for root, _dd, files in os.walk(d):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += pq.read_metadata(
-                        os.path.join(root, f)).num_rows
-        return total
+        return sum(pq.read_metadata(p).num_rows for p in _parquet_files(d))
 
     def row_count(self, table: str, last_dir_only: bool = False) -> int:
         """Row count from parquet footers — no Spark job."""
@@ -540,6 +548,84 @@ class ManifestParquetCatalog:
     def meta(self, table: str) -> dict:
         snap = self.current_snapshot(table)
         return (snap or {}).get("meta", {})
+
+
+def _parquet_files(d: str) -> list[str]:
+    return sorted(os.path.join(root, f) for root, _dd, files in os.walk(d)
+                  for f in files
+                  if f.endswith(".parquet") and f[0] not in "_.")
+
+
+class RowGroupPointReader:
+    """Driver-side point reads by an int64 key over parquet files — the
+    stored-fields read of query-then-fetch: a page's rows come straight
+    from the row groups whose footer ``[min, max]`` of ``key`` holds a
+    wanted key, with no Spark job.  Footers are read once, on first use
+    (thread-safe); the ranges are kept sorted by min with a running max,
+    so each key's candidate row groups are one ``searchsorted`` window.
+    Files written sorted by ``key`` give disjoint ranges — one row group
+    per key; overlapping ranges stay correct, only wider."""
+
+    def __init__(self, files: list[str], key: str, columns: list[str]):
+        import threading
+
+        self.files, self.key, self.columns = files, key, columns
+        self._lock = threading.Lock()
+        self._ranges = None
+
+    def _index(self):
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        with self._lock:
+            if self._ranges is None:
+                lo, hi, where = [], [], []
+                for fi, path in enumerate(self.files):
+                    md = pq.read_metadata(path)
+                    col = md.schema.names.index(self.key)
+                    for g in range(md.num_row_groups):
+                        rg = md.row_group(g)
+                        if not rg.num_rows:
+                            continue
+                        st = rg.column(col).statistics
+                        bounded = st is not None and st.has_min_max
+                        lo.append(st.min if bounded else -2 ** 63)
+                        hi.append(st.max if bounded else 2 ** 63 - 1)
+                        where.append((fi, g))
+                lo = np.asarray(lo, dtype=np.int64)
+                order = np.argsort(lo, kind="stable")
+                hi = np.asarray(hi, dtype=np.int64)[order]
+                self._ranges = (lo[order], hi, np.maximum.accumulate(hi),
+                                [where[i] for i in order])
+            return self._ranges
+
+    def take(self, keys) -> list[dict]:
+        """The rows whose ``key`` is in ``keys`` (``columns`` only), as
+        dicts; no I/O for an empty ``keys``."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        keys = np.unique(np.fromiter(keys, dtype=np.int64))
+        if not keys.size:
+            return []
+        lo, hi, run_max, where = self._index()
+        first = np.searchsorted(run_max, keys, "left")
+        stop = np.searchsorted(lo, keys, "right")
+        groups: dict[int, list[int]] = {}
+        for kv, a, b in zip(keys, first, stop):
+            for j in range(a, b):
+                if hi[j] >= kv:
+                    fi, g = where[j]
+                    groups.setdefault(fi, []).append(g)
+        want = pa.array(keys)
+        out: list[dict] = []
+        for fi in sorted(groups):
+            t = pq.ParquetFile(self.files[fi]).read_row_groups(
+                sorted(set(groups[fi])), columns=self.columns)
+            out += t.filter(pc.is_in(t[self.key], value_set=want)).to_pylist()
+        return out
 
 
 class IcebergCatalog:

@@ -426,7 +426,7 @@ def _append_partial_index(spark: SparkSession, cat: ManifestParquetCatalog,
     # orphans), so a later compact() can never resurrect ghost docs
     # from tf rows whose doc/posting halves were lost.
     staged_tf = cat.stage(tf, "tfs")
-    staged_docs = cat.stage(docs, "docs")
+    staged_docs = cat.stage(docs.sortWithinPartitions("doc_id"), "docs")
     # read the delta back from the staged parquet rather than
     # recomputing the docid lineage (its cache is cleared below)
     delta_tf = spark.read.parquet(staged_tf["data_dir"])
@@ -479,7 +479,7 @@ def compact(spark: SparkSession, cat: ManifestParquetCatalog):
     op = _op_meta("compact")
     live_tfs = _live(spark, cat, "tfs")
     cat.write(live_tfs, "tfs", mode="overwrite", meta=op)
-    live_docs = _live(spark, cat, "docs")
+    live_docs = _live(spark, cat, "docs").sortWithinPartitions("doc_id")
     cat.write(live_docs, "docs", mode="overwrite", meta=op)
     encode = builder._encode_mapper(int(cfg_row["shard_width"]))
     from .build import POSTINGS_SCHEMA, grouped_postings
