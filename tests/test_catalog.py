@@ -170,3 +170,46 @@ def test_expire_protects_inflight_staging_and_pointer(spark, tmp_path):
     cat.expire_snapshots("t", keep_last=1)
     assert cat.read(spark, "t").count() == 10           # pointer intact
     assert cat.read(spark, "t", snapshot_id=ids[0]).count() == 10
+
+
+def test_point_reader_match_filter(tmp_path):
+    """``RowGroupPointReader.take(keys, match=(col, values))``, no Spark:
+    a file written UNSORTED in 3-row row groups, so bucket ranges
+    overlap across row groups — a wanted bucket spans several row
+    groups, and only rows whose ``term`` is in ``values`` come back."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from zsolr.catalog import RowGroupPointReader
+
+    rows = [(3, "c1"), (0, "a1"), (5, "e1"), (1, "b1"), (3, "c2"),
+            (0, "a2"), (5, "e2"), (3, "c3"), (1, "b2"), (0, "a3"),
+            (5, "e3")]
+    path = str(tmp_path / "unsorted.parquet")
+    pq.write_table(pa.table({
+        "bucket": pa.array([b for b, _ in rows], pa.int32()),
+        "term": [t for _, t in rows],
+        "df": list(range(len(rows)))}), path, row_group_size=3)
+    md = pq.read_metadata(path)
+    ranges = [(md.row_group(g).column(0).statistics.min,
+               md.row_group(g).column(0).statistics.max)
+              for g in range(md.num_row_groups)]
+    assert md.num_row_groups == 4
+    assert sum(lo <= 0 <= hi for lo, hi in ranges) >= 3   # overlapping
+
+    r = RowGroupPointReader([path], "bucket", ["bucket", "term", "df"])
+
+    def got(keys, values):
+        return sorted((x["bucket"], x["term"], x["df"])
+                      for x in r.take(keys, match=("term", values)))
+
+    want = {"a1", "a3", "c2", "e3", "zz", "b9"}
+    exp = sorted((b, t, i) for i, (b, t) in enumerate(rows)
+                 if b in (0, 3, 5) and t in want)
+    assert got([0, 3, 5], want) == exp
+    assert [t for _b, t, _d in exp] == ["a1", "a3", "c2", "e3"]
+    assert got([2], want) == []                 # a key in no row group
+    assert got([4], ["c1"]) == []               # in a range, not a value
+    assert got([], want) == []                  # empty keys: no read
+    assert got([1, 3], []) == []                # empty match: no rows
+    assert sorted(x["term"] for x in r.take([1])) == ["b1", "b2"]

@@ -1213,6 +1213,107 @@ def test_ranked_pages_compile_no_new_code(searcher, spark):
     assert metric.getCount() - before == 0
 
 
+def _spark_idf(srch, terms):
+    """term → idf from a Spark ``isin`` read of the searcher's pinned
+    term_stats frame (absent terms df 0) — the driver lookup's twin."""
+    from pyspark.sql import functions as F
+
+    from zsolr.search import idf
+
+    df = {r["term"]: r["df"] for r in srch._term_stats
+          .filter(F.col("term").isin(list(terms))).select("term", "df")
+          .collect()}
+    return {t: idf(srch.n_docs_total, df.get(t, 0)) for t in terms}
+
+
+def test_df_lookup_runs_no_job(spark, built_index):
+    """A fresh Searcher (empty df cache) looks query-term df up on the
+    driver from term_stats' row groups: 0 Spark jobs, the same idf as a
+    Spark isin read — for present terms, an absent term (df 0), a field
+    term and a term that only appears negated; and a fresh Searcher's
+    first ranked page is ONE job, the kernel wave."""
+    from zsolr.search import plan_query
+
+    cat, _res = built_index
+    s = Searcher(spark, cat)
+    assert not s._df_cache
+    terms = ["hash", "join", "spark", "zqxjvabsent", "lang=en"]
+    got = {}
+    jobs = _group_jobs(spark, "zsolr-df-terms",
+                       lambda: got.update(s._idf_map(terms)))
+    assert jobs == [], jobs
+    specs = []
+    jobs = _group_jobs(spark, "zsolr-df-neg", lambda: specs.append(
+        s._plan_spec(plan_query("stream AND NOT dup"))))
+    assert jobs == [], jobs
+    assert specs[0].neg - specs[0].pos == {"dup"}
+    got.update(specs[0].idf_map)
+    assert got == _spark_idf(s, got)
+    assert s._df_cache["zqxjvabsent"] == 0
+    assert s._df_cache["lang=en"] > 0 and s._df_cache["dup"] > 0
+
+    fresh = Searcher(spark, cat)
+    rows = []
+    jobs = _group_jobs(spark, "zsolr-df-page", lambda: rows.extend(
+        fresh.search("hash AND join", k=10).collect()))
+    assert len(jobs) == 1, jobs
+    assert rows == s.search("hash AND join", k=10).collect()
+
+
+def test_searcher_opens_without_job(spark, built_index, tmp_path):
+    """Opening a Searcher runs no Spark job — index_stats and the
+    tombstone ids are read with pyarrow from the pinned snapshots — with
+    and without tombstones; and the df it looks up stays pinned: a
+    Searcher opened before an add that brings a new token still reads
+    df 0 for it, a new one reads 1."""
+    import numpy as np
+
+    from zsolr.build import BuildConfig, IndexBuilder
+    from zsolr.catalog import ManifestParquetCatalog
+    from zsolr.connection import SolrConnection
+    from zsolr.lifecycle import delete_by_ids
+
+    opened = []
+
+    def open_jobs(c, name):
+        jobs = _group_jobs(spark, name,
+                           lambda: opened.append(Searcher(spark, c)))
+        return jobs, opened[-1]
+
+    jobs, _ = open_jobs(built_index[0], "zsolr-open-module")
+    assert jobs == [], jobs
+
+    corpus = spark.createDataFrame(
+        [("r", f"p{i}", "c", "en", f"spark x{i % 3}") for i in range(20)],
+        "repo string, path string, commit string, lang string,"
+        " content string")
+    cat = ManifestParquetCatalog(str(tmp_path / "df-pin"))
+    IndexBuilder(cat, BuildConfig(n_buckets=4)).build(
+        spark, "dp", corpus_df=corpus)
+    jobs, before = open_jobs(cat, "zsolr-open-clean")
+    assert jobs == [] and before._n_deleted == 0, jobs
+
+    SolrConnection(spark, cat).add(
+        [{"repo": "r", "path": "new", "content": "spark qzxnewtok"}])
+    after = Searcher(spark, cat)
+    assert before._idf_map(["qzxnewtok"]) == _spark_idf(before,
+                                                         ["qzxnewtok"])
+    assert before._df_cache["qzxnewtok"] == 0
+    assert after._idf_map(["qzxnewtok"]) == _spark_idf(after, ["qzxnewtok"])
+    assert after._df_cache["qzxnewtok"] == 1
+
+    delete_by_ids(spark, cat, [3, 5, 5, 7])
+    delete_by_ids(spark, cat, [7, 11])
+    jobs, tomb = open_jobs(cat, "zsolr-open-tomb")
+    assert jobs == [], jobs
+    assert tomb._n_deleted == 4
+    np.testing.assert_array_equal(tomb._deleted_np, [3, 5, 7, 11])
+    live = {r["doc_id"] for r in tomb.docs.select("doc_id").collect()}
+    assert live.isdisjoint({3, 5, 7, 11}) and len(live) == 21 - 4
+    assert {r["doc_id"] for r in tomb.search("spark", k=None).collect()} \
+        == live
+
+
 def test_export_one_job_per_page(searcher, spark):
     """Round-6 (closes the Q37 weak): the classic full-reindex export —
     ``q=*:*`` with a field-sort cursor — costs exactly ONE Spark job

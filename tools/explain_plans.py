@@ -426,6 +426,32 @@ def main():
         ftxt[:3000] + "\n\n" + rtxt[:4000] + "\n\n" + mtxt[:3000]
         + "\n"))
 
+    # 19. query-term df: a driver point read of term_stats' row groups
+    # by bucket (footer min/max), no Spark job — on a fresh Searcher, so
+    # no term's df is cached yet
+    from zsolr.search import idf
+    fresh = Searcher(spark, cat)
+    df_terms = ["spark", "hash", "join", "lang=en", "zqxjvabsent"]
+    sc.setJobGroup("plans-df", "df lookup")
+    try:
+        got_idf = fresh._idf_map(df_terms)
+        n_df_jobs = len(sc.statusTracker().getJobIdsForGroup("plans-df"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    exp_df = {r["term"]: r["df"] for r in fresh._term_stats
+              .filter(F.col("term").isin(df_terms)).select("term", "df")
+              .collect()}
+    exp_idf = {t: idf(fresh.n_docs_total, exp_df.get(t, 0))
+               for t in df_terms}
+    sections.append((
+        "Query-term df (Q3): driver point read of bucket-sorted row groups",
+        [f"{'✅' if n_df_jobs == 0 else '❌'} _idf_map({df_terms}) on a"
+         f" fresh Searcher ran {n_df_jobs} Spark jobs",
+         f"{'✅' if got_idf == exp_idf else '❌'} same idf as a term isin"
+         " scan of term_stats (absent term df 0)"],
+        "Job count from a job group around Searcher._idf_map on the\n"
+        "audit index.\n"))
+
     with open(os.path.join(os.path.dirname(os.path.dirname(
             os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("# Physical plans — pushdown/pruning/codegen audit\n\n"

@@ -433,18 +433,17 @@ class ManifestParquetCatalog:
 
     @staticmethod
     def _read_dir(spark: SparkSession, d: str, snap: dict) -> DataFrame:
-        from pyspark.errors import AnalysisException
+        """One data dir as a DataFrame.  A Spark-written snapshot carries
+        its schema, so the read skips parquet schema inference — a Spark
+        job per read (``parquet at ...``) — and a dir with zero data
+        files (empty table / empty dynamic-partition write) reads as an
+        empty frame.  Driver-written tables (``write_small``) infer."""
         from pyspark.sql.types import StructType
 
-        try:
-            return spark.read.parquet(d)
-        except AnalysisException:
-            # zero data files (empty table / empty dynamic-partition write):
-            # reconstruct an empty frame from the committed schema
-            if snap.get("schema"):
-                return spark.createDataFrame(
-                    [], StructType.fromJson(json.loads(snap["schema"])))
-            raise
+        if snap.get("schema"):
+            return spark.read.schema(
+                StructType.fromJson(json.loads(snap["schema"]))).parquet(d)
+        return spark.read.parquet(d)
 
     def write_small(self, columns: dict, table: str, mode: str = "overwrite",
                     meta: dict | None = None) -> str:
@@ -599,9 +598,11 @@ class RowGroupPointReader:
                                 [where[i] for i in order])
             return self._ranges
 
-    def take(self, keys) -> list[dict]:
+    def take(self, keys, match: tuple | None = None) -> list[dict]:
         """The rows whose ``key`` is in ``keys`` (``columns`` only), as
-        dicts; no I/O for an empty ``keys``."""
+        dicts; no I/O for an empty ``keys``.  ``match`` = ``(column,
+        values)`` further keeps only rows whose ``column`` is in
+        ``values`` (the term of a ``bucket`` read)."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -624,7 +625,12 @@ class RowGroupPointReader:
         for fi in sorted(groups):
             t = pq.ParquetFile(self.files[fi]).read_row_groups(
                 sorted(set(groups[fi])), columns=self.columns)
-            out += t.filter(pc.is_in(t[self.key], value_set=want)).to_pylist()
+            keep = pc.is_in(t[self.key], value_set=want)
+            if match is not None:
+                col, values = match
+                keep = pc.and_(keep, pc.is_in(t[col], value_set=pa.array(
+                    list(values), type=t.schema.field(col).type)))
+            out += t.filter(keep).to_pylist()
         return out
 
 

@@ -1236,6 +1236,8 @@ class Searcher:
         queryResultCache): sound because a Searcher pins its snapshot at
         construction — lifecycle ops require a new Searcher anyway.
         Default OFF so latency measurements stay honest."""
+        import pyarrow.parquet as pq
+
         self.spark = spark
         self.cat = cat
         self._result_cache: dict = {}
@@ -1251,14 +1253,17 @@ class Searcher:
             raise UnsupportedQuery(
                 f"zsolr requires spark.sql.session.timeZone=UTC"
                 f" (got {tz!r}); use zsolr.session.get_spark")
-        st = cat.read(spark, "index_stats").collect()[0]
+        # open runs no Spark job: the one-row index_stats and a small
+        # tombstone set are read with pyarrow
+        st = pq.read_table(
+            cat.data_files(cat.snapshot("index_stats"))).to_pylist()[0]
         self.n_docs_total = int(st["n_docs"])
         self.avgdl = float(st["avgdl"]) or 1.0
         self.n_buckets = int(st["n_buckets"])
         # per-field avgdl for extra scored fields (edismax qf) — absent on
         # classic single-field indexes
         self.field_avgdl = {"content": self.avgdl}
-        for key, val in st.asDict().items():
+        for key, val in st.items():
             if key.startswith("avgdl_") and val is not None:
                 self.field_avgdl[key[len("avgdl_"):]] = float(val) or 1.0
         docs_snap = cat.snapshot("docs")
@@ -1267,16 +1272,25 @@ class Searcher:
             cat.data_files(docs_snap), "doc_id",
             ["doc_id", "repo", "path", "commit"])
         # tombstones: a live-docs-style exclusion set.  Small (pre-compaction
-        # deltas) → broadcast into the fast kernel as a numpy array; past the
-        # cap we fall back to the cogroup path (and compact() is overdue).
+        # deltas, by the files' footer row total) → read on the driver and
+        # broadcast into the fast kernel as a numpy array; past the cap we
+        # fall back to the cogroup path (and compact() is overdue).
         MAX_BROADCAST_DELETED = 2_000_000
         if cat.exists("tombstones"):
-            tomb = cat.read(spark, "tombstones").select("doc_id").distinct()
-            self._n_deleted = tomb.count()
+            tomb_snap = cat.snapshot("tombstones")
+            tomb = (cat.read(spark, "tombstones", tomb_snap["snapshot_id"])
+                    .select("doc_id").distinct())
             self.docs = self.docs.join(tomb, "doc_id", "left_anti")
-            if self._n_deleted <= MAX_BROADCAST_DELETED:
-                self._deleted_np = tomb.toPandas()["doc_id"].to_numpy()
+            files = cat.data_files(tomb_snap)
+            if sum(pq.read_metadata(f).num_rows
+                   for f in files) <= MAX_BROADCAST_DELETED:
+                self._deleted_np = np.unique(np.concatenate(
+                    [np.empty(0, dtype=np.int64)]
+                    + [pq.read_table(f, columns=["doc_id"])["doc_id"]
+                       .to_numpy() for f in files]))
+                self._n_deleted = int(self._deleted_np.size)
             else:
+                self._n_deleted = tomb.count()
                 self._deleted_np = None
         else:
             self._n_deleted = 0
@@ -1291,8 +1305,8 @@ class Searcher:
         # (tests) and the pre-alignment fallback keep sequence-routing
         # correctness: an overlapping block still reaches every shard it
         # spans via the sequence() explode.
-        self.positions = bool(st.asDict().get("positions", 1))
-        stored = st.asDict().get("shard_width")
+        self.positions = bool(st.get("positions", 1))
+        stored = st.get("shard_width")
         if shard_width:
             self.shard_width = shard_width
         elif stored:
@@ -1303,7 +1317,14 @@ class Searcher:
                 self.n_docs_total, spark.sparkContext.defaultParallelism)
         self._df_cache: dict[str, int] = {}
         self._postings = cat.read(spark, "postings")
-        self._term_stats = cat.read(spark, "term_stats")
+        # query-term df: a driver point read of the term dictionary's row
+        # groups by bucket (term_stats is written sorted by bucket, term);
+        # the Spark frame serves the dictionary scans (expansion, suggest)
+        stats_snap = cat.snapshot("term_stats")
+        self._term_stats = cat.read(spark, "term_stats",
+                                    stats_snap["snapshot_id"])
+        self._term_df = RowGroupPointReader(
+            cat.data_files(stats_snap), "bucket", ["bucket", "term", "df"])
 
     @staticmethod
     def _filters_as_field_terms(filters: list[tuple]):
@@ -1332,19 +1353,16 @@ class Searcher:
 
     # -- driver-side stats lookups -----------------------------------------
     def _idf_map(self, terms: list[str]) -> dict[str, float]:
-        """term → idf for every query term.  Tiny driver-side lookup against
-        term_stats with bucket partition pruning (Q3); memoized per searcher
-        (term stats are immutable for a pinned snapshot)."""
+        """term → idf for every query term.  A driver point read of the
+        pinned term_stats snapshot (Q3's term-dictionary seek): only the
+        row groups whose footer ``bucket`` range holds a query term's
+        bucket are read, with pyarrow — no Spark job.  Absent terms get
+        df 0.  Memoized per searcher (term stats are immutable for a
+        pinned snapshot)."""
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            buckets = sorted({term_bucket(t, self.n_buckets) for t in missing})
-            rows = (
-                self._term_stats
-                .filter(F.col("bucket").isin(buckets)
-                        & F.col("term").isin(missing))
-                .select("term", "df")
-                .collect()
-            )
+            buckets = {term_bucket(t, self.n_buckets) for t in missing}
+            rows = self._term_df.take(buckets, match=("term", missing))
             found = {r["term"]: r["df"] for r in rows}
             for t in missing:
                 self._df_cache[t] = found.get(t, 0)
@@ -2180,7 +2198,7 @@ class Searcher:
             ast=ast, fast=fast, pos=pos, neg=neg, zero=zero, phrase=phrase,
             eval_terms=sorted(pos | neg | const), all_terms=all_terms,
             norm_terms=sorted((pos | phrase) - zero),
-            # df is fetched for EVERY term (one tiny pruned lookup):
+            # df is fetched for EVERY term (one driver point read):
             # scoring terms need idf, and _match_set's doc-store join
             # gates its broadcast on the Σdf union bound over all
             # contributing terms
