@@ -544,6 +544,32 @@ def test_mm_composes_with_pf(overlap_setup):
         assert abs(g["score"] - osc) <= 1e-9
 
 
+@pytest.mark.parametrize("q,kw", [
+    ("dir1", dict(qf={"path": 1.0})),
+    ("file", dict(qf={"path": 2.0, "content": 1.0}, tie=0.3)),
+    ("file spark py", dict(qf={"content": 1.0}, mm="2")),
+    ("file spark", dict(qf={"content": 1.0}, mm=1, pf={"content": 2.0})),
+])
+def test_explain_sums_to_dismax_score(overlap_setup, q, kw):
+    """debugQuery parity on edismax shapes: for every returned doc the
+    explain contributions sum to the engine score — a path-scored term
+    (path norms and avgdl), a two-field DisMax with tie, an mm MinMatch
+    and a pf phrase leg."""
+    s, _docs = overlap_setup
+    ast = s.dismax_ast(q, **kw)
+    got = s.search(ast, k=10).collect()
+    assert got, q
+    for r in got:
+        br = s.explain(ast, r["doc_id"]).collect()
+        total = sum(x["contribution"] for x in br)
+        assert abs(total - r["score"]) <= 1e-9, (q, r["doc_id"], br)
+        assert not any("\x01" in x["term"] for x in br), br
+    if "path" in kw["qf"]:
+        labels = {x["term"] for x in s.explain(ast, got[0]["doc_id"])
+                  .collect()}
+        assert f"path:{q}" in labels, labels
+
+
 def test_mm_guards(searcher):
     with pytest.raises(UnsupportedQuery, match="boolean"):
         searcher.search_dismax("file OR spark", qf={"content": 1.0},

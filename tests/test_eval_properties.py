@@ -104,17 +104,14 @@ def _ref_eval(node, table, doc):
 
 def _env(table):
     universe = np.arange(N_DOCS, dtype=np.int64)
-    return {"per_term_pos": {}, "idf_map": {},
-            "norm_ids": universe, "norm_vals": np.ones(N_DOCS),
-            "norms_by_field": {}, "avgdl_by_field": {},
-            "universe": universe, "k1": 1.2, "b": 0.75, "avgdl": 1.0}
+    return {"per_term_pos": {}, "idf_map": {}, "norms_by_field": {},
+            "avgdl_by_field": {}, "universe": universe}
 
 
 @settings(max_examples=300, deadline=None)
 @given(per_term_tables(), asts())
 def test_eval_ast_matches_reference(table, ast):
-    ids, sc = _eval_ast(ast, table, np.empty(0, dtype=np.int64),
-                        _env(table))
+    ids, sc = _eval_ast(ast, table, _env(table))
     got = dict(zip(ids.tolist(), sc.tolist()))
     exp = {}
     for doc in range(N_DOCS):
@@ -137,15 +134,14 @@ def test_minmatch_bounds_or_and(table, terms, tie, m):
     sum (the WAND-soundness invariant)."""
     kids = tuple(Term(t) for t in terms)
     env = _env(table)
-    none = np.empty(0, dtype=np.int64)
     m = min(m, len(kids))
-    mm_ids, mm_sc = _eval_ast(MinMatch(kids, m), table, none, env)
-    or_ids, or_sc = _eval_ast(Or(kids), table, none, env)
+    mm_ids, mm_sc = _eval_ast(MinMatch(kids, m), table, env)
+    or_ids, or_sc = _eval_ast(Or(kids), table, env)
     assert set(mm_ids.tolist()) <= set(or_ids.tolist())
     or_map = dict(zip(or_ids.tolist(), or_sc.tolist()))
     for d, s in zip(mm_ids.tolist(), mm_sc.tolist()):
         assert s <= or_map[d] + 1e-12
     if m > 1:
         mm2_ids, _ = _eval_ast(MinMatch(kids, m - 1) if m - 1 > 1
-                               else Or(kids), table, none, env)
+                               else Or(kids), table, env)
         assert set(mm_ids.tolist()) <= set(mm2_ids.tolist())

@@ -43,7 +43,7 @@ def _gen(rng: np.random.Generator, vocab: list, bigrams: list, depth: int):
                     "lang")
     if r < 0.62:
         # 2- to 4-term phrases: m >= 3 exercises the sentinel-combination
-        # enumeration in _eval_phrase (round-4 ADVICE — the int64 overflow
+        # enumeration in _phrase_freq (round-4 ADVICE — the int64 overflow
         # could only bite at m >= 3, which 2-term-only fuzz never reached)
         terms = list(bigrams[rng.integers(len(bigrams))])
         slop = int(rng.integers(0, 4)) if rng.random() < 0.5 else 0

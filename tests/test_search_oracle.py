@@ -1196,6 +1196,19 @@ def test_ranked_pages_run_one_job(searcher, spark):
         assert len(jobs) == 1, (name, jobs)
 
 
+def test_explain_runs_one_job(searcher, spark):
+    """explain reads one doc's breakdown from ONE kernel wave over its
+    shard — no tfs or doc-store collect, no second wave for a phrase —
+    for a term, an AND and a phrase query (each run once first so every
+    term's df is cached)."""
+    for q in ("spark", "hash AND join", '"sort merge"'):
+        doc = searcher.search(q, k=1).collect()[0]["doc_id"]
+        searcher.explain(q, doc).collect()
+        jobs = _group_jobs(spark, f"zsolr-explain-{q}",
+                           lambda: searcher.explain(q, doc).collect())
+        assert len(jobs) == 1, (q, jobs)
+
+
 def test_ranked_pages_compile_no_new_code(searcher, spark):
     """Same-shape ranked queries reuse Spark's generated code: after one
     warm-up, four more ``a AND b`` pages compile no new class (a doc_id
@@ -1258,6 +1271,20 @@ def test_df_lookup_runs_no_job(spark, built_index):
         fresh.search("hash AND join", k=10).collect()))
     assert len(jobs) == 1, jobs
     assert rows == s.search("hash AND join", k=10).collect()
+
+
+def test_read_small_runs_no_job(spark, built_index):
+    """The lifecycle ops' index_stats read: ``read_small`` runs no Spark
+    job and returns the Spark read's row, field for field."""
+    cat, _res = built_index
+    got = []
+    jobs = _group_jobs(spark, "zsolr-read-small",
+                       lambda: got.extend(cat.read_small("index_stats")))
+    assert jobs == [], jobs
+    ref = [r.asDict() for r in cat.read(spark, "index_stats").collect()]
+    assert got == ref and len(got) == 1
+    assert {k: type(v) for k, v in got[0].items()} == \
+        {k: type(v) for k, v in ref[0].items()}
 
 
 def test_searcher_opens_without_job(spark, built_index, tmp_path):

@@ -559,6 +559,18 @@ class IndexBuilder:
 
         return encode_batches
 
+    def _encode_postings(self, tf: DataFrame,
+                         align_width: int | None) -> DataFrame:
+        """The ONE postings encode chain of build, add and compact: salted
+        ``tfs`` rows → JVM pre-group (:func:`grouped_postings`) → Arrow
+        encode (:meth:`_encode_mapper`) → layout shuffle of compressed
+        blocks: one hash partition per bucket, term-clustered per file."""
+        return (grouped_postings(tf)
+                .mapInArrow(worker_task(self._encode_mapper(align_width)),
+                            POSTINGS_SCHEMA)
+                .repartition(self.cfg.n_buckets, "bucket")
+                .sortWithinPartitions("term", "first_doc"))
+
     def _stage_postings(self, spark: SparkSession, build_id: str, fp: str,
                         n_docs: int, result: BuildResult,
                         completed: dict[str, set[int]],
@@ -568,7 +580,6 @@ class IndexBuilder:
         hot_terms = sorted(salt_plan)
         groups = max(1, min(cfg.resume_groups, cfg.n_buckets))
         done = completed.get("postings", set())
-        encode_batches = self._encode_mapper(align_width)
         first_write = not (self.cat.exists("postings") and done)
         for g in range(groups):
             if g in done:
@@ -588,20 +599,7 @@ class IndexBuilder:
                 )
             else:
                 tf = tf.withColumn("salt", F.lit(0))
-            # widen the pre-group shuffle well past the group count so heavy
-            # (term, salt) groups don't collide into the same reducer, then
-            # collect each sub-list into ONE array row JVM-side before the
-            # Arrow boundary (see _encode_mapper)
-            blocks = (
-                grouped_postings(tf)
-                .mapInArrow(worker_task(encode_batches), POSTINGS_SCHEMA)
-            )
-            # layout shuffle of compressed blocks only: one hash partition
-            # per bucket, term-clustered inside each file
-            blocks = (
-                blocks.repartition(cfg.n_buckets, "bucket")
-                .sortWithinPartitions("term", "first_doc")
-            )
+            blocks = self._encode_postings(tf, align_width)
             mode = "overwrite" if first_write else "append"
             first_write = False
             self.cat.write(blocks, "postings", mode=mode,
@@ -658,7 +656,7 @@ class IndexBuilder:
         # term_stats table instead of re-scanning tfs
         if 0 in completed.get("stats", set()):
             result.resumed_stages.append(("stats", 0))
-            row = self.cat.read(spark, "index_stats").collect()[0]
+            row = self.cat.read_small("index_stats")[0]
             result.n_docs, result.avgdl = row["n_docs"], row["avgdl"]
             # resumed postings groups MUST keep the committed alignment —
             # a re-run at different parallelism would otherwise mix widths

@@ -461,6 +461,13 @@ class ManifestParquetCatalog:
                        os.path.join(data_dir, "part-0.parquet"))
         return self._commit(table, [data_dir], mode, meta)
 
+    def read_small(self, table: str) -> list[dict]:
+        """The current snapshot's rows of a tiny table (index_stats) as
+        dicts, read with pyarrow: :meth:`write_small`'s twin, no job."""
+        import pyarrow.parquet as pq
+
+        return pq.read_table(self.data_files(self.snapshot(table))).to_pylist()
+
     def expire_snapshots(self, table: str, keep_last: int = 1,
                          orphan_grace_s: float = 3600.0) -> dict:
         """Iceberg ``expire_snapshots`` parity: keep the newest

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from .build import BuildConfig, IndexBuilder, write_stats
 from .catalog import ManifestParquetCatalog
 from .docids import assign_doc_ids
-from .session import worker_task
 
 
 def _op_meta(op: str) -> dict:
@@ -79,25 +78,25 @@ def _live(spark: SparkSession, cat: ManifestParquetCatalog,
     return df
 
 
-def _stats_scored_fields(cfg_row) -> tuple:
+def _stats_scored_fields(stats: dict) -> tuple:
     """Scored fields recorded in index_stats (``avgdl_{f}`` columns) —
     how lifecycle ops recover the build-time ``scored_fields`` schema so
     delta appends keep emitting per-field terms + norms (a delta indexed
     content-only on a dismax index would silently drop the path field
     for the appended docs)."""
-    extras = tuple(sorted(k[len("avgdl_"):] for k in cfg_row.asDict()
+    extras = tuple(sorted(k[len("avgdl_"):] for k in stats
                           if k.startswith("avgdl_")))
     return ("content",) + extras
 
 
-def _cfg_from_stats(cfg_row) -> BuildConfig:
+def _cfg_from_stats(stats: dict) -> BuildConfig:
     """Reconstruct the immutable build parameters from index_stats."""
     return BuildConfig(
-        n_buckets=int(cfg_row["n_buckets"]),
-        block_size=int(cfg_row["block_size"]),
-        codec=int(cfg_row["codec"]),
-        positions=bool(cfg_row.asDict().get("positions", 1)),
-        scored_fields=_stats_scored_fields(cfg_row))
+        n_buckets=int(stats["n_buckets"]),
+        block_size=int(stats["block_size"]),
+        codec=int(stats["codec"]),
+        positions=bool(stats.get("positions", 1)),
+        scored_fields=_stats_scored_fields(stats))
 
 
 def _refresh_stats(spark: SparkSession, cat: ManifestParquetCatalog,
@@ -107,7 +106,7 @@ def _refresh_stats(spark: SparkSession, cat: ManifestParquetCatalog,
     The build-time parameters come back from index_stats, the alignment
     width included (immutable post-build: existing posting blocks were
     split at those boundaries)."""
-    cfg_row = cat.read(spark, "index_stats").collect()[0]
+    cfg_row = cat.read_small("index_stats")[0]
     write_stats(spark, cat, _live(spark, cat, "tfs"),
                 _live(spark, cat, "docs"), _cfg_from_stats(cfg_row),
                 int(cfg_row["shard_width"]), meta=meta)
@@ -118,7 +117,7 @@ def incremental_update(spark: SparkSession, cat: ManifestParquetCatalog,
                        cfg: BuildConfig | None = None) -> dict:
     """I10 — diff the new corpus snapshot against the doc store and
     re-index only added/changed docs; tombstone removed/changed ones."""
-    cfg_row = cat.read(spark, "index_stats").collect()[0]
+    cfg_row = cat.read_small("index_stats")[0]
     cfg = cfg or _cfg_from_stats(cfg_row)
     op = _op_meta("update")
     live = _live(spark, cat, "docs").select(
@@ -183,7 +182,7 @@ def incremental_add(spark: SparkSession, cat: ManifestParquetCatalog,
     skipped (a bulk load that size is snapshot territory —
     ``incremental_update``)."""
     BROADCAST_DELTA_CAP = 2_000_000
-    cfg_row = cat.read(spark, "index_stats").collect()[0]
+    cfg_row = cat.read_small("index_stats")[0]
     cfg = cfg or _cfg_from_stats(cfg_row)
     op = _op_meta("add")
     live = _live(spark, cat, "docs").select(
@@ -266,7 +265,7 @@ def atomic_update(spark: SparkSession, cat: ManifestParquetCatalog,
     Returns {"updated": n}."""
     if not updates:
         return {"updated": 0}
-    cfg_row = cat.read(spark, "index_stats").collect()[0]
+    cfg_row = cat.read_small("index_stats")[0]
     cfg = cfg or _cfg_from_stats(cfg_row)
     norm_rows = []
     needs_corpus = False
@@ -432,13 +431,9 @@ def _append_partial_index(spark: SparkSession, cat: ManifestParquetCatalog,
     delta_tf = spark.read.parquet(staged_tf["data_dir"])
     n_added = cat.dir_row_count(staged_docs["data_dir"])
     spark.catalog.clearCache()
-    width = int(cat.read(spark, "index_stats").collect()[0]["shard_width"])
-    encode = builder._encode_mapper(width)
-    from .build import POSTINGS_SCHEMA, grouped_postings
-    blocks = (grouped_postings(delta_tf.withColumn("salt", F.lit(0)))
-              .mapInArrow(worker_task(encode), POSTINGS_SCHEMA)
-              .repartition(cfg.n_buckets, "bucket")
-              .sortWithinPartitions("term", "first_doc"))
+    width = int(cat.read_small("index_stats")[0]["shard_width"])
+    blocks = builder._encode_postings(
+        delta_tf.withColumn("salt", F.lit(0)), width)
     staged_blocks = cat.stage(blocks, "postings", partition_by=["bucket"])
     cat.commit_multi([staged_tf, staged_docs, staged_blocks],
                      mode="append", meta=meta)
@@ -455,7 +450,7 @@ def compact_layout(spark: SparkSession, cat: ManifestParquetCatalog):
     blocks, no decode/re-encode and no tfs scan, so it costs a tiny
     fraction of a full :func:`compact`.  Tombstones are untouched (still
     applied at read time); docIDs and scores are unchanged."""
-    cfg_row = cat.read(spark, "index_stats").collect()[0]
+    cfg_row = cat.read_small("index_stats")[0]
     n_buckets = int(cfg_row["n_buckets"])
     blocks = (cat.read(spark, "postings")
               .repartition(n_buckets, "bucket")
@@ -471,23 +466,16 @@ def compact_layout(spark: SparkSession, cat: ManifestParquetCatalog):
 def compact(spark: SparkSession, cat: ManifestParquetCatalog):
     """Rewrite the index without tombstoned docs (segment-merge analogue).
     docIDs are preserved; tombstones are cleared afterwards."""
-    cfg_row = cat.read(spark, "index_stats").collect()[0]
-    cfg = BuildConfig(n_buckets=int(cfg_row["n_buckets"]),
-                      block_size=int(cfg_row["block_size"]),
-                      codec=int(cfg_row["codec"]))
-    builder = IndexBuilder(cat, cfg)
+    cfg_row = cat.read_small("index_stats")[0]
+    builder = IndexBuilder(cat, _cfg_from_stats(cfg_row))
     op = _op_meta("compact")
     live_tfs = _live(spark, cat, "tfs")
     cat.write(live_tfs, "tfs", mode="overwrite", meta=op)
     live_docs = _live(spark, cat, "docs").sortWithinPartitions("doc_id")
     cat.write(live_docs, "docs", mode="overwrite", meta=op)
-    encode = builder._encode_mapper(int(cfg_row["shard_width"]))
-    from .build import POSTINGS_SCHEMA, grouped_postings
-    tfs = cat.read(spark, "tfs")
-    blocks = (grouped_postings(tfs.withColumn("salt", F.lit(0)))
-              .mapInArrow(worker_task(encode), POSTINGS_SCHEMA)
-              .repartition(cfg.n_buckets, "bucket")
-              .sortWithinPartitions("term", "first_doc"))
+    blocks = builder._encode_postings(
+        cat.read(spark, "tfs").withColumn("salt", F.lit(0)),
+        int(cfg_row["shard_width"]))
     cat.write(blocks, "postings", mode="overwrite", partition_by=["bucket"],
               meta=op)
     if cat.exists("tombstones"):

@@ -160,6 +160,14 @@ def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
+def _bm25(idf_t, tf, dl, avgdl):
+    """The ONE BM25 expression (SURVEY.md Appendix A) — of terms, phrases,
+    WAND block bounds and explain's ``tf_norm`` — so every path computes
+    bit-identical scores; scalars or numpy arrays."""
+    k1, b = BM25_K1, BM25_B
+    return idf_t * tf * (k1 + 1.0) / (tf + k1 * (1 - b + b * dl / avgdl))
+
+
 # --------------------------------------------------------------- planning --
 
 
@@ -440,17 +448,20 @@ def _filter_expr(filters: list[tuple]):
 # ----------------------------------------------------------------- kernel --
 
 
-def _eval_phrase(node, env):
+def _phrase_score(node, env, m_ids: np.ndarray, pf: np.ndarray):
+    """Phrase BM25 of docs ``m_ids`` (Lucene PhraseWeight): tf := phrase
+    frequency ``pf``, idf := Σ member idfs, with the phrase FIELD's norms
+    and avgdl (round-7 pf: e.g. edismax ``pf=path``).  → (m_ids, scores)"""
+    n_ids, n_vals = env["norms_by_field"][node.field]
+    return m_ids, _bm25(sum(env["idf_map"][t] for t in node.terms), pf,
+                        n_vals[np.searchsorted(n_ids, m_ids)],
+                        env["avgdl_by_field"][node.field])
+
+
+def _phrase_freq(node, env):
     """Positional PhraseQuery: per-doc phrase frequency via vectorized
-    (doc, position - i) key intersection across the member terms; score =
-    BM25 with tf := phrase_freq and idf := Σ member idfs (Lucene).
-    Field-aware (round-7 pf): a phrase over an extra scored field (its
-    terms namespaced, e.g. edismax ``pf=path``) scores with that FIELD's
-    norms and avgdl."""
-    _fld = getattr(node, "field", "content")
-    _n_ids, _n_vals = env.get("norms_by_field", {}).get(
-        _fld, (env["norm_ids"], env["norm_vals"]))
-    _avgdl = env.get("avgdl_by_field", {}).get(_fld, env["avgdl"])
+    (doc, position - i) key intersection across the member terms →
+    (sorted doc ids, float pf), scored by :func:`_phrase_score`."""
     datas = [env["per_term_pos"].get(t) for t in node.terms]
     empty = (np.empty(0, dtype=np.int64), np.empty(0))
     if any(d is None or len(d[0]) == 0 for d in datas):
@@ -519,13 +530,7 @@ def _eval_phrase(node, env):
             return empty
         locs, pf = np.unique(anchors[ok] >> np.int64(40),
                              return_counts=True)
-        m_ids = ids[locs]
-        pf = pf.astype(np.float64)
-        idf_p = sum(env["idf_map"][t] for t in node.terms)
-        dls = _n_vals[np.searchsorted(_n_ids, m_ids)]
-        k1, b, avgdl = env["k1"], env["b"], _avgdl
-        sc = idf_p * pf * (k1 + 1.0) / (pf + k1 * (1 - b + b * dls / avgdl))
-        return m_ids, sc
+        return ids[locs], pf.astype(np.float64)
     OFF = 64  # keep (pos - i) non-negative in the packed key
     keys = None
     for i, (tids, _tfs, pflat, poffs) in enumerate(datas):
@@ -538,13 +543,7 @@ def _eval_phrase(node, env):
         if not len(keys):
             return empty
     locs, pf = np.unique(keys >> np.int64(40), return_counts=True)
-    m_ids = ids[locs]
-    pf = pf.astype(np.float64)
-    idf_p = sum(env["idf_map"][t] for t in node.terms)
-    dls = _n_vals[np.searchsorted(_n_ids, m_ids)]
-    k1, b, avgdl = env["k1"], env["b"], _avgdl
-    sc = idf_p * pf * (k1 + 1.0) / (pf + k1 * (1 - b + b * dls / avgdl))
-    return m_ids, sc
+    return ids[locs], pf.astype(np.float64)
 
 
 def _complement(ids: np.ndarray, env) -> np.ndarray:
@@ -557,17 +556,17 @@ def _complement(ids: np.ndarray, env) -> np.ndarray:
     return universe[~np.isin(universe, ids, assume_unique=True)]
 
 
-def _eval_ast(node, per_term, allowed_ids, env=None):
+def _eval_ast(node, per_term, env):
     """AST → (sorted doc ids, float64 scores).  per_term: term → (ids, sc)."""
     if isinstance(node, Term):
         return per_term[node.term]
     if isinstance(node, Phrase):
-        return _eval_phrase(node, env)
+        return _phrase_score(node, env, *_phrase_freq(node, env))
     if isinstance(node, Range):  # match-all inside boolean context
         u = env["universe"]
         return u, np.zeros(len(u))
     if isinstance(node, Boost):
-        ids, sc = _eval_ast(node.child, per_term, allowed_ids, env)
+        ids, sc = _eval_ast(node.child, per_term, env)
         return ids, sc * node.weight
     if isinstance(node, ConstSet):
         if not node.terms:
@@ -579,7 +578,7 @@ def _eval_ast(node, per_term, allowed_ids, env=None):
         # Lucene DisjunctionMaxQuery: match = union of children; score =
         # max(child) + tie·(sum of the others).  Children carry their qf
         # weights as Boost wrappers, so per-child scores arrive pre-scaled.
-        parts = [_eval_ast(c, per_term, allowed_ids, env)
+        parts = [_eval_ast(c, per_term, env)
                  for c in node.children]
         ids = np.unique(np.concatenate([p[0] for p in parts]))
         mx = np.zeros(len(ids))
@@ -594,7 +593,7 @@ def _eval_ast(node, per_term, allowed_ids, env=None):
         # BooleanQuery minimumNumberShouldMatch (edismax mm): keep docs
         # matching ≥ m children; score = sum over the matching children
         # (absent children contribute nothing — Lucene SHOULD scoring)
-        parts = [_eval_ast(c, per_term, allowed_ids, env)
+        parts = [_eval_ast(c, per_term, env)
                  for c in node.children]
         ids = np.unique(np.concatenate([p[0] for p in parts]))
         cnt = np.zeros(len(ids), dtype=np.int64)
@@ -609,11 +608,11 @@ def _eval_ast(node, per_term, allowed_ids, env=None):
         parts = []
         for c in node.children:
             if isinstance(c, Not):  # complement leg, score 0
-                cids, _ = _eval_ast(c.child, per_term, allowed_ids, env)
+                cids, _ = _eval_ast(c.child, per_term, env)
                 comp = _complement(cids, env)
                 parts.append((comp, np.zeros(len(comp))))
             else:
-                parts.append(_eval_ast(c, per_term, allowed_ids, env))
+                parts.append(_eval_ast(c, per_term, env))
         ids = np.unique(np.concatenate([p[0] for p in parts]))
         sc = np.zeros(len(ids))
         for pids, psc in parts:
@@ -626,10 +625,10 @@ def _eval_ast(node, per_term, allowed_ids, env=None):
             # all-negative conjunction: universe minus the union of the
             # negated match sets (previously an IndexError — round-1 advice)
             nids = np.unique(np.concatenate(
-                [_eval_ast(n, per_term, allowed_ids, env)[0] for n in neg]))
+                [_eval_ast(n, per_term, env)[0] for n in neg]))
             ids = _complement(nids, env)
             return ids, np.zeros(len(ids))
-        parts = [_eval_ast(c, per_term, allowed_ids, env) for c in pos]
+        parts = [_eval_ast(c, per_term, env) for c in pos]
         ids = parts[0][0]
         for p in parts[1:]:
             ids = ids[np.isin(ids, p[0], assume_unique=True)]
@@ -637,19 +636,19 @@ def _eval_ast(node, per_term, allowed_ids, env=None):
         for pids, psc in parts:
             sc += psc[np.searchsorted(pids, ids)]
         for n in neg:
-            nids, _ = _eval_ast(n, per_term, allowed_ids, env)
+            nids, _ = _eval_ast(n, per_term, env)
             ids_mask = ~np.isin(ids, nids, assume_unique=True)
             ids, sc = ids[ids_mask], sc[ids_mask]
         return ids, sc
     raise UnsupportedQuery(f"cannot evaluate {node}")
 
 
-def _term_ub(idf_t: float, bmax: np.ndarray, k1: float, b: float,
-             avgdl: float, dl_min) -> np.ndarray:
+def _term_ub(idf_t: float, bmax: np.ndarray, avgdl: float,
+             dl_min) -> np.ndarray:
     """Block-max score upper bound (Q8): max tf in block, min doc length
     (scalar, or a per-block array — round-5 tightens dl_min from the
     shard-global minimum to each block's docID-range minimum)."""
-    return idf_t * bmax * (k1 + 1.0) / (bmax + k1 * (1 - b + b * dl_min / avgdl))
+    return _bm25(idf_t, bmax, dl_min, avgdl)
 
 
 def _decode_blocks_raw(rows: pd.DataFrame, keep: np.ndarray, mask: bool,
@@ -824,15 +823,11 @@ class _ShardContext:
         self.base = int(key[0]) * shard_width
         self.width = shard_width
         self.deleted_sorted = deleted_sorted
-        self.k1, self.b = BM25_K1, BM25_B
         self.avgdl_of = avgdl_of
+        self.allowed = None
         if d_ids is not None:
             self.allowed = np.zeros(shard_width, dtype=bool)
             self.allowed[d_ids - self.base] = True
-            self.allowed_ids = np.sort(d_ids)
-        else:
-            self.allowed = None
-            self.allowed_ids = np.empty(0, dtype=np.int64)  # no Range here
         by_term_all = {t: g.sort_values("first_doc")
                        for t, g in blocks.groupby("term")} if len(blocks) \
             else {}
@@ -869,7 +864,7 @@ class _ShardContext:
         if not any(s.needs_universe for s in specs):
             self.universe = np.empty(0, dtype=np.int64)
         elif d_ids is not None:
-            self.universe = self.allowed_ids
+            self.universe = np.sort(d_ids)
         elif deleted_sorted is not None:
             self.universe = norm_ids[~np.isin(norm_ids, deleted_sorted)]
         else:
@@ -903,20 +898,15 @@ class _ShardContext:
                 f" {self.base // self.width} while scoring term {t!r}"
                 f" (norms present:"
                 f" { {f: len(v[0]) for f, v in self.norms.items()} })")
-        dls = n_vals[np.searchsorted(n_ids, ids)]
-        a = self.avgdl_of.get(fld, self.avgdl_of["content"])
-        k1, b = self.k1, self.b
-        idf_t = spec.idf_map[t]
-        return ids, idf_t * tfs * (k1 + 1.0) / (tfs + k1 * (1 - b + b * dls / a))
+        return ids, _bm25(spec.idf_map[t], tfs,
+                          n_vals[np.searchsorted(n_ids, ids)],
+                          self.avgdl_of.get(fld, self.avgdl_of["content"]))
 
     def env(self, spec) -> dict:
         """AST evaluation environment of one query on this shard."""
-        norm_ids, norm_vals = self.norms["content"]
         return {"per_term_pos": self.positions, "idf_map": spec.idf_map,
-                "norm_ids": norm_ids, "norm_vals": norm_vals,
                 "norms_by_field": self.norms, "avgdl_by_field": self.avgdl_of,
-                "universe": self.universe, "k1": self.k1, "b": self.b,
-                "avgdl": self.avgdl_of["content"]}
+                "universe": self.universe}
 
 
 def _wand_per_term(ctx: _ShardContext, spec, prunable: set, k: int,
@@ -958,7 +948,7 @@ def _wand_per_term(ctx: _ShardContext, spec, prunable: set, k: int,
             dl_min = 1.0
         ub = _term_ub(spec.idf_map[t],
                       rows["block_max_tf"].to_numpy(np.float64),
-                      ctx.k1, ctx.b, t_avgdl, dl_min)
+                      t_avgdl, dl_min)
         ub = ub * spec.boost_mult.get(t, 1.0)
         if t in prunable:
             ubs[t] = ub
@@ -999,7 +989,7 @@ def _wand_per_term(ctx: _ShardContext, spec, prunable: set, k: int,
         else:
             p1mask[t] = sel[t] | extra[t]
             phase1[t] = ctx.score(spec, t, *ctx.decode(t, p1mask[t]))
-    p_ids, p_sc = _eval_ast(spec.ast, phase1, ctx.allowed_ids, env)
+    p_ids, p_sc = _eval_ast(spec.ast, phase1, env)
     if after is not None:
         # Sound θ-pool cursor filter (round-6 ADVICE high):
         # phase-1 scores are PARTIAL, so filtering on them lets
@@ -1106,7 +1096,7 @@ def _score_spec(ctx: _ShardContext, spec, k: int | None, wand: bool = False,
     else:
         per_term = {t: ctx.score(spec, t, *ctx.decode(t))
                     for t in spec.eval_terms}
-    ids, sc = _eval_ast(spec.ast, per_term, ctx.allowed_ids, env)
+    ids, sc = _eval_ast(spec.ast, per_term, env)
     n_matches = len(ids)
     if after is not None:
         am = (sc < after[0]) | ((sc == after[0]) & (ids > after[1]))
@@ -1114,6 +1104,70 @@ def _score_spec(ctx: _ShardContext, spec, k: int | None, wand: bool = False,
     if k is not None and len(ids) > k:
         ids, sc = _topk_cut(ids, sc, k)
     return ids, sc, n_matches
+
+
+def _leaf_label(node) -> str:
+    """An explain row's label: content terms bare, field-scored terms
+    ``path:file``, phrases quoted (``"a b"~2``, ``path:"a b"``)."""
+    terms = (node.term,) if isinstance(node, Term) else node.terms
+    fld = term_scored_field(terms[0])
+    text = " ".join(t.split("\x01")[-1] for t in terms)
+    if isinstance(node, Phrase):
+        text = f'"{text}"' + (f"~{node.slop}" if node.slop else "")
+    return text if fld == "content" else f"{fld}:{text}"
+
+
+def _explain_rows(ctx: _ShardContext, spec, doc_id: int, dfs: dict) -> list:
+    """One doc's score breakdown on its shard ``ctx``: a row ``(label,
+    weight, tf, df, idf, tf_norm, contribution)`` per scored leaf (term
+    or phrase), read through :func:`_score_spec`'s decode, norms and BM25
+    calls, weighted by one AST walk — Boost multiplies, DisMax gives 1 to
+    the doc's max child and ``tie`` to the rest, And/MinMatch count only
+    when the doc matches them, Not/ConstSet/Range give 0."""
+    env = ctx.env(spec)
+    per_term = {t: ctx.score(spec, t, *ctx.decode(t))
+                for t in spec.eval_terms}
+    rows: list = []
+
+    def at(ids, vals):
+        i = int(np.searchsorted(ids, doc_id))
+        hit = i < len(ids) and ids[i] == doc_id
+        return hit, float(vals[i]) if hit else 0.0
+
+    def leaf(node, w, tf, idf_t, df, fld, score):
+        dl = at(*ctx.norms[fld])[1]
+        tf_norm = _bm25(1.0, tf, dl, ctx.avgdl_of[fld]) \
+            if tf and idf_t else 0.0
+        rows.append((_leaf_label(node), w, int(tf), df, idf_t, tf_norm,
+                     w * score))
+
+    def walk(node, w):
+        if isinstance(node, Term):
+            t = node.term
+            leaf(node, w, at(*ctx.decode(t))[1],
+                 0.0 if t in spec.zero else spec.idf_map[t], dfs[t],
+                 term_scored_field(t), at(*per_term[t])[1])
+        elif isinstance(node, Phrase):
+            m_ids, pf = _phrase_freq(node, env)
+            leaf(node, w, at(m_ids, pf)[1],
+                 sum(spec.idf_map[t] for t in node.terms), 0, node.field,
+                 at(*_phrase_score(node, env, m_ids, pf))[1])
+        elif isinstance(node, Boost):
+            walk(node.child, w * node.weight)
+        elif isinstance(node, DisMax):
+            top = int(np.argmax([at(*_eval_ast(c, per_term, env))[1]
+                                 for c in node.children]))
+            for i, c in enumerate(node.children):
+                walk(c, w if i == top else w * node.tie)
+        elif isinstance(node, (And, MinMatch, Or)):
+            hit = (isinstance(node, Or)
+                   or at(*_eval_ast(node, per_term, env))[0])
+            for c in node.children:
+                walk(c, w if hit else 0.0)
+        # Not, ConstSet, Range: exclusion / constant-score, no score mass
+
+    walk(spec.ast, 1.0)
+    return rows
 
 
 def _candidate_rows(ids: np.ndarray, sc: np.ndarray, n_matches: int) -> dict:
@@ -1255,8 +1309,7 @@ class Searcher:
                 f" (got {tz!r}); use zsolr.session.get_spark")
         # open runs no Spark job: the one-row index_stats and a small
         # tombstone set are read with pyarrow
-        st = pq.read_table(
-            cat.data_files(cat.snapshot("index_stats"))).to_pylist()[0]
+        st = cat.read_small("index_stats")[0]
         self.n_docs_total = int(st["n_docs"])
         self.avgdl = float(st["avgdl"]) or 1.0
         self.n_buckets = int(st["n_buckets"])
@@ -1340,16 +1393,6 @@ class Searcher:
             else:
                 return None
         return out
-
-    @classmethod
-    def _has_range(cls, node) -> bool:
-        if isinstance(node, Range):
-            return True
-        if isinstance(node, (And, Or)):
-            return any(cls._has_range(c) for c in node.children)
-        if isinstance(node, Not):
-            return cls._has_range(node.child)
-        return False
 
     # -- driver-side stats lookups -----------------------------------------
     def _idf_map(self, terms: list[str]) -> dict[str, float]:
@@ -1585,7 +1628,7 @@ class Searcher:
     def match_scores(self, q) -> DataFrame:
         """Unsorted full match set ``(doc_id, score)`` — exact BM25 scores
         (exhaustive, no WAND), 0.0 for match-all.  The entry for callers
-        that need ids and scores only (delete-by-query, ``explain``):
+        that need ids and scores only (delete-by-query):
         :meth:`_match_set` with no doc-store columns, so a scored query
         pays no doc-store join and no global sort."""
         return self._match_set(q, [])
@@ -2451,94 +2494,51 @@ class Searcher:
         return df.limit(limit)
 
     # -- Solr debugQuery / Lucene Explanation ----------------------------------
-    @staticmethod
-    def _weighted_terms(node, acc: list, w: float = 1.0):
-        """Flatten a scored AST into (term, weight) contributions — our
-        OR sums child scores and AND sums its children's, so the doc
-        score is exactly Σ weight·BM25(term).  NOT legs contribute 0 and
-        ConstSet (prefix/fuzzy/wildcard) legs are constant-score 0."""
-        if isinstance(node, Term):
-            acc.append((node.term, w))
-        elif isinstance(node, (And, Or)):
-            for c in node.children:
-                Searcher._weighted_terms(c, acc, w)
-        elif isinstance(node, Boost):
-            Searcher._weighted_terms(node.child, acc, w * node.weight)
-        elif isinstance(node, (Not, ConstSet)):
-            pass          # exclusion / constant-score: no score mass
-        elif isinstance(node, Phrase):
-            acc.append((node, w))   # resolved to positional tf in explain
-        elif isinstance(node, Range):
-            pass
-        else:
-            raise UnsupportedQuery(f"explain cannot flatten {node}")
+    _EXPLAIN_SCHEMA = ("term string, weight double, tf long, df long,"
+                       " idf double, tf_norm double, contribution double")
 
     def explain(self, q, doc_id: int) -> DataFrame:
-        """Solr ``debugQuery`` analogue (Lucene Explanation): the per-term
-        BM25 breakdown of one document's score —
-        ``contribution = weight · idf · tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl))``
-        — computed driver-side from the doc's tfs rows, its doc_len, and
-        term_stats.  For a matching doc, Σ contribution equals the engine
-        score bit-for-bit (tested).  → (term, weight, tf, df, idf,
-        tf_norm, contribution)."""
+        """Solr ``debugQuery`` analogue (Lucene Explanation): one live
+        doc's score under the scored part of ``q`` (top-level filters
+        dropped), one row per scored leaf — ``contribution = weight ·
+        idf · tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl))`` with the leaf
+        field's norms and avgdl, ``tf_norm`` the saturation at idf 1.
+        ONE kernel wave over the doc's shard reads it through the search
+        core (:func:`_explain_rows`), so Σ contribution equals the engine
+        score.  Labels: content terms bare, field terms ``path:file``;
+        phrase rows give the phrase frequency as tf, Σ member idfs as
+        idf.  → (term, weight, tf, df, idf, tf_norm, contribution)."""
         plan = plan_query(q)
-        ast = plan.scored_ast
-        if ast is None:
-            return local_df(
-                self.spark, [],
-                "term string, weight double, tf long, df long,"
-                " idf double, tf_norm double, contribution double")
-        pairs: list = []
-        self._weighted_terms(self._expand_ast(ast), pairs)
-        phrase_pairs = [(n, w) for n, w in pairs if isinstance(n, Phrase)]
-        pairs = [(t, w) for t, w in pairs if isinstance(t, str)]
-        terms = sorted({t for t, _ in pairs})
-        tf_map = {r["term"]: int(r["tf"]) for r in
-                  (self.cat.read(self.spark, "tfs")
-                   .filter((F.col("doc_id") == doc_id)
-                           & F.col("term").isin(terms))
-                   .select("term", "tf").collect())}
-        dl_rows = (self.docs.filter(F.col("doc_id") == doc_id)
-                   .select("doc_len").collect())
-        if not dl_rows:
+        if plan.scored_ast is None:
+            return local_df(self.spark, [], self._EXPLAIN_SCHEMA)
+        live = (self.docs.filter(F.col("doc_id") == doc_id).limit(1).count()
+                if self._deleted_np is None    # tombstones past the cap
+                else doc_id in self._doc_meta([doc_id])
+                and doc_id not in self._deleted_np)
+        if not live:
             raise ValueError(f"doc {doc_id} not in index")
-        dl = float(dl_rows[0]["doc_len"])
-        idf_map = self._idf_map(terms)
-        k1, b = BM25_K1, BM25_B
-        out = []
-        for t, w in pairs:
-            tf = tf_map.get(t, 0)
-            zero = "=" in t          # field terms are constant-score
-            idf_t = 0.0 if zero else idf_map[t]
-            tf_norm = (tf * (k1 + 1.0)
-                       / (tf + k1 * (1 - b + b * dl / self.avgdl))) \
-                if tf else 0.0
-            out.append((t, float(w), tf, self._df_cache.get(t, 0),
-                        idf_t, tf_norm,
-                        0.0 if zero else w * idf_t * tf_norm))
-        for node, w in phrase_pairs:
-            # Phrase leg (round-3 verdict #6): tf = positional phrase
-            # frequency (pf), idf = Σ member idfs (Lucene PhraseWeight).
-            # The engine's own positional matcher supplies the doc's
-            # phrase score; pf is recovered exactly from the BM25
-            # saturation inverse and re-displayed through the same
-            # formula, so Σ contribution still equals the engine score.
-            label = '"%s"' % " ".join(node.terms) + \
-                (f"~{node.slop}" if node.slop else "")
-            idf_p = sum(idf_map.get(t) if t in idf_map
-                        else self._idf_map([t])[t] for t in node.terms)
-            srow = (self.match_scores(node)
-                    .filter(F.col("doc_id") == doc_id).collect())
-            sc = float(srow[0]["score"]) if srow else 0.0
-            K = k1 * (1 - b + b * dl / self.avgdl)
-            pf = int(round(sc * K / (idf_p * (k1 + 1.0) - sc))) \
-                if sc else 0
-            pf_norm = (pf * (k1 + 1.0) / (pf + K)) if pf else 0.0
-            out.append((label, float(w), pf, 0, idf_p, pf_norm, w * sc))
-        return local_df(
-            self.spark, out,
-            "term string, weight double, tf long, df long,"
-            " idf double, tf_norm double, contribution double")
+        spec = self._plan_spec(Plan(plan.scored_ast, plan.content_terms, [],
+                                    False))
+        dfs = {t: self._df_cache.get(t, 0) for t in spec.all_terms}
+        W, avgdl_of = self.shard_width, self.field_avgdl
+
+        def kernel(key, blocks):
+            # the doc is live: no tombstone mask
+            ctx = _ShardContext(key, blocks, None, [spec], W, None, avgdl_of)
+            return pd.DataFrame(_explain_rows(ctx, spec, doc_id, dfs),
+                                columns=["term", "weight", "tf", "df", "idf",
+                                         "tf_norm", "contribution"])
+
+        # the universe flag ships the content norms, which span every doc
+        # (so the doc's shard always forms a group), and skips the
+        # rare-term norms semi-join and its broadcast job
+        scan = self._postings_scan(spec.all_terms, spec.norm_terms, True)
+        with self._no_aqe():
+            rows = (scan.filter(F.col("shard") == doc_id // W)
+                    .groupBy("shard")
+                    .applyInPandas(worker_task(kernel), self._EXPLAIN_SCHEMA)
+                    .collect())
+        return local_df(self.spark, rows, self._EXPLAIN_SCHEMA)
 
     # -- Solr highlighter ------------------------------------------------------
     @staticmethod
