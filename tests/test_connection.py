@@ -362,16 +362,16 @@ def test_search_with_facets_single_wave(conn, searcher, monkeypatch):
     """Round-6 verdict #2: q + facet.field + rows>0 (the commonest Solr
     request shape) runs ONE kernel evaluation — the ranked page,
     numFound, and every facet field share the persisted match set.
-    Job shape: exactly one postings scan is planned; results are
+    Job shape: exactly one kernel-wave block reader is built; results are
     bit-identical to the old two-wave path."""
     calls = []
-    orig = Searcher._postings_scan
+    orig = Searcher._shard_reader
 
     def counting(self, *a, **kw):
         calls.append(1)
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(Searcher, "_postings_scan", counting)
+    monkeypatch.setattr(Searcher, "_shard_reader", counting)
     res = conn.search("spark", rows=5, facet_field=["lang", "repo"],
                       facet_limit=4)
     assert len(calls) == 1, f"{len(calls)} kernel waves for q+facets"

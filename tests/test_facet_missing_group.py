@@ -115,13 +115,13 @@ def test_group_topn_multi_matches_single(ns, monkeypatch):
             .orderBy("group_val", "rank").collect()]
         for f in ("lang", "repo")}
     calls = []
-    orig = Searcher._postings_scan
+    orig = Searcher._shard_reader
 
     def counting(self, *a, **kw):
         calls.append(1)
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(Searcher, "_postings_scan", counting)
+    monkeypatch.setattr(Searcher, "_shard_reader", counting)
     multi = ns.group_topn_multi("spark", ["lang", "repo"], n=3)
     assert len(calls) == 1, f"{len(calls)} kernel waves for 2 group fields"
     for f in ("lang", "repo"):
@@ -238,17 +238,17 @@ def test_facade_grouping_composes_with_facets(spark, null_index,
 
     conn = SolrConnection(spark, null_index)
     calls = []
-    orig = Searcher._postings_scan
+    orig = Searcher._shard_reader
 
     def counting(self, *a, **kw):
         calls.append(1)
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(Searcher, "_postings_scan", counting)
+    monkeypatch.setattr(Searcher, "_shard_reader", counting)
     res = conn.search("spark", group_field="lang", group_limit=2,
                       facet_field="repo", facet_limit=5, rows=10_000)
     assert len(calls) == 1, f"{len(calls)} kernel waves for group+facets"
-    monkeypatch.setattr(Searcher, "_postings_scan", orig)
+    monkeypatch.setattr(Searcher, "_shard_reader", orig)
     g_only = conn.search("spark", group_field="lang", group_limit=2,
                          rows=10_000)
     f_only = conn.search("spark", rows=0, facet_field="repo",
@@ -372,13 +372,13 @@ def test_facade_boost_with_facets_one_wave(spark, null_index, ns,
     conn = SolrConnection(spark, null_index)
     exp = _brute(ns, "spark", "lang")
     calls = []
-    orig = Searcher._postings_scan
+    orig = Searcher._shard_reader
 
     def counting(self, *a, **kw):
         calls.append(1)
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(Searcher, "_postings_scan", counting)
+    monkeypatch.setattr(Searcher, "_shard_reader", counting)
     res = conn.search("spark", rows=5, facet_field="lang",
                       facet_missing=True,
                       boost="recip(ms(NOW,ts),1e-9,1,1)",

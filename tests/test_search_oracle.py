@@ -673,10 +673,11 @@ def test_search_batch_bit_identical(searcher):
 
 
 def test_kernels_raise_no_eval_type_warning(searcher):
-    """The kernels handed to applyInPandas carry no partial type hints:
-    Spark infers a pandas eval type from hints and warns ("Cannot infer
-    the eval type from type hints") on every call when they are partial.
-    Checked on the batch kernel and on a cogroup (range-filter) query."""
+    """The kernel-wave functions handed to Spark carry no partial type
+    hints: Spark infers a pandas eval type from hints and warns ("Cannot
+    infer the eval type from type hints") on every call when they are
+    partial.  Checked on the batch wave and on a cogroup (range-filter)
+    wave."""
     import warnings
 
     with warnings.catch_warnings(record=True) as rec:
@@ -1031,11 +1032,11 @@ def test_group_topn_matches_oracle(searcher, oracle):
 def test_group_topn_single_kernel_pass(searcher):
     """Round-4 verdict #3: group hit counts ride the top-n cut's own
     lineage — the physical plan evaluates the search kernel ONCE (one
-    FlatMapGroupsInPandas), not once per branch as the old
+    MapInArrow kernel wave), not once per branch as the old
     top-join-counts shape did."""
     df = searcher.group_topn("spark", "lang", n=3)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
 
 
 def test_facet_query_counts(searcher):

@@ -103,17 +103,19 @@ def main():
 
     # 4b. block→shard routing replication (round-2 alignment fix): with
     # shard-aligned blocks every block routes to exactly ONE shard, so the
-    # exploded row count equals the block count (round 1 replicated sparse
-    # terms' blocks across every shard their range overlapped)
+    # kernel wave's reader hands out as many block rows as there are
+    # blocks (round 1 replicated sparse terms' blocks across every shard
+    # their range overlapped)
     from zsolr.build import NORMS_TERM
     W = s.shard_width
     fetch_terms = ["spark", "hash", NORMS_TERM]
     buckets = sorted({term_bucket(t, s.n_buckets) for t in fetch_terms})
-    basep = s._postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(fetch_terms))
-    n_blocks = basep.count()
-    n_routed = basep.withColumn("shard", F.explode(F.expr(
-        f"sequence(first_doc DIV {W}, last_doc DIV {W})"))).count()
+    n_blocks = s._postings.filter(
+        F.col("bucket").isin(buckets)
+        & F.col("term").isin(fetch_terms)).count()
+    # the universe flag reads the content norms for every shard
+    n_routed = sum(len(b) for b in s._shard_reader(
+        ["spark", "hash"], ["spark", "hash"], True, False).read().values())
     repl = n_routed / max(1, n_blocks)
     sections.append((
         "Block→shard routing (query fast path): 1:1, no replication",
@@ -121,8 +123,9 @@ def main():
          f"touched: {n_routed} routed / {n_blocks} blocks "
          f"(replication ×{repl:.3f}, shard_width={W}, "
          f"{-(-s.n_docs_total // W)} shards)"],
-        "Measured by counting rows before/after the shard explode for a\n"
-        "2-term query + norms sidecar on the multi-shard audit index.\n"))
+        "Measured by counting the kernel wave reader's per-shard block\n"
+        "rows against the blocks of a 2-term query + norms sidecar on the\n"
+        "multi-shard audit index.\n"))
 
     # 4c. suggester: StartsWith predicate pushed to the term_stats scan
     add("Suggest (terms component): StartsWith pushdown on term_stats",
@@ -172,7 +175,7 @@ def main():
     sections.append((
         "Batch execution (round-3): one kernel wave for N queries",
         [f"{'✅' if n_ok else '❌'} 2 queries through one "
-         "postings scan + one driver-side doc fetch (1 Spark job)"],
+         "kernel wave + one driver-side doc fetch (1 Spark job)"],
         "search_batch unions the queries' term sets, decodes each term\n"
         "once per shard, and evaluates every AST against the shared\n"
         "decode; see BENCH batch_suite_s/batch_speedup.\n"))
@@ -227,7 +230,7 @@ def main():
     # 13. round-6: search_boosted = ONE kernel wave (the exhaustive
     # _match_set) + doc join + TakeOrdered — per-doc recency
     # multipliers defeat static block-max bounds, so the plan must show
-    # exactly one FlatMapGroupsInPandas and a bounded top-k cut, never a
+    # exactly one MapInArrow kernel wave and a bounded top-k cut, never a
     # global sort
     boost, now = "recip(ms(NOW,ts),1e-9,1,1)", "2021-06-01T00:00:00Z"
     bq = s.search_boosted("spark", k=5, boost=boost, now=now)
@@ -239,12 +242,12 @@ def main():
         .orderBy(F.desc("score"), F.asc("doc_id")).limit(5)
     ltxt = explain_str(lazy)
     # formatted explain lists each node twice (tree line + detail header)
-    one_kernel = ltxt.count("FlatMapGroupsInPandas") == 2
+    one_kernel = ltxt.count("MapInArrow") == 2
     bounded = "TakeOrderedAndProject" in ltxt
     page_ok = bq.count() == 5
     sections.append((
         "Recency boost (Q38, round-6): one kernel wave + TakeOrdered cut",
-        [f"{'✅' if one_kernel else '❌'} exactly one FlatMapGroupsInPandas"
+        [f"{'✅' if one_kernel else '❌'} exactly one MapInArrow"
          " (exhaustive scoring, single wave)",
          f"{'✅' if bounded else '❌'} TakeOrderedAndProject (O(k)/partition"
          " cut, no global sort)",
@@ -253,20 +256,20 @@ def main():
 
     # 13b. field-sorted scored page: the kernel scores and cuts by score
     # only, so a sort override is the match set (fast-path kernel, no
-    # doc-store cogroup) cut by ONE TakeOrdered — audited on the engine's
+    # doc-id exchange) cut by ONE TakeOrdered — audited on the engine's
     # own unbounded page (search k=None keeps the sort) cut to k rows
     fsort = s.search("spark", k=None, sort="doc_len desc").limit(5)
     ftxt = explain_str(fsort)
-    f_kernel = ftxt.count("FlatMapGroupsInPandas") == 2
-    f_nocog = "FlatMapCoGroupsInPandas" not in ftxt
+    f_kernel = ftxt.count("MapInArrow") == 2
+    f_nocog = "Range (" in ftxt and " div " not in ftxt
     f_cut = ("TakeOrderedAndProject" in ftxt
              and "rangepartitioning" not in ftxt)
     sections.append((
         "Field-sorted scored page: one kernel wave + TakeOrdered cut",
-        [f"{'✅' if f_kernel else '❌'} exactly one FlatMapGroupsInPandas"
+        [f"{'✅' if f_kernel else '❌'} exactly one MapInArrow"
          " (the fast-path kernel)",
-         f"{'✅' if f_nocog else '❌'} no FlatMapCoGroupsInPandas (a sort"
-         " override ships no doc-store side)",
+         f"{'✅' if f_nocog else '❌'} the wave runs over `Range`, no doc-id"
+         " exchange (a sort override ships no doc-store side)",
          f"{'✅' if f_cut else '❌'} TakeOrderedAndProject on the sort keys"
          " (no global sort: no rangepartitioning Exchange)"],
         ftxt[:4000] + "\n"))
@@ -301,7 +304,7 @@ def main():
     ctxt = explain_str(cal)
     no_py = ("BatchEvalPython" not in ctxt
              and "ArrowEvalPython" not in ctxt
-             and "FlatMapGroupsInPandas" not in ctxt)
+             and "MapInArrow" not in ctxt)
     one_agg = "HashAggregate" in ctxt
     sections.append((
         "Calendar date facet (round-7): codegen bucket assignment",
@@ -330,11 +333,11 @@ def main():
          " the pair frame (sub-bucket work only for survivors)"],
         ntxt[:4000] + "\n"))
 
-    # 17. round-7: edismax per-field postings scan — bucket pruning +
-    # term pushdown cover the namespaced path terms AND both norms
-    # sidecars in ONE scan (no extra scan per field); dictionary scans
-    # exclude the sentinel namespaces via the `term >= '0'` range, which
-    # pushes to parquet as GreaterThanOrEqual
+    # 17. round-7: edismax per-field postings read — the kernel wave's
+    # reader covers the namespaced path terms AND both norms sidecars
+    # from the files of their buckets only (no extra read per field);
+    # dictionary scans exclude the sentinel namespaces via the
+    # `term >= '0'` range, which pushes to parquet as GreaterThanOrEqual
     import shutil as _sh
     droot = "/tmp/zsolr-plans-dm"
     _sh.rmtree(droot, ignore_errors=True)
@@ -344,24 +347,28 @@ def main():
         scored_fields=("content", "path"))).build(
         spark, "plans-dm", corpus_df=corpus)
     ds = Searcher(spark, dcat)
-    from zsolr.build import scored_term
-    dm_terms = ["spark", scored_term("path", "spark")]
-    dtxt = explain_str(ds._postings_scan(dm_terms, dm_terms, False))
-    import re as _re
-    d_bucket = bool(_re.search(
-        r"PartitionFilters: \[bucket#\d+ IN \(", dtxt))
-    d_term = "PushedFilters: [In(term," in dtxt
-    n_scans = dtxt.count("Location: InMemoryFileIndex")
+    from zsolr.build import field_norms_term, scored_term
+    dm_terms = ["spark", scored_term("path", "dir1")]
+    dm_reader = ds._shard_reader(dm_terms, dm_terms, False, False)
+    sidecars = {NORMS_TERM, field_norms_term("path")}
+    d_keys = set(dm_reader.files_of) == set(dm_terms) | sidecars
+    d_bucket = all(
+        p.split("/")[-2] == f"bucket={term_bucket(t, ds.n_buckets)}"
+        for t, ps in dm_reader.files_of.items() for p in ps)
+    d_read = dm_reader.read()
+    got_terms = set().union(*(set(b["term"]) for b in d_read.values()))
     sections.append((
-        "edismax per-field scan (round-7 Q44): one pruned scan for both"
-        " fields + both norms sidecars",
-        [f"{'✅' if d_bucket else '❌'} bucket partition pruning on the"
-         " union of content/path term buckets",
-         f"{'✅' if d_term else '❌'} namespaced terms + sidecars pushed"
-         " as one In(term, …) parquet predicate",
-         f"{'✅' if n_scans <= 2 else '❌'} scan count {n_scans} ≤ 2"
-         " (q-terms leg + norms leg; NOT one scan per field)"],
-        dtxt[:4000] + "\n"))
+        "edismax per-field read (round-7 Q44): one bucket-pruned read for"
+        " both fields + both norms sidecars",
+        [f"{'✅' if d_keys else '❌'} the wave's reader holds files for the"
+         " content/path terms and their two sidecars only",
+         f"{'✅' if d_bucket else '❌'} every file comes from its term's"
+         " `bucket=N` dir",
+         f"{'✅' if got_terms == set(dm_terms) | sidecars else '❌'} one"
+         f" read returns both fields' blocks and both sidecars"
+         f" ({sorted(got_terms)}, {len(d_read)} shards)"],
+        "\n".join(f"{t!r}: {ps}" for t, ps in
+                  sorted(dm_reader.files_of.items())) + "\n"))
     dict_txt = explain_str(
         ds._term_stats.filter(F.col("term").startswith("sp")
                               & ~F.col("term").contains("=")
@@ -375,12 +382,12 @@ def main():
          " GreaterThanOrEqual"],
         dict_txt[:2500] + "\n"))
 
-    # 18. the kernel wave's shuffle is sized to the shard count, not
-    # spark.sql.shuffle.partitions: on the default-width (one-shard)
-    # sf0.001 index the postings — and on the cogroup path the doc-id
-    # side too — exchange into ONE partition (Spark plans a one-partition
-    # repartition as SinglePartition); the 8-shard audit index hashes
-    # into 8
+    # 18. the kernel wave is ONE mapInArrow stage of min(n_shards,
+    # shuffle partitions) tasks that read their own posting blocks: a
+    # fast ranked wave is Range → MapInArrow (no exchange, no file scan);
+    # a range-filtered (cogroup) wave's only exchange moves the filtered
+    # doc ids by shard — SinglePartition on the default-width (one-shard)
+    # sf0.001 index, hashpartitioning(doc_id DIV W) on the audit index
     from zsolr.search import Plan, plan_query
     oroot = "/tmp/zsolr-plans-one"
     _sh.rmtree(oroot, ignore_errors=True)
@@ -395,36 +402,48 @@ def main():
             return (srch._candidates([srch._plan_spec(plan_query(q))], 10,
                                      **kw)
                     ._jdf.queryExecution().executedPlan().toString())
+
+    def range_plan(srch):
+        return wave_plan(srch, "commit:[a TO f] AND spark",
+                         docs_f=srch._match_set(
+                             Plan(None, [], rplan.filters, True), []))
+
+    def fast_ok(txt, n_tasks):
+        lines = [ln.lstrip(" +-*()0123456789") for ln in txt.splitlines()]
+        return (lines[0].startswith("MapInArrow")
+                and lines[1].startswith(f"Range (0, {n_tasks}, step=1,"
+                                        f" splits={n_tasks}")
+                and "Exchange" not in txt and "FileScan" not in txt)
+
     ftxt = wave_plan(one, "hash AND join", wand=True)
-    rtxt = wave_plan(one, "commit:[a TO f] AND spark",
-                     docs_f=one._match_set(Plan(None, [], rplan.filters,
-                                                True)))
     mtxt = wave_plan(s, "hash AND join", wand=True)
+    rtxt, rmtxt = range_plan(one), range_plan(s)
     n_one = -(-one.n_docs_total // one.shard_width)
     n_multi = -(-s.n_docs_total // s.shard_width)
+    t_multi = min(n_multi, 16)
     single = "Exchange SinglePartition, REPARTITION_BY_NUM"
-    f_ok = ftxt.count("Exchange ") == ftxt.count(single) == 1
-    f_k = ftxt.count("FlatMapGroupsInPandas")
-    r_ok = (rtxt.count("Exchange ") == rtxt.count(single) == 2
-            and rtxt.count("FlatMapCoGroupsInPandas") == 1)
-    m_hash = "Exchange hashpartitioning(shard#"
-    m_ok = (mtxt.count("Exchange ") == mtxt.count(m_hash) == 1
-            and f"L, {n_multi}), REPARTITION_BY_NUM" in mtxt)
+    r_ok = (rtxt.count("Exchange ") == rtxt.count(single) == 1
+            and rtxt.count("MapInArrow") == 1)
+    m_hash = (f"Exchange hashpartitioning((doc_id#")
+    rm_ok = (rmtxt.count("Exchange ") == rmtxt.count(m_hash) == 1
+             and f" div {s.shard_width}), {t_multi}), REPARTITION_BY_NUM"
+             in rmtxt and rmtxt.count("MapInArrow") == 1)
     sections.append((
-        "Kernel wave (Q4-Q8): shuffle sized to the shard count",
+        "Kernel wave (Q4-Q8): one MapInArrow stage reading its own blocks",
         [f"{'✅' if n_one == 1 else '❌'} default-width sf0.001 index has"
          f" {n_one} shard(s)",
-         f"{'✅' if f_ok else '❌'} fast ranked wave: exactly one Exchange,"
-         f" `{single}`",
-         f"{'✅' if f_k == 1 else '❌'} fast ranked wave: {f_k}"
-         " FlatMapGroupsInPandas",
-         f"{'✅' if r_ok else '❌'} fq range wave: one `{single}` on each"
-         " side of the one FlatMapCoGroupsInPandas",
-         f"{'✅' if m_ok else '❌'} {n_multi}-shard audit index: one"
-         f" `hashpartitioning(shard, {n_multi})` Exchange (shuffle"
-         " partitions 16)"],
-        ftxt[:3000] + "\n\n" + rtxt[:4000] + "\n\n" + mtxt[:3000]
-        + "\n"))
+         f"{'✅' if fast_ok(ftxt, 1) else '❌'} fast ranked wave:"
+         " `Range → MapInArrow`, 1 task, no Exchange, no FileScan",
+         f"{'✅' if fast_ok(mtxt, t_multi) else '❌'} {n_multi}-shard audit"
+         f" index: `Range → MapInArrow` over {t_multi} tasks (shuffle"
+         " partitions 16), no Exchange, no FileScan",
+         f"{'✅' if r_ok else '❌'} fq range wave: exactly one Exchange,"
+         f" `{single}`, of the filtered doc ids",
+         f"{'✅' if rm_ok else '❌'} fq range wave on the audit index:"
+         f" exactly one Exchange, `hashpartitioning(doc_id DIV"
+         f" {s.shard_width}, {t_multi})`"],
+        ftxt[:3000] + "\n\n" + mtxt[:3000] + "\n\n" + rtxt[:4000]
+        + "\n\n" + rmtxt[:4000] + "\n"))
 
     # 19. query-term df: a driver point read of term_stats' row groups
     # by bucket (footer min/max), no Spark job — on a fresh Searcher, so

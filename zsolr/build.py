@@ -413,20 +413,17 @@ class IndexBuilder:
             "status": pa.array(cols[7], pa.string()),
         }, "manifest", mode=mode)
 
-    def _completed(self, spark: SparkSession, fingerprint: str) -> dict[str, set[int]]:
-        """stage → set of completed partition_ids for this fingerprint."""
+    def _completed(self, fingerprint: str) -> dict[str, set[int]]:
+        """stage → set of completed partition_ids for this fingerprint:
+        the manifest's rows read with pyarrow (``read_small``) and
+        filtered on the driver — no Spark job."""
         if not self.cat.exists("manifest"):
             return {}
-        rows = (
-            self.cat.read(spark, "manifest")
-            .filter((F.col("input_fingerprint") == fingerprint)
-                    & (F.col("status") == "committed"))
-            .select("stage", "partition_id")
-            .collect()
-        )
         out: dict[str, set[int]] = {}
-        for r in rows:
-            out.setdefault(r["stage"], set()).add(r["partition_id"])
+        for r in self.cat.read_small("manifest"):
+            if (r["input_fingerprint"] == fingerprint
+                    and r["status"] == "committed"):
+                out.setdefault(r["stage"], set()).add(r["partition_id"])
         return out
 
     # -------------------------------------------------------------- stages --
@@ -644,7 +641,7 @@ class IndexBuilder:
         build_id = build_id or f"b{int(time.time() * 1000)}"
         result = BuildResult(build_id=build_id, fingerprint=fp,
                              n_docs=0, avgdl=0.0)
-        completed = self._completed(spark, fp)
+        completed = self._completed(fp)
         corpus = corpus_df if corpus_df is not None else read_corpus(spark, corpus_location)
 
         if 0 in completed.get("docs_tfs", set()):

@@ -3,12 +3,15 @@
 Replaces zeit.solr's ``SolrConnection.search(q, rows=, sort=, fq=)``:
 parse (Q1, driver) → ONE planner, ``Searcher._plan_spec`` → ``QuerySpec``
 (equality filters become zero-scored field terms, multi-term expansion,
-idf, fast-vs-cogroup choice) → posting lookup with bucket partition pruning
-(Q3) → one distributed wave of doc-range-shard kernels doing boolean set
+idf, fast-vs-cogroup choice) → ONE ``mapInArrow`` kernel wave
+(``Searcher._candidates``) whose tasks each read their shards' posting
+blocks with pyarrow (``ShardBlockReader``: bucket dirs, then row-group
+footer pruning — Q3) and run doc-range-shard kernels doing boolean set
 algebra + BM25 + block-max WAND + bounded top-k (Q4-Q8, vectorized numpy in
-``make_search_kernel``): a ``groupBy(shard).applyInPandas`` fast path over
-the query terms' postings only, and a cogroup with a filtered doc-id side
-only for range predicates and tombstone overflow →
+``make_search_kernel``).  Fast path: ``spark.range`` tasks, each owning a
+contiguous shard range — no scan, no exchange.  Cogroup path (range
+predicates, tombstone overflow): the filtered doc ids are hash-partitioned
+by shard into the same tasks — the only exchange →
 ``Searcher._merge_fetch`` (Q9): below ``COLLECT_CAP`` the driver merges the
 per-shard candidates itself (else an executor-side cut runs first), then
 reads the page's ``(repo, path, commit)`` from the doc store's row groups
@@ -19,15 +22,18 @@ TakeOrdered over the match set (``Searcher._page``).
 
 Scale design (north_rule: 10^12 files):
 * postings for the query's terms are read with **bucket partition pruning**
-  (``bucket=crc32(term)%NB`` directories) + parquet term dictionary filters
-  — the scan touches only the query terms' data;
+  (only the ``bucket=crc32(term)%NB`` directories of the snapshot pinned at
+  open) + footer ``term``/``first_doc``/``last_doc`` row-group statistics
+  — a task touches only the query terms' blocks for its shards;
 * the corpus docID space is cut into contiguous **shards**; every posting
-  block (norms sidecar included) is routed to the shards its
-  ``[first_doc, last_doc]`` range overlaps, so each kernel task holds all
-  query-term blocks and doc lengths for its docID range — on the cogroup
-  path also the filtered doc ids routed by ``doc_id DIV width`` — and
-  AND/OR/NOT + BM25 + filters evaluate locally with **zero additional
-  shuffle** and bounded per-task state (≤ shard_width docs);
+  block is routed to the shards its ``[first_doc, last_doc]`` range
+  overlaps, and the norms sidecar is read only for shards holding a
+  scoring term's block (all of them for complement legs), so each kernel
+  task holds all query-term blocks and doc lengths for its docID range —
+  on the cogroup path also the filtered doc ids routed by ``doc_id DIV
+  width`` — and AND/OR/NOT + BM25 + filters evaluate locally with **no
+  postings shuffle** and bounded per-task state (≤ shard_width docs per
+  shard);
 * per-shard candidates are ≤ k rows each → the global merge is O(k·shards),
   driver-side tiny.
 
@@ -38,6 +44,7 @@ algebra is numpy ``searchsorted``/``union1d``; scoring is array math.
 from __future__ import annotations
 
 import math
+import os
 import re
 from dataclasses import dataclass
 
@@ -815,12 +822,14 @@ class _ShardContext:
     live-doc universe and a per-term cache of full decodes — so a term
     decodes fully at most once per shard however many queries read it.
 
-    ``d_ids`` are the cogroup path's filtered doc-store ids (``None`` on
-    the fast path, where the broadcast tombstone set masks instead)."""
+    ``blocks`` is ``None`` when the shard holds no block.  ``d_ids`` are
+    the cogroup path's filtered doc-store ids (``None`` on the fast path,
+    where the broadcast tombstone set masks instead)."""
 
-    def __init__(self, key, blocks: pd.DataFrame, d_ids, specs: list,
-                 shard_width: int, deleted_sorted, avgdl_of: dict):
-        self.base = int(key[0]) * shard_width
+    def __init__(self, shard: int, blocks: pd.DataFrame | None, d_ids,
+                 specs: list, shard_width: int, deleted_sorted,
+                 avgdl_of: dict):
+        self.base = int(shard) * shard_width
         self.width = shard_width
         self.deleted_sorted = deleted_sorted
         self.avgdl_of = avgdl_of
@@ -829,8 +838,8 @@ class _ShardContext:
             self.allowed = np.zeros(shard_width, dtype=bool)
             self.allowed[d_ids - self.base] = True
         by_term_all = {t: g.sort_values("first_doc")
-                       for t, g in blocks.groupby("term")} if len(blocks) \
-            else {}
+                       for t, g in blocks.groupby("term")} \
+            if blocks is not None and len(blocks) else {}
         # per-field norms sidecars (Lucene per-field similarity): content
         # uses the classic NORMS_TERM; each extra scored field in play adds
         # its own sidecar term
@@ -1170,6 +1179,157 @@ def _explain_rows(ctx: _ShardContext, spec, doc_id: int, dfs: dict) -> list:
     return rows
 
 
+# posting-block columns the per-shard core reads (``positions`` only when
+# a query has a phrase)
+_BLOCK_COLS = ("term", "first_doc", "last_doc", "doc_gaps", "tfs",
+               "block_max_tf")
+
+
+def _norm_sidecars(norm_terms, universe: bool) -> set:
+    """The norms sidecar terms a wave reads: one per scored field of
+    ``norm_terms`` (Lucene per-field norms), plus content's — which spans
+    every doc — when a complement leg needs the shard universe; none when
+    nothing scores."""
+    out = {field_norms_term(term_scored_field(t)) for t in norm_terms}
+    if universe:
+        out.add(NORMS_TERM)
+    return out
+
+
+def _stat_range(rg, col: int):
+    """``(min, max)`` of a row group's column from its footer statistics;
+    ``None`` for a bound the footer does not hold."""
+    st = rg.column(col).statistics
+    if st is None or not st.has_min_max:
+        return None, None
+    return st.min, st.max
+
+
+@dataclass
+class ShardBlockReader:
+    """The kernel wave's posting-block reader: pyarrow reads of one pinned
+    postings snapshot, no Spark operator.  ``files_of`` maps each query
+    term and norms sidecar to the files of its ``bucket=N`` dir (Q3's
+    partition pruning); :meth:`read` keeps the row groups whose footer
+    ``term`` and ``first_doc``/``last_doc`` ranges overlap the wanted
+    terms and shards, then routes every block to each shard its
+    ``[first_doc, last_doc]`` overlaps — ``sequence(first_doc DIV W,
+    last_doc DIV W)`` — so a shard holds all its query-term blocks.
+
+    Norms: the sidecars are read after the query terms, only for the
+    shards holding a block of a ``norm_terms`` term (the only shards
+    that score); with ``universe`` for every shard read."""
+    files_of: dict
+    width: int
+    terms: tuple
+    norm_terms: tuple
+    universe: bool
+    positions: bool
+
+    def read(self, lo: int = 0, hi: int | None = None,
+             ids: np.ndarray | None = None) -> dict:
+        """shard → its posting blocks (a pandas frame) for the shards in
+        ``[lo, hi)`` (``hi`` None: no upper bound), or only the sorted
+        shard ids ``ids``.  Shards without a block are absent."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if ids is not None:
+            if not len(ids):
+                return {}
+            lo, hi = int(ids[0]), int(ids[-1]) + 1
+        cols = _BLOCK_COLS + (("positions",) if self.positions else ())
+        parts = [self._blocks(self.terms, lo, hi, ids, cols)]
+        sidecars = _norm_sidecars(self.norm_terms, self.universe)
+        if sidecars and not self.universe:
+            # only the shards holding a scoring term's block read norms
+            t, sh = parts[0]
+            ids = np.empty(0, dtype=np.int64) if t is None else np.unique(
+                sh[pc.is_in(t["term"], value_set=pa.array(
+                    list(self.norm_terms), pa.string())).to_numpy(
+                        zero_copy_only=False)])
+            lo, hi = (int(ids[0]), int(ids[-1]) + 1) if len(ids) else (0, 0)
+        if sidecars and (ids is None or len(ids)):
+            parts.append(self._blocks(sorted(sidecars), lo, hi, ids, cols))
+        parts = [(t, sh) for t, sh in parts if t is not None]
+        if not parts:
+            return {}
+        sh = np.concatenate([p[1] for p in parts])
+        order = np.argsort(sh, kind="stable")
+        pdf = (pa.concat_tables([p[0] for p in parts])
+               .take(pa.array(order)).to_pandas())
+        keys, starts = np.unique(sh[order], return_index=True)
+        ends = np.append(starts[1:], len(sh))
+        return {int(s): pdf.iloc[a:b]
+                for s, a, b in zip(keys, starts, ends)}
+
+    def _blocks(self, terms, lo: int, hi: int | None, ids, cols):
+        """The blocks of ``terms`` overlapping the wanted shards, one row
+        per (block, shard) → ``(table, shard ids)``, or ``(None, None)``
+        when no row group can hold one."""
+        import bisect
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        W = self.width
+        terms = sorted(terms)
+        last = math.inf if hi is None else hi - 1       # last wanted shard
+
+        def wanted(first: int, end) -> bool:
+            """Any wanted shard in ``[first, end]``?"""
+            first, end = max(first, lo), min(end, last)
+            if ids is None:
+                return first <= end
+            i = int(np.searchsorted(ids, first))
+            return i < len(ids) and ids[i] <= end
+
+        tabs = []
+        for path in sorted({p for t in terms for p in self.files_of.get(
+                t, ())}):
+            with pq.ParquetFile(path) as pf:
+                md = pf.metadata
+                names = md.schema.names
+                ti, fi, li = (names.index(c)
+                              for c in ("term", "first_doc", "last_doc"))
+                groups = []
+                for g in range(md.num_row_groups):
+                    rg = md.row_group(g)
+                    if not rg.num_rows:
+                        continue
+                    tmin, tmax = _stat_range(rg, ti)
+                    if isinstance(tmin, str) and isinstance(tmax, str):
+                        j = bisect.bisect_left(terms, tmin)
+                        if j == len(terms) or terms[j] > tmax:
+                            continue
+                    fmin = _stat_range(rg, fi)[0]
+                    lmax = _stat_range(rg, li)[1]
+                    if wanted(0 if fmin is None else fmin // W,
+                              math.inf if lmax is None else lmax // W):
+                        groups.append(g)
+                if groups:
+                    tabs.append(pf.read_row_groups(groups,
+                                                   columns=list(cols)))
+        if not tabs:
+            return None, None
+        t = pa.concat_tables(tabs)
+        t = t.filter(pc.is_in(t["term"],
+                              value_set=pa.array(terms, pa.string())))
+        first = np.maximum(t["first_doc"].to_numpy() // W, lo)
+        end = t["last_doc"].to_numpy() // W
+        if hi is not None:
+            end = np.minimum(end, hi - 1)
+        n = np.maximum(end - first + 1, 0)
+        rep = np.repeat(np.arange(len(n)), n)
+        sh = np.repeat(first, n) + np.arange(len(rep)) \
+            - np.repeat(np.cumsum(n) - n, n)
+        if ids is not None:
+            keep = np.isin(sh, ids)
+            rep, sh = rep[keep], sh[keep]
+        return t.take(pa.array(rep, pa.int64())), sh
+
+
 def _candidate_rows(ids: np.ndarray, sc: np.ndarray, n_matches: int) -> dict:
     """Kernel output columns: the candidates plus one sentinel row
     ``(-1, n_matches)`` carrying the shard's hit count."""
@@ -1180,32 +1340,25 @@ def _candidate_rows(ids: np.ndarray, sc: np.ndarray, n_matches: int) -> dict:
 def make_search_kernel(specs: list, k: int | None, shard_width: int,
                        avgdl_by_field: dict, wand: bool = False,
                        deleted: np.ndarray | None = None,
-                       cogroup: bool = False, batch: bool = False,
                        after: tuple | None = None, block_acc=None):
-    """Build the per-shard kernel over planned queries (:class:`QuerySpec`).
-    Three entry points share one core — :class:`_ShardContext` decodes a
-    shard once, :func:`_score_spec` scores one query against it:
+    """Build the per-shard kernel over planned queries (:class:`QuerySpec`)
+    → ``kernel(shard, blocks, d_ids=None)``: :class:`_ShardContext`
+    decodes the shard's blocks once, then :func:`_score_spec` scores every
+    spec against it — each term decodes once per shard however many
+    queries read it.
 
-    * fast path (one spec, ``cogroup=False``): ``groupBy(shard)`` over
-      posting blocks only — doc-length norms decode from the blocks
-      (Lucene-norms design), metadata filters arrive as zero-scored field
-      terms (``lang=en``), and the (small) tombstone set is a broadcast
-      numpy array.  NOTHING but the query terms' postings moves at query
-      time — the property that keeps p95 flat at 10^12 docs.
-    * cogroup path (one spec, ``cogroup=True``): ships a filtered
-      doc-store id side per shard; needed for range predicates and
-      oversized tombstone sets.
-    * batch (``batch=True``, fast-path specs): one context per shard,
-      then every spec scored against it with WAND off — each term decodes
-      once per shard however many queries read it.  Per-query latency at
-      small corpora is ~95% fixed Spark job overhead (BENCH/BASELINE.md),
-      so one job for the whole query set is the big lever; results equal
-      ``search()``'s since WAND == exhaustive.
+    On the fast path doc-length norms decode from the blocks
+    (Lucene-norms design), metadata filters arrive as zero-scored field
+    terms (``lang=en``) and the (small) tombstone set ``deleted`` is a
+    broadcast numpy array: NOTHING but the query terms' postings is read
+    at query time.  ``d_ids`` — the cogroup path, for range predicates
+    and oversized tombstone sets — are the shard's filtered doc-store ids.
 
-    Each query emits candidate rows ``(doc_id, score)`` (≤ k per shard, or
-    all matches when k is None) plus one sentinel row ``(-1, n_matches)``
-    with the shard's hit count; batch rows carry the spec's index as
-    ``qid``.
+    Each spec yields candidate rows ``(doc_id, score)`` (≤ k, or all
+    matches when k is None) plus one sentinel row ``(-1, n_matches)``
+    with the shard's hit count; ``qid`` is the spec's index.  A batch
+    runs with WAND off (results equal ``search()``'s since WAND ==
+    exhaustive).
 
     ``after``: Solr cursorMark deep paging — ``(score, doc_id)`` of the
     previous page's last hit; only strictly-after candidates are emitted,
@@ -1216,38 +1369,18 @@ def make_search_kernel(specs: list, k: int | None, shard_width: int,
     deleted_sorted = np.sort(deleted) if deleted is not None and len(deleted) \
         else None
 
-    def context(key, blocks, d_ids=None):
-        return _ShardContext(key, blocks, d_ids, specs, shard_width,
-                             deleted_sorted, avgdl_by_field)
-
-    # closures stay unannotated: Spark infers the pandas eval type from
-    # type hints, and partial hints make it warn on every call
-    if batch:
-        def batch_kernel(key, blocks):
-            ctx = context(key, blocks)
-            frames = []
-            for qi, spec in enumerate(specs):
-                rows = _candidate_rows(*_score_spec(ctx, spec, k))
-                frames.append(pd.DataFrame(
-                    {"qid": np.full(len(rows["doc_id"]), qi, dtype=np.int64),
-                     **rows}))
-            return pd.concat(frames, ignore_index=True)
-        return batch_kernel
-
-    (spec,) = specs
-
-    def kernel(key, blocks, docs=None):
-        if docs is not None and len(docs) == 0:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                 "score": pd.Series([], dtype="float64")})
-        ctx = context(key, blocks,
-                      None if docs is None else docs["doc_id"].to_numpy())
-        return pd.DataFrame(_candidate_rows(*_score_spec(
-            ctx, spec, k, wand=wand, after=after, block_acc=block_acc)))
-
-    if cogroup:
-        return kernel
-    return lambda key, blocks: kernel(key, blocks)
+    def kernel(shard, blocks, d_ids=None) -> dict:
+        ctx = _ShardContext(shard, blocks, d_ids, specs, shard_width,
+                            deleted_sorted, avgdl_by_field)
+        outs = [_candidate_rows(*_score_spec(ctx, spec, k, wand=wand,
+                                             after=after,
+                                             block_acc=block_acc))
+                for spec in specs]
+        return {"qid": np.repeat(np.arange(len(outs), dtype=np.int64),
+                                 [len(o["doc_id"]) for o in outs]),
+                "doc_id": np.concatenate([o["doc_id"] for o in outs]),
+                "score": np.concatenate([o["score"] for o in outs])}
+    return kernel
 
 
 # --------------------------------------------------------------- searcher --
@@ -1369,7 +1502,16 @@ class Searcher:
             self.shard_width = compute_shard_width(
                 self.n_docs_total, spark.sparkContext.defaultParallelism)
         self._df_cache: dict[str, int] = {}
-        self._postings = cat.read(spark, "postings")
+        # the kernel wave reads the pinned postings snapshot's files by
+        # bucket (``<data dir>/bucket=N/``) with pyarrow; the Spark frame
+        # serves term_postings
+        post_snap = cat.snapshot("postings")
+        self._postings = cat.read(spark, "postings", post_snap["snapshot_id"])
+        self._postings_files: dict[int, list[str]] = {}
+        for path in cat.data_files(post_snap):
+            part = os.path.basename(os.path.dirname(path))
+            self._postings_files.setdefault(
+                int(part.split("=", 1)[1]), []).append(path)
         # query-term df: a driver point read of the term dictionary's row
         # groups by bucket (term_stats is written sorted by bucket, term);
         # the Spark frame serves the dictionary scans (expansion, suggest)
@@ -1471,83 +1613,18 @@ class Searcher:
                                   for c in node.children), node.m)
         return node
 
-    def _postings_scan(self, all_terms, norm_terms,
-                       needs_universe: bool) -> DataFrame:
-        """Query-term posting blocks (bucket dir pruning + parquet term
-        predicate) unioned with the norms sidecar, shard-routed.
-
-        The norms sidecar spans EVERY doc, so naively shipping it costs
-        O(N/block) rows per query regardless of the terms' selectivity —
-        for rare terms that dominates the kernel stage at 10^12 docs
-        (125k shards × one norms stream each).  Norms are only READ when
-        scoring (BM25 of scored terms, phrase scoring) — zero-scored
-        filter legs and NOT-exclusions never touch them — so a broadcast
-        semi-join prunes norms blocks to the shards holding at least one
-        scoring-term block.  Gated adaptively: the df stats the planner
-        already fetched bound the shards touched (≤ Σdf), so the extra
-        broadcast job is paid ONLY when it removes ≥ half the norms
-        volume; universe queries (complements) always ship all norms."""
-        W = self.shard_width
-        q_buckets = sorted({term_bucket(t, self.n_buckets)
-                            for t in all_terms})
-        shard_col = F.explode(F.expr(
-            f"sequence(first_doc DIV {W}, last_doc DIV {W})")).alias("shard")
-        # one norms sidecar per scored FIELD in play (Lucene per-field
-        # norms): content's classic sidecar, plus e.g. the path sidecar
-        # when a dismax query scores path terms.  The universe (complement
-        # legs) always comes from the content sidecar, which spans every
-        # doc.
-        sidecars = {field_norms_term(term_scored_field(t))
-                    for t in norm_terms}
-        if needs_universe or not sidecars:
-            sidecars.add(NORMS_TERM)
-        n_shards = -(-self.n_docs_total // W)
-        est_docs = sum(self._df_cache.get(t, 0) for t in norm_terms)
-        if (not needs_universe and norm_terms
-                and all(t in self._df_cache for t in norm_terms)
-                and est_docs * 2 < n_shards):
-            # rare-term path: norms blocks pruned to the shards holding a
-            # scoring-term block via a broadcast semi-join — two scans
-            qblocks = (
-                self._postings
-                .filter(F.col("bucket").isin(q_buckets)
-                        & F.col("term").isin(list(all_terms)))
-                .withColumn("shard", shard_col)
-            )
-            nblocks = (
-                self._postings
-                .filter(F.col("bucket").isin(
-                    sorted({term_bucket(t, self.n_buckets)
-                            for t in sidecars}))
-                    & F.col("term").isin(sorted(sidecars)))
-                .withColumn("shard", shard_col)
-            )
-            scoring_blocks = (
-                self._postings
-                .filter(F.col("bucket").isin(
-                    sorted({term_bucket(t, self.n_buckets)
-                            for t in norm_terms}))
-                    & F.col("term").isin(list(norm_terms)))
-                .withColumn("shard", shard_col))
-            nblocks = nblocks.join(
-                F.broadcast(scoring_blocks.select("shard").distinct()),
-                "shard", "left_semi")
-            return qblocks.unionByName(nblocks)
-        # common path: ONE scan with combined bucket/term predicates —
-        # query-term and sidecar key spaces are disjoint ('\x00'/'\x01'
-        # prefixes cannot appear in analyzed or field terms), so the
-        # union of two scans of the same table is a single scan with the
-        # union of their In-filters (round 8: saves a second parquet
-        # reader + listing per query job).  Pure filter/const queries
-        # (nothing scores, no universe) ship no sidecar at all.
-        want = set(all_terms)
-        if norm_terms or needs_universe:
-            want |= sidecars
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in want})
-        return (self._postings
-                .filter(F.col("bucket").isin(buckets)
-                        & F.col("term").isin(sorted(want)))
-                .withColumn("shard", shard_col))
+    def _shard_reader(self, terms, norm_terms, universe: bool,
+                      positions: bool) -> ShardBlockReader:
+        """The ONE posting-block reader of a kernel wave (search, batch,
+        cursor, :meth:`_match_set`, :meth:`explain`) over the postings
+        snapshot pinned at open: the files of the buckets of ``terms``
+        and of their norms sidecars only."""
+        want = set(terms) | _norm_sidecars(norm_terms, universe)
+        return ShardBlockReader(
+            {t: self._postings_files.get(term_bucket(t, self.n_buckets), [])
+             for t in want},
+            self.shard_width, tuple(sorted(terms)), tuple(sorted(norm_terms)),
+            universe, positions)
 
     # -- main entry ----------------------------------------------------------
     def search(self, q, k: int | None = 10, start: int = 0,
@@ -2092,7 +2169,8 @@ class Searcher:
         # path's doc side is the match set of the top-level filters alone.
         cand = self._candidates(
             [spec], start + k, wand=wand and not with_count, after=after,
-            docs_f=self._match_set(Plan(None, [], plan.filters, True)))
+            docs_f=None if spec.fast else self._match_set(
+                Plan(None, [], plan.filters, True), []))
         ((rows, num_found),) = self._merge_fetch(cand, 1, start, k)
         df = local_df(self.spark, rows, self._OUT_SCHEMA)
         return (df, num_found) if with_count else df
@@ -2231,7 +2309,7 @@ class Searcher:
         # terms appearing ONLY under NOT contribute doc-id sets, never
         # scores (And-exclusion and Or-complement legs read ids alone), so
         # they are zero-scored: decode then never touches the norms sidecar
-        # for them, keeping the norms semi-join pruning sound — a shard
+        # for them, keeping the reader's norms pruning sound — a shard
         # whose only blocks belong to a negated term carries no norms rows,
         # and BM25-scoring there would IndexError (round-2 advice)
         zero |= neg - pos - phrase
@@ -2254,38 +2332,66 @@ class Searcher:
                     docs_f: DataFrame | None = None,
                     batch: bool = False) -> DataFrame:
         """One kernel wave over planned queries → per-shard candidate rows
-        (:func:`make_search_kernel`): ONE postings scan over the specs'
-        union term set grouped by shard, cogrouped with the ids of the
-        filtered doc store ``docs_f`` off the fast path."""
+        ``(qid?, doc_id, score)`` (:func:`make_search_kernel`): ONE
+        ``mapInArrow`` stage of ``min(n_shards, shuffle partitions)``
+        tasks, each reading its shards' blocks itself
+        (:class:`ShardBlockReader`) — no postings scan, no shard
+        exchange.  Fast path: task ``i`` of ``spark.range`` owns a
+        contiguous shard range (the last one open-ended, so docs added
+        past ``n_docs`` are covered).  Cogroup path: the ids of the
+        filtered doc store ``docs_f`` are hash-partitioned by shard into
+        the same tasks — the only exchange — and each task scores the
+        shards of the ids it receives."""
+        import pyarrow as pa
+
         W = self.shard_width
         fast = all(s.fast for s in specs)
-        postings = self._postings_scan(
-            sorted(set().union(*(s.all_terms for s in specs))),
-            sorted(set().union(*(s.norm_terms for s in specs))),
-            any(s.needs_universe for s in specs))
+        reader = self._shard_reader(
+            set().union(*(s.all_terms for s in specs)),
+            set().union(*(s.norm_terms for s in specs)),
+            any(s.needs_universe for s in specs),
+            any(s.phrase for s in specs))
         kernel = make_search_kernel(
             specs, fetch, W, self.field_avgdl, wand=wand,
-            deleted=self._deleted_np if fast else None,
-            cogroup=not fast, batch=batch, after=after,
+            deleted=self._deleted_np if fast else None, after=after,
             block_acc=getattr(self, "_wand_acc", None))
+        names = (["qid"] if batch else []) + ["doc_id", "score"]
         schema = ("qid long, " if batch else "") + "doc_id long, score double"
-        # one reduce task per shard: below spark.sql.shuffle.partitions
-        # shards the default count only adds empty kernel tasks
-        n_part = max(1, -(-self.n_docs_total // W))
-        sized = n_part < int(self.spark.conf.get(
-            "spark.sql.shuffle.partitions"))
-        if sized:
-            postings = postings.repartition(n_part, "shard")
+        n_shards = max(1, -(-self.n_docs_total // W))
+        n_tasks = min(n_shards, int(self.spark.conf.get(
+            "spark.sql.shuffle.partitions")))
+
+        def emit(outs):
+            return pa.RecordBatch.from_pydict(
+                {n: np.concatenate([o[n] for o in outs]) for n in names})
+
         if fast:
-            return postings.groupBy("shard").applyInPandas(
-                worker_task(kernel), schema)
-        docs_side = (docs_f.select("doc_id")
-                     .withColumn("shard", F.expr(f"doc_id DIV {W}")))
-        if sized:
-            docs_side = docs_side.repartition(n_part, "shard")
-        return (postings.groupBy("shard")
-                .cogroup(docs_side.groupBy("shard"))
-                .applyInPandas(worker_task(kernel), schema))
+            def wave(batches):
+                for b in batches:
+                    for i in b.column(0).to_numpy():
+                        hi = None if i == n_tasks - 1 else \
+                            (i + 1) * n_shards // n_tasks
+                        outs = [kernel(s, blocks) for s, blocks in
+                                reader.read(i * n_shards // n_tasks, hi)
+                                .items()]
+                        if outs:
+                            yield emit(outs)
+            src = self.spark.range(n_tasks, numPartitions=n_tasks)
+        else:
+            def wave(batches):
+                ids = np.sort(np.concatenate(
+                    [np.empty(0, dtype=np.int64)]
+                    + [b.column(0).to_numpy() for b in batches]))
+                if not len(ids):
+                    return
+                shards, starts = np.unique(ids // W, return_index=True)
+                blocks = reader.read(ids=shards)
+                ends = np.append(starts[1:], len(ids))
+                yield emit([kernel(s, blocks.get(int(s)), ids[a:b])
+                            for s, a, b in zip(shards, starts, ends)])
+            src = (docs_f.select("doc_id")
+                   .repartition(n_tasks, F.expr(f"doc_id DIV {W}")))
+        return src.mapInArrow(worker_task(wave), schema)
 
     def _merge_fetch(self, cand: DataFrame, n_queries: int, start: int,
                      k: int) -> list:
@@ -2404,7 +2510,7 @@ class Searcher:
         from pyspark.sql.types import LongType, StructField, StructType
 
         bucket = term_bucket(term, self.n_buckets)
-        blocks = (self.cat.read(self.spark, "postings")
+        blocks = (self._postings
                   .filter((F.col("bucket") == bucket) & (F.col("term") == term))
                   .select("first_doc", "doc_gaps", "tfs"))
 
@@ -2508,6 +2614,10 @@ class Searcher:
         score.  Labels: content terms bare, field terms ``path:file``;
         phrase rows give the phrase frequency as tf, Σ member idfs as
         idf.  → (term, weight, tf, df, idf, tf_norm, contribution)."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import _parse_datatype_string
+
         plan = plan_query(q)
         if plan.scored_ast is None:
             return local_df(self.spark, [], self._EXPLAIN_SCHEMA)
@@ -2521,22 +2631,28 @@ class Searcher:
                                     False))
         dfs = {t: self._df_cache.get(t, 0) for t in spec.all_terms}
         W, avgdl_of = self.shard_width, self.field_avgdl
+        shard = doc_id // W
+        arrow_schema = to_arrow_schema(
+            _parse_datatype_string(self._EXPLAIN_SCHEMA))
+        # the universe flag reads the content norms, which span every
+        # doc, so the doc's dl is there whatever the query's terms
+        reader = self._shard_reader(spec.all_terms, spec.norm_terms, True,
+                                    bool(spec.phrase))
 
-        def kernel(key, blocks):
+        def wave(batches):
+            for _b in batches:
+                pass
             # the doc is live: no tombstone mask
-            ctx = _ShardContext(key, blocks, None, [spec], W, None, avgdl_of)
-            return pd.DataFrame(_explain_rows(ctx, spec, doc_id, dfs),
-                                columns=["term", "weight", "tf", "df", "idf",
-                                         "tf_norm", "contribution"])
+            ctx = _ShardContext(shard, reader.read(shard, shard + 1)
+                                .get(shard), None, [spec], W, None, avgdl_of)
+            rows = _explain_rows(ctx, spec, doc_id, dfs)
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(arrow_schema.names, r)) for r in rows],
+                schema=arrow_schema)
 
-        # the universe flag ships the content norms, which span every doc
-        # (so the doc's shard always forms a group), and skips the
-        # rare-term norms semi-join and its broadcast job
-        scan = self._postings_scan(spec.all_terms, spec.norm_terms, True)
         with self._no_aqe():
-            rows = (scan.filter(F.col("shard") == doc_id // W)
-                    .groupBy("shard")
-                    .applyInPandas(worker_task(kernel), self._EXPLAIN_SCHEMA)
+            rows = (self.spark.range(1, numPartitions=1)
+                    .mapInArrow(worker_task(wave), self._EXPLAIN_SCHEMA)
                     .collect())
         return local_df(self.spark, rows, self._EXPLAIN_SCHEMA)
 
@@ -2897,7 +3013,7 @@ class Searcher:
         survivor carries that count through the level-2 cut, and level 2
         sums the per-salt counts over the group (again sharing w2's
         shuffle).  The search kernel therefore evaluates ONCE (the plan
-        contains one FlatMapGroupsInPandas — asserted in tests), halving
+        contains one MapInArrow kernel wave — asserted in tests), halving
         query cost vs the old two-branch shape.
         → (group_val, rank, doc_id, score, hits)."""
         return self._group_cut(self._match_set(q, [field]), field, n)
