@@ -6,6 +6,7 @@ import pytest
 
 from zsolr.connection import Results, SolrConnection
 from zsolr.search import Searcher, UnsupportedQuery
+from tests.test_search_oracle import _group_jobs
 
 
 @pytest.fixture(scope="module")
@@ -85,8 +86,8 @@ def test_facet_field_section(conn, searcher):
 
 
 def test_facet_limit_runs_in_engine(conn, searcher):
-    """facet.sort=count + facet.limit execute INSIDE the engine as a
-    TakeOrdered (round-4 verdict #1): faceting on a corpus-cardinality
+    """facet.sort=count + facet.limit execute INSIDE the engine (a
+    row_number() cut per grouping set): faceting on a corpus-cardinality
     field (path — one distinct value per doc) collects exactly
     facet_limit rows ranked (hits desc, value asc), never the full value
     histogram; the facade consumes that ordering without re-sorting."""
@@ -121,9 +122,9 @@ def test_facet_only_request_single_pass(conn, searcher):
 
 
 def test_facet_multi_field_shares_match_set(conn, searcher):
-    """Round-5: N facet fields cost ONE kernel evaluation (facet_fields
-    persists the match set); rankings equal the per-field facet() path
-    exactly, through both the engine and the facade."""
+    """N facet fields cost ONE kernel evaluation (one aggregate over
+    the match set); rankings equal the per-field facet() path exactly,
+    through both the engine and the facade."""
     got = searcher.facet_fields("spark", ["lang", "repo", "path"], limit=4)
     for f in ("lang", "repo", "path"):
         exp = [(r[0], r["hits"]) for r in
@@ -184,6 +185,38 @@ def test_facet_query_section(conn, searcher):
         _df, n = searcher.search(f"spark AND ({fq})", k=1, with_count=True)
         assert res.facets["facet_queries"][fq] == n
     assert "facet_fields" in res.facets
+    # every sub-query rides ONE batch kernel wave: one job for 1 or 3
+    for fqs in (["join"], ["join", "lang:en", "hash"]):
+        searcher.facet_query("spark", fqs)
+        jobs = _group_jobs(searcher.spark, f"zsolr-fq-{len(fqs)}",
+                           lambda: searcher.facet_query("spark", fqs))
+        assert len(jobs) == 1, (fqs, jobs)
+
+
+def test_facet_request_jobs_do_not_grow_with_fields(conn):
+    """numFound and every facet.field come from ONE grouping-sets
+    aggregate, so a facet request runs as many Spark jobs for three
+    fields as for one — fewer than the per-field loop's 7 and 11
+    (rows=10) or 6 and 10 (rows=0) on this index; a grouped request
+    with 2 facet fields and a json.facet with 2 terms entries run
+    fewer than its 14 and 8."""
+    def jobs(name, fn):
+        fn()   # warm: the measured run is the steady-state shape
+        return len(_group_jobs(conn.spark, f"zsolr-facet-{name}", fn))
+
+    for rows in (10, 0):
+        counts = [jobs(f"{rows}-{len(fields)}",
+                       lambda: conn.search("spark", rows=rows,
+                                           facet_field=fields))
+                  for fields in (["lang"], ["lang", "repo", "path"])]
+        assert counts[0] == counts[1], (rows, counts)
+        assert counts[1] < (7 if rows else 6), (rows, counts)
+    assert jobs("grouped", lambda: conn.search(
+        "spark", rows=10, group_field="repo",
+        facet_field=["lang", "repo"])) < 14
+    assert jobs("json", lambda: conn.json_facet("spark", {
+        "a": {"type": "terms", "field": "lang"},
+        "b": {"type": "terms", "field": "repo", "limit": 3}})) < 8
 
 
 def test_cursor_mark_pages_to_exhaustion(conn, searcher):

@@ -76,6 +76,17 @@ def test_facet_missing_survives_mincount_and_prefix(ns):
     assert all(r["path"].startswith("dir1") for r in rows[:-1])
 
 
+def test_facet_missing_zero_row_on_empty_match_set(ns):
+    # no doc matches → Solr still reports missing: 0 (and numFound 0)
+    q = "zzqxnomatchterm"
+    assert ns.facet(q, "lang", missing=True).collect() == [(None, 0)]
+    assert ns.facet(q, "lang", missing=True, limit=5).collect() \
+        == [(None, 0)]
+    assert ns.facet_fields(q, ["lang", "repo"], limit=5, missing=True,
+                           with_hits=True) \
+        == ({"lang": [(None, 0)], "repo": [(None, 0)]}, 0)
+
+
 def test_facade_facet_missing(spark, null_index, ns):
     from zsolr.connection import SolrConnection
 

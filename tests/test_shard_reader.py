@@ -328,3 +328,24 @@ def test_build_manifest_read_runs_no_job(spark, tmp_path):
             exp.setdefault(r["stage"], set()).add(r["partition_id"])
         assert got[0] == exp
     assert got[0] == {} and builder._completed(res.fingerprint)
+
+
+def test_tombstone_overflow_equals_fast_path(spark, many, monkeypatch):
+    """Past MAX_BROADCAST_DELETED the searcher keeps no tombstone array
+    and every query takes the cogroup path over the anti-joined doc
+    store; ranked and fq-range pages, numFound and facet counts equal
+    those of a searcher on the fast path."""
+    cat, _oracle = many
+    fast = Searcher(spark, cat)
+    monkeypatch.setattr(Searcher, "MAX_BROADCAST_DELETED", 0)
+    over = Searcher(spark, cat)
+    assert fast._deleted_np is not None and over._deleted_np is None
+    assert over._n_deleted == fast._n_deleted > 0
+    for q in ("spark", "hash AND join", "commit:[0 TO 8] AND spark"):
+        assert not over._plan_spec(plan_query(q)).fast, q
+        df, n = over.search(q, k=10, with_count=True)
+        edf, en = fast.search(q, k=10, with_count=True)
+        _same(_pairs(df), _pairs(edf), q)
+        assert n == en, q
+        assert over.facet_fields(q, ["lang", "repo"], with_hits=True) \
+            == fast.facet_fields(q, ["lang", "repo"], with_hits=True), q

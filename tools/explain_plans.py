@@ -227,6 +227,24 @@ def main():
         s.facet("[* TO *]", "path", prefix="dir1", limit=5),
         [("prefix pushed", "StringStartsWith(path,dir1)")])
 
+    # 12b. numFound + 3 facet fields: ONE grouping-sets aggregate over
+    # the persisted match set — one Expand, one partial + final
+    # HashAggregate pair, no per-field aggregate (formatted explain
+    # lists each node twice: tree line + detail header)
+    fm = s._match_set("spark", ["lang", "repo", "path"]).persist()
+    ftxt = explain_str(s._facet_frame(
+        fm, [(f, 10, "count", 0) for f in ("lang", "repo", "path")],
+        None, False, True))
+    fm.unpersist()
+    sections.append((
+        "Facet request (3 fields + numFound): one grouping-sets aggregate",
+        [f"{'✅' if ftxt.count('Expand') == 2 else '❌'} exactly one"
+         " Expand",
+         f"{'✅' if ftxt.count('HashAggregate') == 4 else '❌'} exactly"
+         " one aggregate (partial + final HashAggregate)",
+         f"{'✅' if 'InMemoryTableScan' in ftxt else '❌'} reads the"
+         " persisted match set"], ftxt))
+
     # 13. round-6: search_boosted = ONE kernel wave (the exhaustive
     # _match_set) + doc join + TakeOrdered — per-doc recency
     # multipliers defeat static block-max bounds, so the plan must show

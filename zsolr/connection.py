@@ -208,6 +208,8 @@ class SolrConnection:
             ast = And(base + extra)
         fields = ([facet_field] if isinstance(facet_field, str)
                   else list(facet_field)) if facet_field else []
+        fqs_ = ([facet_query] if isinstance(facet_query, str)
+                else list(facet_query)) if facet_query else []
         facets: dict = {}
         next_mark = None
         if group_field is not None:
@@ -240,11 +242,8 @@ class SolrConnection:
                 boost=boost, now=now)
             if fields:
                 facets["facet_fields"] = {
-                    fld: {v: h for v, h in rows_}
-                    for fld, rows_ in ranked.items()}
-            if facet_query:
-                fqs_ = ([facet_query] if isinstance(facet_query, str)
-                        else list(facet_query))
+                    fld: dict(rows_) for fld, rows_ in ranked.items()}
+            if fqs_:
                 facets["facet_queries"] = self._searcher.facet_query(
                     ast, fqs_)
             grows = {fld: gdf.collect() for fld, gdf in gdfs.items()}
@@ -297,16 +296,13 @@ class SolrConnection:
                     facet_limit=facet_limit, facet_mincount=facet_mincount,
                     facet_prefix=facet_prefix, facet_missing=facet_missing)
                 facets["facet_fields"] = {
-                    fld: {v: h for v, h in rows_}
-                    for fld, rows_ in ranked.items()}
+                    fld: dict(rows_) for fld, rows_ in ranked.items()}
             else:
                 df, hits = self._searcher.search_boosted(
                     ast, k=max(rows, 1), start=start, boost=boost,
                     now=now, with_count=True)
             docs = [r.asDict() for r in df.collect()] if rows > 0 else []
-            if facet_query:
-                fqs_ = ([facet_query] if isinstance(facet_query, str)
-                        else list(facet_query))
+            if fqs_:
                 facets["facet_queries"] = self._searcher.facet_query(
                     ast, fqs_)
             docs = _apply_fl(docs, fl)
@@ -326,11 +322,8 @@ class SolrConnection:
                 prefix=facet_prefix, with_hits=True,
                 missing=facet_missing)
             facets["facet_fields"] = {
-                fld: {v: h for v, h in rows_}
-                for fld, rows_ in ranked.items()}
-            if facet_query:
-                fqs_ = ([facet_query] if isinstance(facet_query, str)
-                        else list(facet_query))
+                fld: dict(rows_) for fld, rows_ in ranked.items()}
+            if fqs_:
                 facets["facet_queries"] = self._searcher.facet_query(
                     ast, fqs_)
             res = Results([], hits, facets, {}, nextCursorMark=None)
@@ -363,8 +356,7 @@ class SolrConnection:
                 facet_limit=facet_limit, mincount=facet_mincount,
                 prefix=facet_prefix, missing=facet_missing)
             facets["facet_fields"] = {
-                fld: {v: h for v, h in rows_}
-                for fld, rows_ in ranked.items()}
+                fld: dict(rows_) for fld, rows_ in ranked.items()}
             docs = [r.asDict() for r in df.collect()]
         else:
             k = rows if rows > 0 else 1
@@ -375,24 +367,16 @@ class SolrConnection:
         if fields and "facet_fields" not in facets:
             # (cursorMark requests only — plain ranked requests share
             # the kernel wave above, rows=0 took the facet-only path)
-            # Solr facet.sort=count default (count desc, value asc
-            # tiebreak) + facet.limit run INSIDE the engine as a
-            # TakeOrdered — the facade collects O(facet_limit) rows per
-            # field, never the full value histogram (round-4 verdict #1),
-            # and N facet fields share ONE kernel evaluation of the match
-            # set (facet_fields persists it; round-5).  Dict preserves
-            # rank order for callers iterating the section.
+            # facet.limit is cut inside the engine: O(facet_limit) rows
+            # per field reach the facade, whose dicts keep rank order
             ranked = self._searcher.facet_fields(ast, fields,
                                                  limit=facet_limit,
                                                  mincount=facet_mincount,
                                                  prefix=facet_prefix,
                                                  missing=facet_missing)
-            ff = {fld: {v: h for v, h in rows_}
-                  for fld, rows_ in ranked.items()}
-            facets["facet_fields"] = ff
-        if facet_query:
-            fqs_ = ([facet_query] if isinstance(facet_query, str)
-                    else list(facet_query))
+            facets["facet_fields"] = {
+                fld: dict(rows_) for fld, rows_ in ranked.items()}
+        if fqs_:
             facets["facet_queries"] = self._searcher.facet_query(ast, fqs_)
         highlighting: dict = {}
         if hl:
@@ -505,10 +489,7 @@ class SolrConnection:
             base = tuple(ast.children) if isinstance(ast, And) else (ast,)
             ast = And(base + extra)
         s = self._searcher
-        # ONE evaluation of the match set shared by the count and every
-        # facet entry (round-7 review: this used to re-run the scoring
-        # kernel once for the count plus once per entry — the N+1 shape
-        # the round-5 facet_fields work banned for facet.field)
+        # ONE evaluation of the match set shared by every facet entry
         matched = s._match_set(ast).persist()
         try:
             out = self._json_facet_entries(s, ast, facet, matched, agg_re)
@@ -518,8 +499,23 @@ class SolrConnection:
 
     def _json_facet_entries(self, s, ast, facet: dict, matched,
                             agg_re) -> dict:
-        out: dict = {"count": int(matched.count())}
+        # the count and every plain terms entry's cut: ONE aggregate
+        plain = {name: (spec["field"], int(spec.get("limit", 10)),
+                        spec.get("sort", "count"),
+                        int(spec.get("mincount", 0)))
+                 for name, spec in facet.items()
+                 if spec.get("type", "terms") == "terms" and not any(
+                     isinstance(v, (str, dict))
+                     for v in (spec.get("facet") or {}).values())}
+        count, counts = s._facet_counts(matched, list(plain.values()),
+                                        with_count=True)
+        terms = dict(zip(plain, counts))
+        out: dict = {"count": int(count)}
         for name, spec in facet.items():
+            if name in terms:
+                out[name] = {"buckets": [{"val": v, "count": int(h)}
+                                         for v, h in terms[name]]}
+                continue
             ftype = spec.get("type", "terms")
             fld = spec["field"]
             if ftype == "range":
@@ -576,7 +572,7 @@ class SolrConnection:
                 out[name] = {"buckets": [
                     {"val": b, "count": by_b[b][0],
                      subname: {"buckets": by_b[b][1]}} for b in order]}
-            elif aggs:
+            else:
                 stats = {}
                 for sname, expr in aggs.items():
                     m = agg_re.match(expr.replace(" ", ""))
@@ -591,13 +587,6 @@ class SolrConnection:
                 out[name] = {"buckets": [
                     dict({"val": r[0], "count": int(r["hits"])},
                          **{k: r[k] for k in stats}) for r in rows_]}
-            else:
-                rows_ = s.facet(ast, fld, limit=limit, sort=sort,
-                                mincount=mincount,
-                                matched=matched).collect()
-                out[name] = {"buckets": [
-                    {"val": r[0], "count": int(r["hits"])}
-                    for r in rows_]}
         return out
 
     def more_like_this(self, doc_id: int, rows: int = 10,

@@ -1401,6 +1401,10 @@ class Searcher:
     # executor-side merge (TakeOrdered / per-qid window cut) runs first,
     # so the driver only ever collects O(start+k) rows per query.
     COLLECT_CAP = 2_000_000
+    # tombstones (pre-compaction deletes, by the files' footer row total):
+    # up to this many are broadcast into the fast kernel as a numpy array;
+    # past it queries take the cogroup path (and compact() is overdue).
+    MAX_BROADCAST_DELETED = 2_000_000
 
     def _doc_meta(self, ids) -> dict:
         """doc_id → ``(doc_id, repo, path, commit)`` Row for the ids of
@@ -1457,11 +1461,6 @@ class Searcher:
         self._stored = RowGroupPointReader(
             cat.data_files(docs_snap), "doc_id",
             ["doc_id", "repo", "path", "commit"])
-        # tombstones: a live-docs-style exclusion set.  Small (pre-compaction
-        # deltas, by the files' footer row total) → read on the driver and
-        # broadcast into the fast kernel as a numpy array; past the cap we
-        # fall back to the cogroup path (and compact() is overdue).
-        MAX_BROADCAST_DELETED = 2_000_000
         if cat.exists("tombstones"):
             tomb_snap = cat.snapshot("tombstones")
             tomb = (cat.read(spark, "tombstones", tomb_snap["snapshot_id"])
@@ -1469,7 +1468,7 @@ class Searcher:
             self.docs = self.docs.join(tomb, "doc_id", "left_anti")
             files = cat.data_files(tomb_snap)
             if sum(pq.read_metadata(f).num_rows
-                   for f in files) <= MAX_BROADCAST_DELETED:
+                   for f in files) <= self.MAX_BROADCAST_DELETED:
                 self._deleted_np = np.unique(np.concatenate(
                     [np.empty(0, dtype=np.int64)]
                     + [pq.read_table(f, columns=["doc_id"])["doc_id"]
@@ -2195,14 +2194,14 @@ class Searcher:
         ``boost``: ``(field, multiplier Column)`` scaling the score
         (:meth:`_boost_mult`).  ``facets``: ``(fields, limit, sort,
         mincount, prefix, missing)`` aggregated over the same match set
-        (:meth:`_facet_agg`).
+        (:meth:`_facet_counts`, which also counts numFound).
 
         Count rule: a pure doc-store scan (:attr:`Plan.scan_only`) stays
-        an uncached, pushed-down scan counted with ``count()``; a
-        kernel-backed match set persists only when numFound or facets
-        are asked for — the count, the page and the facets then read
-        the persisted set, which is unpersisted after.  Without either,
-        a page costs one TakeOrdered job.
+        an uncached, pushed-down scan; a kernel-backed match set persists
+        only when numFound or facets are asked for — the page and the
+        count (or the facet aggregate) then read the persisted set,
+        which is unpersisted after.  Without either, a page costs one
+        TakeOrdered job.
 
         → ``(page_df, num_found, {field: [(value, hits), …]})``;
         ``k=None`` gives the lazy, unbounded ordered frame as the page."""
@@ -2242,13 +2241,16 @@ class Searcher:
             if k is None:
                 return (ordered, matched.count() if with_count else None,
                         {})
-            num_found = matched.count() if with_count else None
             sel = ordered.limit(start + k)
             rows = sel.collect()[start:]
-            ranked: dict = {}
-            for f in fields:
-                agg = self._facet_agg(matched, f, *facets[1:])
-                ranked[f] = [(r[0], r["hits"]) for r in agg.collect()]
+            if fields:
+                num_found, counts = self._facet_counts(
+                    matched, [(f, *facets[1:4]) for f in fields],
+                    *facets[4:], with_count=with_count)
+                ranked = dict(zip(fields, counts))
+            else:
+                num_found = matched.count() if with_count else None
+                ranked = {}
         finally:
             if share:
                 matched.unpersist()
@@ -3080,8 +3082,9 @@ class Searcher:
         the ≤ rows head values (null-safe: the NULL group is real).
         The driver receives O(rows · n) group rows per field — never
         O(#groups) — plus O(facet_limit) facet rows per facet field.
-        ``matches`` and every ``ngroups`` ride ONE tiny aggregation over
-        the cached match set (count + per-field distinct-with-null).
+        ``matches`` and every facet field ride ONE aggregate over the
+        cached match set (:meth:`_facet_counts`); ``ngroups`` (per-field
+        distinct-with-null) runs a second one only when asked for.
 
         → (groups: {field: driver-local DataFrame of
         (group_val, rank, doc_id, score, hits)},
@@ -3103,20 +3106,18 @@ class Searcher:
             j = j.withColumn("score", F.col("score") * mult)
         j = j.persist()
         try:
-            aggs = [F.count(F.lit(1)).alias("_m")]
+            matches, counts = self._facet_counts(
+                j, [(f, facet_limit, facet_sort, facet_mincount)
+                    for f in ffields], facet_prefix, facet_missing,
+                with_count=True)
+            ng = None
             if ngroups:
                 # distinct values + 1 if a NULL group exists (Solr's
                 # ngroups counts the null group; countDistinct skips it)
-                for i, f in enumerate(gfields):
-                    aggs.append(F.coalesce(
-                        F.countDistinct(F.col(f))
-                        + F.max(F.when(F.col(f).isNull(), F.lit(1))
-                                .otherwise(F.lit(0))),
-                        F.lit(0)).alias(f"_g{i}"))
-            meta = j.agg(*aggs).collect()[0]
-            matches = int(meta["_m"])
-            ng = ({f: int(meta[f"_g{i}"]) for i, f in enumerate(gfields)}
-                  if ngroups else None)
+                meta = j.agg(*[(F.countDistinct(F.col(f)) + (F.count_if(
+                    F.col(f).isNull()) > 0).cast("int")).alias(f"_g{i}")
+                    for i, f in enumerate(gfields)]).collect()[0]
+                ng = {f: int(meta[f"_g{i}"]) for i, f in enumerate(gfields)}
             out = {}
             for f in gfields:
                 cut = self._group_cut(j, f, n)
@@ -3138,13 +3139,7 @@ class Searcher:
                                       cut.schema)
                 finally:
                     cut.unpersist()
-            facets = {}
-            for f in ffields:
-                agg = self._facet_agg(j, f, facet_limit, facet_sort,
-                                      facet_mincount, facet_prefix,
-                                      facet_missing)
-                facets[f] = [(r[0], r["hits"]) for r in agg.collect()]
-            return out, matches, ng, facets
+            return out, matches, ng, dict(zip(ffields, counts))
         finally:
             j.unpersist()
 
@@ -3255,7 +3250,7 @@ class Searcher:
         """Solr ``facet.query``: exact hit count of each subquery
         intersected with the main query — ALL subqueries in one batch
         kernel wave (the batch kernel decodes fully, so counts are exact
-        and N facet queries cost 2 jobs, not 2N)."""
+        and N facet queries cost 1 job, not N)."""
         main = parse(q) if isinstance(q, str) else q
         combined = []
         for fq in facet_queries:
@@ -3280,120 +3275,138 @@ class Searcher:
 
     # -- Q11 facets -----------------------------------------------------------
     @staticmethod
-    def _facet_agg(src: DataFrame, field: str, limit: int | None,
-                   sort: str, mincount: int, prefix: str | None,
-                   missing: bool) -> DataFrame:
-        """The shared per-field facet aggregation over a match set:
-        prefix-pruned input → hash agg → mincount filter → engine-side
-        TakeOrdered under ``facet.sort`` semantics.  ``missing=True``
-        (Solr ``facet.missing``) appends ONE row counting match-set docs
-        with a NULL field value (value = NULL), computed in the same
-        lineage — the null group of the aggregation — so it costs no
-        extra pass; Solr renders it after the ranked values, and the
-        null-valued row is unambiguous to callers."""
-        base = src if missing else src.filter(F.col(field).isNotNull())
-        if prefix is not None:
-            # Solr facet.prefix: value filter BEFORE the aggregation —
-            # prunes the agg input, and for match-all facets pushes the
-            # StartsWith straight into the parquet scan.  The missing
-            # row ignores prefix (Solr: facet.missing counts all
-            # unfielded docs regardless of prefix).
-            keep = F.col(field).startswith(prefix)
-            if missing:
-                keep = keep | F.col(field).isNull()
-            base = base.filter(keep)
-        out = base.groupBy(field).agg(F.count(F.lit(1)).alias("hits"))
-        if missing:
-            # guarantee the NULL row exists even with zero unfielded
-            # docs (Solr reports missing: 0): seed a (NULL, 0) row and
-            # re-aggregate — the histogram is already tiny post-agg
-            ftype = dict(src.dtypes)[field]
-            seed = (src.sparkSession.range(1)
-                    .select(F.lit(None).cast(ftype).alias(field),
-                            F.lit(0).cast("long").alias("hits")))
-            out = (out.unionByName(seed).groupBy(field)
-                   .agg(F.sum("hits").alias("hits")))
-        if mincount > 1:
-            keep = F.col("hits") >= mincount
-            if missing:
-                keep = keep | F.col(field).isNull()
-            out = out.filter(keep)
-        if limit is not None:
-            if sort == "count":
-                keys = [F.desc("hits"), F.asc(field)]
-            elif sort == "index":
-                keys = [F.asc(field)]
-            else:
+    def _facet_frame(matched: DataFrame, cuts: list, prefix: str | None,
+                     missing: bool, with_count: bool) -> DataFrame:
+        """ONE ``groupingSets`` aggregate over the match set for every
+        ``(field, limit, sort, mincount)`` cut.  → rows ``(_k0…, hits,
+        cut[, _m0…][, rn])``; ``cut`` is i for cut i's values and n for
+        the ``()`` row (numFound; ``_m{i}``: docs without field i).
+        ``prefix`` filters the input only for one cut without ``()`` (so
+        it reaches a match-all scan).  The literal ``rn`` bound, when
+        every cut has a limit, lets Spark cut partitions before the
+        window's exchange."""
+        from functools import reduce
+
+        from pyspark.sql import Window as _W
+
+        for _f, _lim, sort, _mc in cuts:
+            if sort not in ("count", "index"):
                 raise UnsupportedQuery(f"facet.sort={sort!r} (count|index)")
-            if missing:
-                # NULL row last (Solr renders missing after the values),
-                # outside the limit budget
-                nn = (out.filter(F.col(field).isNotNull())
-                      .orderBy(*keys).limit(limit))
-                out = nn.unionByName(out.filter(F.col(field).isNull()))
+        n = len(cuts)
+        keys = [f"_k{i}" for i in range(n)]
+        if prefix is not None and n == 1 and not with_count:
+            keep = F.col(cuts[0][0]).startswith(prefix)
+            matched = matched.filter(
+                keep | F.col(cuts[0][0]).isNull() if missing else keep)
+            prefix = None
+        src = matched.select(*[F.col(c[0]).alias(k)
+                               for c, k in zip(cuts, keys)])
+        real = F.lit(True)
+        if missing:
+            # a seed row keeps the () row: the lazy facet() frame says
+            # missing: 0 on an empty match set (numFound: the driver)
+            src = src.unionByName(matched.sparkSession.range(0, 1, 1, 1)
+                                  .select(F.lit(True).alias("_seed")),
+                                  allowMissingColumns=True)
+            real = F.col("_seed").isNull()
+        # grouping_id() sets bit n-1-i when _k{i} is left out: set [_k{i}]
+        # clears only that bit, the () set none → cut i, cut n
+        full = (1 << n) - 1
+        gids = [F.lit(full ^ 1 << (n - 1 - i)) for i in range(n)]
+        cut_of = F.array_position(F.array(*gids, F.lit(full)),
+                                  F.grouping_id()) - 1
+        aggs = [F.count_if(real).alias("hits"),
+                cut_of.cast("int").alias("cut")]
+        if missing:
+            aggs += [F.count_if(real & F.col(k).isNull()).alias(f"_m{i}")
+                     for i, k in enumerate(keys)]
+        agg = (src.groupingSets([[k] for k in keys]
+                                + ([[]] if with_count or missing else []),
+                                *keys)
+               .agg(*aggs))
+        cut, rn = F.col("cut"), F.col("rn")
+
+        def per_cut(vals):   # vals[cut]; NULL on the () row
+            return F.try_element_at(F.array(*vals), cut + 1)
+
+        if n:
+            keep = reduce(lambda x, y: x | y,
+                          [F.col(k).isNotNull() for k in keys])
+            if any(c[3] > 1 for c in cuts):
+                keep &= F.col("hits") >= per_cut([F.lit(c[3]) for c in cuts])
+            if prefix is not None:
+                keep &= reduce(lambda x, y: x | y,
+                               [F.col(k).startswith(prefix) for k in keys])
+            agg = agg.filter((cut == n) | keep)
+        limits = [c[1] for c in cuts if c[1] is not None]
+        if limits:
+            w = _W.partitionBy("cut").orderBy(per_cut(
+                [F.col("hits") if c[2] == "count" else F.lit(None)
+                 for c in cuts]).desc(), *keys)
+            cap = per_cut([F.lit(c[1]) for c in cuts])
+            keep = cap.isNull() | (rn <= cap)
+            if len(limits) == n:   # the () row has rn 1
+                keep = (rn <= max(1, *limits)) & keep
+            agg = agg.withColumn("rn", F.row_number().over(w)).filter(keep)
+        return agg
+
+    @classmethod
+    def _facet_counts(cls, matched: DataFrame, cuts: list,
+                      prefix: str | None = None, missing: bool = False,
+                      with_count: bool = False):
+        """ONE collect of :meth:`_facet_frame`.  → ``(numFound or None,
+        [[(value, hits), …] per cut])`` in rank order, each list ending
+        in ``(None, missing count)`` with ``missing``."""
+        n = len(cuts)
+        agg = cls._facet_frame(matched, cuts, prefix, missing, with_count)
+        rows = agg.collect()
+        if "rn" in agg.columns:
+            rows.sort(key=lambda r: r["rn"])
+        out: list = [[] for _c in cuts]
+        total = None   # an empty match set has no () row unless seeded
+        for r in rows:
+            if r["cut"] == n:
+                total = r
             else:
-                out = out.orderBy(*keys).limit(limit)
-        return out
+                out[r["cut"]].append((r[f"_k{r['cut']}"], r["hits"]))
+        if missing:
+            for i, vals in enumerate(out):
+                vals.append((None, total[f"_m{i}"]))
+        return ((total["hits"] if total else 0) if with_count
+                else None), out
 
     def facet(self, q, field: str, limit: int | None = None,
               sort: str = "count", mincount: int = 0,
               prefix: str | None = None,
-              missing: bool = False,
-              matched: DataFrame | None = None) -> DataFrame:
-        """Per-field value → hit count over the full match set.
-
-        ``limit``/``sort`` are Solr's ``facet.limit``/``facet.sort``
-        PUSHED INTO THE ENGINE (round-4 verdict #1): with a limit the
-        plan ends in ``orderBy(hits desc, value asc).limit(n)`` — a
-        TakeOrdered whose driver-side result is O(limit) rows however
-        many distinct values the field has.  Collecting the full value
-        histogram to sort client-side would ship millions of rows for a
-        corpus-cardinality field (``repo`` at 10^9+ docs) — exactly the
-        unbounded driver collect the design bans.  ``sort='count'`` is
-        Solr's default (count desc, value asc tiebreak); ``'index'``
-        orders by value.  ``limit=None`` returns the full histogram
-        unordered (the aggregation output, for oracle comparison).
-        ``missing=True`` (Solr ``facet.missing``) appends one NULL-valued
-        row counting match-set docs without the field — always present
-        (0 when every doc has a value), rendered after the ranked
-        values, outside the limit budget (round-6)."""
-        src = matched if matched is not None \
-            else self._match_set(q, [field])
-        return self._facet_agg(src, field, limit, sort, mincount, prefix,
-                               missing)
+              missing: bool = False) -> DataFrame:
+        """Lazy ``(field, hits)`` facet over the match set (one cut of
+        :meth:`_facet_frame`); ``limit=None`` is the full histogram,
+        unordered.  ``missing=True`` adds one NULL-valued row (0 when no
+        doc lacks the field), after the ranked values."""
+        agg = self._facet_frame(self._match_set(q, [field]),
+                                [(field, limit, sort, mincount)], prefix,
+                                missing, False)
+        if limit is not None:   # ranked values (cut 0), then the () row
+            agg = agg.coalesce(1).sortWithinPartitions("cut", "rn")
+        hits = F.col("hits")
+        if missing:
+            hits = F.when(F.col("cut") == 1, F.col("_m0")).otherwise(hits)
+        return agg.select(F.col("_k0").alias(field), hits.alias("hits"))
 
     def facet_fields(self, q, fields: list, limit: int | None = None,
                      sort: str = "count", mincount: int = 0,
                      prefix: str | None = None, with_hits: bool = False,
                      missing: bool = False):
-        """Multi-field facets over ONE evaluation of the match set
-        (round-5): ``facet.field=a&facet.field=b`` used to re-run the
-        whole search kernel once per field through the facade's loop —
-        here the matched doc set persists across the per-field
-        aggregations, so N fields cost one kernel wave plus N tiny
-        TakeOrdered aggs over the cached match set.  Ordering/limit
-        semantics are :meth:`facet`'s.  → {field: [(value, hits), …]}
-        in rank order, O(limit) rows per field on the driver."""
-        plan = plan_query(q)
-        matched = self._match_set(plan, fields)
-        # a pure doc-store scan stays uncached (its pushed-down filters
-        # and facet.prefix reach the parquet scan); a kernel-backed match
-        # set persists across the per-field aggregations
-        cached = None if plan.scan_only else matched.persist()
-        try:
-            # numFound from the SAME (persisted) match set the facets
-            # aggregate — a facet-only request (rows=0) then costs one
-            # kernel evaluation, not a search() + a facet pass
-            hits = matched.count() if with_hits else None
-            out: dict = {}
-            for f in fields:
-                agg = self._facet_agg(matched, f, limit, sort, mincount,
-                                      prefix, missing)
-                out[f] = [(r[0], r["hits"]) for r in agg.collect()]
-            return (out, hits) if with_hits else out
-        finally:
-            if cached is not None:
-                cached.unpersist()
+        """Multi-field facets and, with ``with_hits``, numFound from ONE
+        aggregate (:meth:`_facet_counts`) over one evaluation of the
+        match set.  → {field: [(value, hits), …]} in rank order (and
+        numFound with ``with_hits``)."""
+        hits, counts = self._facet_counts(
+            self._match_set(q, fields),
+            [(f, limit, sort, mincount) for f in fields], prefix, missing,
+            with_hits)
+        out = dict(zip(fields, counts))
+        return (out, hits) if with_hits else out
 
     def search_with_facets(self, q, fields: list, k: int = 10,
                            start: int = 0, sort: str | None = None,
@@ -3402,14 +3415,11 @@ class Searcher:
                            prefix: str | None = None,
                            missing: bool = False):
         """Ranked page + field facets + numFound from ONE evaluation of
-        the match set (round-6): Solr's commonest request shape
-        (``q`` + ``facet.field`` + rows>0) used to cost two kernel
-        waves — the counted top-k page and ``facet_fields``' match set.
-        Solr computes facets from the same match set as the page, and
-        the counted page already forces a FULL (non-WAND) decode, so
-        nothing is lost by sharing: the scored match set persists once;
-        the page is :meth:`_page`'s TakeOrdered over it, numFound a
-        count, and every facet field a tiny agg over the cached set.
+        the match set (Solr's ``q`` + ``facet.field`` + rows>0): the
+        counted page already forces a full (non-WAND) decode, so the
+        scored match set persists once; the page is :meth:`_page`'s
+        TakeOrdered over it, and numFound plus every facet field ONE
+        aggregate over the cached set (:meth:`_facet_counts`).
         → (page_df, num_found, {field: [(value, hits), …]}) with the
         page bit-identical to ``search(..., with_count=True)`` and the
         facet rankings bit-identical to ``facet_fields``."""
